@@ -267,3 +267,99 @@ def test_store_recommend_best_score_and_guards(store):
     hits = store.search("lib-cos", [1.0, 0.0, 0.0], k=10).collect()
     want = [(r["chunk_id"], r["distance"]) for r in hits if r["chunk_id"] != "ch-1"]
     assert [(r["chunk_id"], r["reco_distance"]) for r in reco] == want
+
+
+def test_library_catalog_tracks_library_crud(spark):
+    """The driver-side library catalog that the guards read must equal the
+    libraries table after every library mutation; create/update/delete
+    derive it on the driver, and a deleted id is gone from it."""
+    s0 = demo_store(spark)
+    s1 = s0.create_library(
+        dict(library_id="lib-new", name="new", description=None, metadata={},
+             embedding_dimension=3, distance_metric="cosine", index_kind="flat")
+    )
+    s2 = s1.update_library("lib-new", {"name": "renamed"})
+    s3 = s2.delete_library("lib-cos")
+    for st in (s0, s1, s2, s3):
+        table = {r["library_id"]: r.asDict() for r in st.libraries.collect()}
+        assert set(st._libraries()) == set(table)
+        for library_id, row in table.items():
+            assert st._library(library_id) == row
+    assert s2._library("lib-new")["name"] == "renamed"
+    with pytest.raises(NotFoundError):
+        s3._library("lib-cos")
+    # chunk/document mutations keep the libraries table, so they share it
+    assert s0.delete_chunk("ch-1").catalog is s0.catalog
+
+
+def test_entity_calls_eager_job_counts(spark):
+    """Eager Spark work each call runs before it returns, counted under a
+    job group. AQE is off so that one action is one job: demo_store's
+    tables have no size statistics, so every join plans as a sort-merge
+    join inside that job (AQE would add a job per query stage). Building
+    a flat or filtered search runs no job, an LSH search only its <k
+    fallback count, add_chunks one lookup and update_chunk one lookup."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"entity-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    store = demo_store(spark)
+    assert jobs(lambda: store._library("lib-cos")) == 1  # the catalog, once
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        q = [1.0, 0.0, 0.0]
+        assert jobs(lambda: store.search("lib-cos", q, k=3)) == 0
+        assert jobs(lambda: store.search("lib-cos", q, k=3,
+                                         metadata_filters={"tag": "alpha"})) == 0
+        assert jobs(lambda: store.search("lib-lsh", [1.0, 0.0, 1.0], k=1)) == 1
+        row = dict(chunk_id="new-jobs", document_id="doc-a", text="t",
+                   embedding=[1.0, 0.0, 0.0], metadata={}, chunk_index=9)
+        assert jobs(lambda: store.add_chunks([row])) == 1
+        assert jobs(lambda: store.update_chunk("ch-2", {"embedding": [0.9, 0.1, 0.0]})) == 1
+        derived = store.create_library(
+            dict(library_id="lib-jobs", name="j", embedding_dimension=3,
+                 distance_metric="cosine", index_kind="flat")
+        )
+        assert jobs(lambda: derived._library("lib-jobs")) == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_write_guards_raise_in_order_after_one_lookup(store):
+    """add_chunks and update_chunk answer their lookups in one job, then
+    raise in the order the separate guards did: NotFound, then
+    DimensionMismatch, then Duplicate."""
+    def rows(doc, dim, cid="ch-1"):
+        return [dict(chunk_id=cid, document_id=doc, text="t",
+                     embedding=[1.0] * dim, metadata={}, chunk_index=0)]
+
+    with pytest.raises(NotFoundError, match="document doc-missing not found"):
+        store.add_chunks(rows("doc-missing", 2))
+    with pytest.raises(DimensionMismatchError):
+        store.add_chunks(rows("doc-a", 2))
+    with pytest.raises(DuplicateError, match=r"chunks exist: \['ch-1'\]"):
+        store.add_chunks(rows("doc-a", 3))
+    with pytest.raises(NotFoundError, match="chunk ch-missing not found"):
+        store.update_chunk("ch-missing", {"chunk_id": "x"})
+    with pytest.raises(DimensionMismatchError):
+        store.update_chunk("ch-1", {"embedding": [1.0]})
+    # an orphan chunk (its document deleted) cannot be re-embedded
+    from vector_db_from_scratch_spark.operators.entity import EntityStore
+
+    orphaned = EntityStore(
+        libraries=store.libraries,
+        documents=store.documents.filter("document_id != 'doc-a'"),
+        chunks=store.chunks,
+    )
+    with pytest.raises(NotFoundError, match="document doc-a not found"):
+        orphaned.update_chunk("ch-1", {"embedding": [1.0, 0.0, 0.0]})

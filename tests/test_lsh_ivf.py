@@ -214,6 +214,63 @@ def test_build_index_fast_equals_expression(spark, sf_dir):
     assert fast == expr
 
 
+def test_bucket_kernel_equals_expression_on_entity_stores(spark, sf_dir):
+    """The NumPy kernel that the index build and the entity store's
+    random_projection search share must give bucket_expr's bucket under
+    every library configuration the store dispatches on: demo_store's
+    lib-lsh (8 bits, dimension 3), lib-lsh-seeded (4 projections, seed
+    123), and the 64-d driver-table store. A NULL embedding gets the
+    expression's bucket (0), and an empty batch yields no buckets."""
+    import numpy as np
+
+    from vector_db_from_scratch_spark.operators.entity import (
+        demo_store,
+        library_projections,
+        store_from_driver_tables,
+    )
+    from vector_db_from_scratch_spark.operators.lsh import (
+        _buckets,
+        bucket_expr,
+        bucket_kernel,
+    )
+
+    def both(store, lib_id):
+        proj = library_projections(store._library(lib_id))
+        null = spark.createDataFrame(
+            [("ch-null", None)], store.chunks.select("chunk_id", "embedding").schema
+        )
+        chunks = (
+            store.chunks.join(
+                store.documents.filter(F.col("library_id") == lib_id),
+                "document_id",
+                "left_semi",
+            )
+            .select("chunk_id", "embedding")
+            .unionByName(null)
+        )
+        kern = {r["chunk_id"]: r["bucket"] for r in bucket_kernel(chunks, proj).collect()}
+        expr = {
+            r["chunk_id"]: r["bucket"]
+            for r in chunks.select(
+                "chunk_id", bucket_expr(F.col("embedding"), proj).alias("bucket")
+            ).collect()
+        }
+        return kern, expr, len(proj)
+
+    demo = demo_store(spark)
+    driver = store_from_driver_tables(spark, sf_dir, "random_projection")
+    for store, lib_id in ((demo, "lib-lsh"), (demo, "lib-lsh-seeded"), (driver, "src0")):
+        kern, expr, bits = both(store, lib_id)
+        assert kern == expr, lib_id
+        assert kern["ch-null"] == 0 and len(kern) > 2
+        assert all(0 <= b < 1 << bits for b in kern.values())
+
+    proj = np.asarray(library_projections(demo._library("lib-lsh")))
+    assert _buckets(np.array([], dtype=object), proj).tolist() == []
+    empty = demo.chunks.select("chunk_id", "embedding").filter(F.lit(False))
+    assert bucket_kernel(empty).collect() == []
+
+
 def test_ann_recall_quantified(spark, sf_dir):
     """Quantified recall@10 of the approximate paths vs the exact scan.
 

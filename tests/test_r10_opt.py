@@ -103,3 +103,22 @@ def test_minhash_pair_memo_is_stable_across_calls(spark, sf_dir):
     a = sorted(map(tuple, dedup.minhash_lsh_pairs(spark, sf_dir).collect()))
     b = sorted(map(tuple, dedup.minhash_lsh_pairs(spark, sf_dir).collect()))
     assert a == b
+
+
+def test_evhash_shard_guard_fails_on_drift_and_on_missing(spark, monkeypatch):
+    """The hashed-events frame bakes the shard column, so its guard must
+    refuse a consumer whose N_SHARDS differs AND one that dropped it. The
+    guard runs before any table is read, so a directory that was never
+    built keeps the memo from answering."""
+    import pytest
+
+    from vector_db_from_scratch_spark.operators import _evhash, kmv
+
+    with monkeypatch.context() as m:
+        m.setattr(kmv, "N_SHARDS", _evhash.N_SHARDS + 1)
+        with pytest.raises(AssertionError, match=r"kmv\.N_SHARDS is 5"):
+            _evhash.events_hashed(spark, "/nonexistent/evhash-guard-drift")
+    with monkeypatch.context() as m:
+        m.delattr(kmv, "N_SHARDS")
+        with pytest.raises(AssertionError, match=r"kmv\.N_SHARDS is missing"):
+            _evhash.events_hashed(spark, "/nonexistent/evhash-guard-missing")

@@ -10,10 +10,14 @@ Reference parity (semantics only, see SURVEY.md §2.7):
   - metric dispatch by name                 (vector_db/indexes.py:99-106)
 
 Design: everything here is a Column expression over ``array<float>`` built
-from ``zip_with``/``aggregate`` -- it stays JVM-side inside whole-stage
-codegen (no Python UDF in the hot path) and is expressible 1:1 in the DuckDB
-oracle SQL. Inputs are cast to ``array<double>`` so both engines accumulate
-in float64 and hash-match after rounding.
+from ``zip_with``/``aggregate`` -- it stays JVM-side (no Python UDF in the
+hot path) and is expressible 1:1 in the DuckDB oracle SQL. ``ZipWith`` and
+``ArrayAggregate`` are ``CodegenFallback`` expressions in Spark 4.1, so
+inside a whole-stage-codegen stage they are interpreted per row, lambda by
+lambda; the Arrow/NumPy ``mapInPandas`` kernels (``knn.flat_knn_fast``,
+``lsh.bucket_kernel``) are the vectorized alternative. Inputs are cast to
+``array<double>`` so both engines accumulate in float64 and hash-match
+after rounding.
 
 All distances are computed in double and, when ``round_to`` is given,
 rounded half-up and normalized (+0.0) so Spark and DuckDB produce

@@ -45,17 +45,20 @@ def events_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash60(user_id), ``bi`` = the i-th count-min bucket of user_id."""
     key = (spark.sparkContext.applicationId, sf_dir, "events_hashed")
     if key not in _MEMO:
-        # the frame BAKES the shard column, so a drifted module-level
-        # N_SHARDS in any consumer family would silently corrupt that
-        # family's merge demonstrators (ADVICE r10) -- fail loudly instead
+        # the frame BAKES the shard column, so a drifted or dropped
+        # module-level N_SHARDS in any consumer family would silently
+        # corrupt that family's merge demonstrators (ADVICE r10) -- fail
+        # loudly instead
         from . import ams, hll, kmv
         from . import countmin as cm
 
         for mod in (ams, cm, kmv, hll):
-            if getattr(mod, "N_SHARDS", N_SHARDS) != N_SHARDS:
+            got = getattr(mod, "N_SHARDS", None)
+            if got != N_SHARDS:
                 raise AssertionError(
-                    f"{mod.__name__}.N_SHARDS != _evhash.N_SHARDS ({N_SHARDS}); "
-                    "the shared hashed-events frame bakes the shard column"
+                    f"{mod.__name__}.N_SHARDS is "
+                    f"{'missing' if got is None else got}, not _evhash.N_SHARDS "
+                    f"({N_SHARDS}); the shared hashed-events frame bakes the shard column"
                 )
         uid = F.col("user_id")
         _MEMO[key] = (

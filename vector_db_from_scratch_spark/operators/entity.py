@@ -20,14 +20,18 @@ Reference parity (SURVEY.md §1, §2.8):
 HOW diverges by design: every mutation is a DataFrame transformation
 returning a NEW store (append / MERGE overwrite / anti-join delete), not an
 in-place dict mutation under a lock; at scale each table is a parquet/Delta
-table and these transformations are the batch jobs that rewrite them.
+table and these transformations are the batch jobs that rewrite them. The
+one piece of driver state is the library catalog (the reference's
+``Dict[UUID, Library]``): the small libraries table, collected once and
+shared by every store derived with the same ``libraries`` DataFrame, so the
+guards of search and CRUD read it without a Spark job.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass, field, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,19 +68,44 @@ class BatchTooLargeError(EntityError):
     pass
 
 
+class _Catalog:
+    """``library_id`` -> row dict of one ``libraries`` DataFrame, collected
+    on first use (``rows is None`` until then)."""
+
+    __slots__ = ("libraries", "rows")
+
+    def __init__(self, libraries: DataFrame, rows: dict[str, dict] | None = None):
+        self.libraries = libraries
+        self.rows = rows
+
+
 @dataclass(frozen=True)
 class EntityStore:
     libraries: DataFrame
     documents: DataFrame
     chunks: DataFrame
+    # shared by every store ``replace()`` derives with the same libraries
+    # DataFrame; the library mutations pass the catalog they derive
+    catalog: _Catalog | None = field(default=None, repr=False, compare=False)
 
-    # -- lookups / guards (F5: cardinality checks instead of dict hits) ----
+    def __post_init__(self):
+        if self.catalog is None or self.catalog.libraries is not self.libraries:
+            object.__setattr__(self, "catalog", _Catalog(self.libraries))
+
+    # -- lookups / guards (F5: a catalog hit for libraries, cardinality --
+    # -- checks for documents and chunks) ----------------------------------
+
+    def _libraries(self) -> dict[str, dict]:
+        cat = self.catalog
+        if cat.rows is None:
+            cat.rows = {r["library_id"]: r.asDict() for r in self.libraries.collect()}
+        return cat.rows
 
     def _library(self, library_id: str) -> dict:
-        rows = self.libraries.filter(F.col("library_id") == library_id).collect()
-        if not rows:
+        row = self._libraries().get(library_id)
+        if row is None:
             raise NotFoundError(f"library {library_id} not found")
-        return rows[0].asDict()
+        return dict(row)
 
     def _document(self, document_id: str) -> dict:
         rows = self.documents.filter(F.col("document_id") == document_id).collect()
@@ -87,7 +116,8 @@ class EntityStore:
     # -- library CRUD (D1-D3) ----------------------------------------------
 
     def create_library(self, row: dict) -> "EntityStore":
-        if self.libraries.filter(F.col("library_id") == row["library_id"]).count():
+        rows = self._libraries()
+        if row["library_id"] in rows:
             raise DuplicateError(f"library {row['library_id']} exists")
         if row["embedding_dimension"] <= 0:
             raise DimensionMismatchError("embedding_dimension must be > 0")
@@ -95,7 +125,9 @@ class EntityStore:
             raise EntityError("num_projections must be positive")  # indexes.py:181
         row = {f.name: row.get(f.name) for f in self.libraries.schema.fields}
         new = self.libraries.sparkSession.createDataFrame([row], self.libraries.schema)
-        return replace(self, libraries=self.libraries.unionByName(new))
+        libraries = self.libraries.unionByName(new)
+        return replace(self, libraries=libraries,
+                       catalog=_Catalog(libraries, {**rows, row["library_id"]: row}))
 
     def update_library(self, library_id: str, updates: dict) -> "EntityStore":
         """PATCH semantics (P4): unset fields keep their value via MERGE-style
@@ -125,14 +157,21 @@ class EntityStore:
             if k == "library_id":
                 raise FrozenFieldError("library_id is immutable")
             df = df.withColumn(k, F.when(cond, F.lit(v)).otherwise(F.col(k)))
-        return replace(self, libraries=df)
+        rows = dict(self._libraries())
+        rows[library_id] = {**rows[library_id], **updates}
+        return replace(self, libraries=df, catalog=_Catalog(df, rows))
 
     def delete_library(self, library_id: str) -> "EntityStore":
         """Cascade (J5): anti-join rewrites of all three tables."""
         doomed_docs = self.documents.filter(F.col("library_id") == library_id)
+        libraries = self.libraries.filter(F.col("library_id") != library_id)
+        rows = self.catalog.rows
+        if rows is not None:
+            rows = {i: r for i, r in rows.items() if i != library_id}
         return replace(
             self,
-            libraries=self.libraries.filter(F.col("library_id") != library_id),
+            libraries=libraries,
+            catalog=_Catalog(libraries, rows),
             documents=self.documents.join(
                 doomed_docs.select("document_id"), "document_id", "left_anti"
             ),
@@ -187,17 +226,24 @@ class EntityStore:
         doc_ids = {r["document_id"] for r in rows}
         if len(doc_ids) > 1:
             raise EntityError("batch must target a single document")
-        doc = self._document(next(iter(doc_ids)))
-        lib = self._library(doc["library_id"])
-        self._validate_dim(lib, rows)
-        existing = {
-            r["chunk_id"]
-            for r in self.chunks.filter(
-                F.col("chunk_id").isin([r["chunk_id"] for r in rows])
+        doc_id = next(iter(doc_ids))
+        # one job answers both lookups: the document's library, and which of
+        # the new chunk_ids exist already
+        found = (
+            self.documents.filter(F.col("document_id") == doc_id)
+            .select(F.lit(True).alias("is_doc"), F.col("library_id").alias("id"))
+            .unionByName(
+                self.chunks.filter(F.col("chunk_id").isin([r["chunk_id"] for r in rows]))
+                .select(F.lit(False).alias("is_doc"), F.col("chunk_id").alias("id"))
             )
-            .select("chunk_id")
             .collect()
-        }
+        )
+        doc_libs = [r["id"] for r in found if r["is_doc"]]
+        if not doc_libs:
+            raise NotFoundError(f"document {doc_id} not found")
+        lib = self._library(doc_libs[0])
+        self._validate_dim(lib, rows)
+        existing = {r["id"] for r in found if not r["is_doc"]}
         if existing:
             raise DuplicateError(f"chunks exist: {sorted(existing)}")
         new = self.chunks.sparkSession.createDataFrame(rows, self.chunks.schema)
@@ -207,14 +253,28 @@ class EntityStore:
         """D6: frozen FK; dimension re-validated when the embedding changes
         (the reference's dirty-check re-index, O10, is moot here -- indexes
         are batch-derived columns)."""
-        rows = self.chunks.filter(F.col("chunk_id") == chunk_id).collect()
+        # one job: the chunk's document, and that document's library
+        # (doc_found is NULL when the document is missing)
+        rows = (
+            self.chunks.filter(F.col("chunk_id") == chunk_id)
+            .select("document_id")
+            .join(
+                self.documents.select(
+                    "document_id", F.lit(True).alias("doc_found"), "library_id"
+                ),
+                "document_id",
+                "left",
+            )
+            .collect()
+        )
         if not rows:
             raise NotFoundError(f"chunk {chunk_id} not found")
         if "document_id" in updates or "chunk_id" in updates:
             raise FrozenFieldError("chunk FK/id are immutable")
         if "embedding" in updates:
-            doc = self._document(rows[0]["document_id"])
-            lib = self._library(doc["library_id"])
+            if rows[0]["doc_found"] is None:
+                raise NotFoundError(f"document {rows[0]['document_id']} not found")
+            lib = self._library(rows[0]["library_id"])
             if len(updates["embedding"]) != lib["embedding_dimension"]:
                 raise DimensionMismatchError("embedding dimension mismatch")
         cond = F.col("chunk_id") == chunk_id
@@ -318,33 +378,18 @@ class EntityStore:
             # Q3 dispatch: bucket probe with the reference's <k fallback
             # (intersection with the metadata candidates happens FIRST,
             # fallback widens to all allowed -- indexes.py:220-224).
-            # Per-library seed/width (indexes.py:172-187): NULL columns fall
-            # back to the engine defaults, so pre-existing stores behave
-            # identically.
-            from .lsh import NUM_PROJECTIONS, SEED, _bucket_of, bucket_expr, projection_matrix
+            from .lsh import _bucket_of, bucket_kernel
 
-            # None (absent column) falls back to the engine default, but a
-            # PRESENT invalid width (e.g. 0 from an unvalidated migrated
-            # tree) is rejected rather than silently reinterpreted --
-            # `or NUM_PROJECTIONS` would treat 0 as "use the default"
-            num_proj = (
-                NUM_PROJECTIONS
-                if lib.get("num_projections") is None
-                else lib["num_projections"]
-            )
-            if not isinstance(num_proj, int) or num_proj <= 0:
-                raise ValueError(
-                    f"library {library_id}: invalid num_projections {num_proj!r}"
-                )
-            proj = projection_matrix(
-                dimension=lib["embedding_dimension"],
-                num_projections=num_proj,
-                seed=SEED if lib.get("random_state") is None else lib["random_state"],
-            )
+            proj = library_projections(lib)
             qb = _bucket_of([float(x) for x in query_vector], proj)
-            bucketed = cand.withColumn("bucket", bucket_expr(F.col("embedding"), proj))
-            probed = bucketed.filter(F.col("bucket") == qb)
-            cand = probed if probed.count() >= k else bucketed
+            # the kernel runs above the library semi-join and the metadata
+            # filter (mapInPandas stops the bucket filter's pushdown), so it
+            # buckets only this library's candidates; the fallback plan
+            # skips it
+            cand = cand.select("chunk_id", "embedding")
+            probed = bucket_kernel(cand, proj).filter(F.col("bucket") == qb)
+            if probed.count() >= k:
+                cand = probed
         q = F.array(*[F.lit(float(x)) for x in query_vector])
         return (
             cand.select(
@@ -422,6 +467,32 @@ class EntityStore:
             .orderBy("reco_distance", "chunk_id")
             .limit(k)
         )
+
+
+def library_projections(lib: dict) -> list[list[float]]:
+    """The projection matrix of a random_projection library row.
+
+    Per-library seed/width (indexes.py:172-187): NULL columns fall back to
+    the engine defaults, so pre-existing stores behave identically. A
+    PRESENT invalid width (e.g. 0 from an unvalidated migrated tree) is
+    rejected rather than silently reinterpreted -- ``or NUM_PROJECTIONS``
+    would treat 0 as "use the default"."""
+    from .lsh import NUM_PROJECTIONS, SEED, projection_matrix
+
+    num_proj = (
+        NUM_PROJECTIONS
+        if lib.get("num_projections") is None
+        else lib["num_projections"]
+    )
+    if not isinstance(num_proj, int) or num_proj <= 0:
+        raise ValueError(
+            f"library {lib['library_id']}: invalid num_projections {num_proj!r}"
+        )
+    return projection_matrix(
+        dimension=lib["embedding_dimension"],
+        num_projections=num_proj,
+        seed=SEED if lib.get("random_state") is None else lib["random_state"],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -657,10 +728,11 @@ def store_from_driver_tables(
     applies to every library (flat | random_projection), selecting which
     search dispatch (Q2 exact scan vs Q3 bucket probe) the store runs.
 
-    Memoized with a cached chunks table per configuration: every search
-    through this surface runs >=2 jobs (the <k fallback count + the probe)
-    over the documents x embeddings join, which dominated the warm cost --
-    in production the chunk table is the materialized asset."""
+    Memoized with cached tables per configuration: every search through
+    this surface scans the documents x embeddings join (a random_projection
+    search twice: the <k fallback count, then the probe), which dominated
+    the warm cost -- in production the chunk table is the materialized
+    asset."""
     from ..sources.tables import load_table
 
     memo_key = (
@@ -703,9 +775,9 @@ def store_from_driver_tables(
             F.lit(0).alias("chunk_index"),
         )
     )
-    # all three cached: the _library guard collects over libraries (a
-    # distinct over the full docs scan) and search touches documents and
-    # chunks in separate jobs -- each was a fresh scan per call
+    # all three cached: the library catalog's one collect is a distinct
+    # over the full docs scan, and search and the write guards touch
+    # documents and chunks in separate jobs -- each was a fresh scan per call
     store = EntityStore(
         libraries=libraries.cache(),
         documents=documents.cache(),

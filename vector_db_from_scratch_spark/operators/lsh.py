@@ -4,7 +4,7 @@ Reference parity (semantics, not implementation -- SURVEY.md §2.9 Q3, §2.7
 X6/X7, §4 O4/O5):
   - Gaussian projection matrix, seeded, ``num_projections=8`` default
     (vector_db/indexes.py:172-187); here generated once driver-side with
-    NumPy (seed 42) and embedded as column literals / oracle SQL literals.
+    NumPy (seed 42).
   - bucket = little-endian packed sign bits of P.v (indexes.py:236-242).
   - search probes ONLY the query's bucket, intersects with the metadata
     candidate set, and falls back to an exhaustive scan over the allowed
@@ -12,15 +12,23 @@ X6/X7, §4 O4/O5):
     :223-224) -- accuracy floor preserved.
 
 Spark-first design:
-  - The bucket is a pure SQL expression (8 sign tests over `aggregate`
-    dot products) materialized as a column; persisting the index table
-    ``partitionBy("bucket")`` makes the probe a partition-pruned scan --
-    Catalyst's partition pruning IS the reference's O(sqrt n) bucket probe
-    at cluster scale.
-  - The <k fallback is a driver-side count (one cheap job on the pruned
-    bucket) choosing between two already-declared plans, exactly matching
-    the reference's data-dependent control flow; the oracle expresses the
-    same choice with a conditional UNION.
+  - The bucket is computed by one kernel, :func:`bucket_kernel`: a NumPy
+    sign-pack (one ``M @ P^T`` GEMM per Arrow batch) in ``mapInPandas``. The
+    registry's index build (:func:`build_index`) and the entity store's
+    random_projection search both run it, and :func:`_bucket_of` buckets a
+    query vector with the same arithmetic. :func:`bucket_expr` is the same
+    function as a SQL expression (sign tests over ``aggregate`` dot
+    products): it stays the oracle-exact reference, the parity check in
+    :func:`bucket_stats`, and the streaming path's bucket
+    (streaming/windows.py), where no Python stage is wanted.
+  - Persisting the index table ``partitionBy("bucket")`` makes the probe a
+    partition-pruned scan -- Catalyst's partition pruning IS the
+    reference's O(sqrt n) bucket probe at cluster scale.
+  - The <k fallback in :func:`lsh_knn` is a union plan gated on a broadcast
+    one-row occupancy count, so the choice happens inside one plan; the
+    entity store's search decides it with one eager count on the library's
+    probed candidates instead. The oracle expresses the same choice with a
+    conditional UNION.
 """
 
 from __future__ import annotations
@@ -55,10 +63,6 @@ def projection_matrix(
 _PROJECTIONS = projection_matrix()
 
 
-def _proj_lit(i: int) -> Column:
-    return F.array(*[F.lit(x) for x in _PROJECTIONS[i]])
-
-
 def bucket_expr(v: Column, projections: list[list[float]] | None = None) -> Column:
     """Little-endian sign-bit packing: bit i set iff P_i . v >= 0."""
     proj = projections if projections is not None else _PROJECTIONS
@@ -74,10 +78,6 @@ def _proj_sql_row(row: list[float]) -> str:
     return f"[{vals}]::DOUBLE[]"
 
 
-def _proj_sql(i: int) -> str:
-    return _proj_sql_row(_PROJECTIONS[i])
-
-
 def bucket_sql(v: str, projections: list[list[float]] | None = None) -> str:
     """DuckDB twin of :func:`bucket_expr`; pass a per-library
     ``projection_matrix(...)`` for non-default seeds (reference
@@ -90,35 +90,64 @@ def bucket_sql(v: str, projections: list[list[float]] | None = None) -> str:
     return f"({terms})"
 
 
+def _sign_pack(m: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """Little-endian packed sign bits of ``m @ p.T``: bit i of row r is set
+    iff P_i . m_r >= 0. A NaN dot product sets its bit, as Spark's NaN
+    ordering (NaN above every number) does in :func:`bucket_expr`."""
+    d = m @ p.T
+    signs = (d >= 0.0) | np.isnan(d)
+    return signs @ (np.int64(1) << np.arange(p.shape[0], dtype=np.int64))
+
+
+def _buckets(vecs: np.ndarray, p: np.ndarray) -> np.ndarray:
+    """int32 bucket of each embedding in an object array (one Arrow
+    batch's column). A NULL embedding, or one whose length is not the
+    projection width, gets bucket 0 as in :func:`bucket_expr` (its dot
+    products are NULL)."""
+    dim = p.shape[1]
+    ok = np.fromiter((v is not None and len(v) == dim for v in vecs), bool, len(vecs))
+    out = np.zeros(len(vecs), dtype=np.int32)
+    if ok.any():
+        out[ok] = _sign_pack(np.vstack(vecs[ok]).astype(np.float64), p)
+    return out
+
+
+def bucket_kernel(df: DataFrame, projections: list[list[float]] | None = None) -> DataFrame:
+    """``df`` plus an int ``bucket`` column: the sign-pack of each row's
+    ``embedding`` against ``projections`` (default: the engine's 8 x 64
+    matrix), one NumPy GEMM per Arrow batch.
+
+    Agrees with :func:`bucket_expr` except for dot products within ~1e-13
+    of zero (BLAS vs sequential fold), which tests check empirically, and
+    for a NULL element inside an embedding: it arrives here as NaN and sets
+    the bits a NaN element would, where the expression gives bucket 0.
+
+    ``mapInPandas`` is opaque to Catalyst: filters on ``bucket`` stay
+    above it, so the kernel runs on whatever rows ``df`` already kept."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    p = np.asarray(projections if projections is not None else _PROJECTIONS, dtype=np.float64)
+
+    def batches(it):
+        for pdf in it:
+            yield pdf.assign(bucket=_buckets(pdf["embedding"].to_numpy(), p))
+
+    out_schema = StructType(df.schema.fields + [StructField("bucket", IntegerType())])
+    return df.mapInPandas(batches, out_schema)
+
+
 def build_index(emb: DataFrame, fast: bool = True) -> DataFrame:
     """Index table = vectors + bucket column (batch index build; the
     reference's per-insert index mutation has no batch-Spark analog by
     design -- BASELINE.md north star).
 
-    Fast path: sign-pack via one NumPy S = sign(M P^T) matmul per Arrow
-    batch -- at 1B vectors the interpreted 8x64 fold per row is the build
-    bottleneck. Agrees with the SQL expression except for dot products
-    within ~1e-13 of zero (BLAS vs sequential fold), which tests check
-    empirically; the expression path remains the oracle-exact reference.
+    Fast path: :func:`bucket_kernel` -- at 1B vectors the interpreted 8x64
+    fold per row is the build bottleneck. ``fast=False`` is the
+    oracle-exact :func:`bucket_expr` path.
     """
     if not fast:
         return emb.withColumn("bucket", bucket_expr(F.col("embedding")))
-
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    p = np.asarray(_PROJECTIONS, dtype=np.float64)
-    weights = np.asarray([1 << i for i in range(NUM_PROJECTIONS)], dtype=np.int64)
-
-    def batches(it):
-        for pdf in it:
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            signs = (m @ p.T) >= 0.0
-            pdf = pdf.copy()
-            pdf["bucket"] = (signs @ weights).astype("int32")
-            yield pdf
-
-    out_schema = StructType(emb.schema.fields + [StructField("bucket", IntegerType())])
-    return emb.mapInPandas(batches, out_schema)
+    return bucket_kernel(emb)
 
 
 _LSH_INDEX_MEMO: dict[tuple[str, str], DataFrame] = _memo.register({})
@@ -210,10 +239,9 @@ def lsh_knn(
 
 
 def _bucket_of(vec: list[float], projections: list[list[float]] | None = None) -> int:
+    """The bucket of one vector, by :func:`bucket_kernel`'s arithmetic."""
     p = np.asarray(projections if projections is not None else _PROJECTIONS, dtype=np.float64)
-    v = np.asarray(vec, dtype=np.float64)
-    signs = (p @ v) >= 0
-    return int(sum(1 << i for i, s in enumerate(signs) if s))
+    return int(_sign_pack(np.asarray([vec], dtype=np.float64), p)[0])
 
 
 def lsh_knn_multiprobe(
