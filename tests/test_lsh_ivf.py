@@ -219,9 +219,11 @@ def test_bucket_kernel_equals_expression_on_entity_stores(spark, sf_dir):
     random_projection search share must give bucket_expr's bucket under
     every library configuration the store dispatches on: demo_store's
     lib-lsh (8 bits, dimension 3), lib-lsh-seeded (4 projections, seed
-    123), and the 64-d driver-table store. A NULL embedding gets the
-    expression's bucket (0), and an empty batch yields no buckets."""
+    123), and the 64-d driver-table store. A NULL embedding and an
+    embedding with a NULL element get the expression's bucket (0), and an
+    empty batch yields no buckets."""
     import numpy as np
+    import pyarrow as pa
 
     from vector_db_from_scratch_spark.operators.entity import (
         demo_store,
@@ -236,8 +238,10 @@ def test_bucket_kernel_equals_expression_on_entity_stores(spark, sf_dir):
 
     def both(store, lib_id):
         proj = library_projections(store._library(lib_id))
+        dim = len(proj[0])
         null = spark.createDataFrame(
-            [("ch-null", None)], store.chunks.select("chunk_id", "embedding").schema
+            [("ch-null", None), ("ch-null-elem", [None] + [1.0] * (dim - 1))],
+            store.chunks.select("chunk_id", "embedding").schema,
         )
         chunks = (
             store.chunks.join(
@@ -262,11 +266,11 @@ def test_bucket_kernel_equals_expression_on_entity_stores(spark, sf_dir):
     for store, lib_id in ((demo, "lib-lsh"), (demo, "lib-lsh-seeded"), (driver, "src0")):
         kern, expr, bits = both(store, lib_id)
         assert kern == expr, lib_id
-        assert kern["ch-null"] == 0 and len(kern) > 2
+        assert kern["ch-null"] == kern["ch-null-elem"] == 0 and len(kern) > 3
         assert all(0 <= b < 1 << bits for b in kern.values())
 
     proj = np.asarray(library_projections(demo._library("lib-lsh")))
-    assert _buckets(np.array([], dtype=object), proj).tolist() == []
+    assert _buckets(pa.array([], pa.list_(pa.float32())), proj).tolist() == []
     empty = demo.chunks.select("chunk_id", "embedding").filter(F.lit(False))
     assert bucket_kernel(empty).collect() == []
 

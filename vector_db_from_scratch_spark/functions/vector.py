@@ -14,7 +14,7 @@ from ``zip_with``/``aggregate`` -- it stays JVM-side (no Python UDF in the
 hot path) and is expressible 1:1 in the DuckDB oracle SQL. ``ZipWith`` and
 ``ArrayAggregate`` are ``CodegenFallback`` expressions in Spark 4.1, so
 inside a whole-stage-codegen stage they are interpreted per row, lambda by
-lambda; the Arrow/NumPy ``mapInPandas`` kernels (``knn.flat_knn_fast``,
+lambda; the Arrow/NumPy kernels (``knn.flat_knn_fast``,
 ``lsh.bucket_kernel``) are the vectorized alternative. Inputs are cast to
 ``array<double>`` so both engines accumulate in float64 and hash-match
 after rounding.

@@ -74,9 +74,9 @@ class _Catalog:
 
     __slots__ = ("libraries", "rows")
 
-    def __init__(self, libraries: DataFrame, rows: dict[str, dict] | None = None):
+    def __init__(self, libraries: DataFrame):
         self.libraries = libraries
-        self.rows = rows
+        self.rows: dict[str, dict] | None = None
 
 
 @dataclass(frozen=True)
@@ -85,7 +85,7 @@ class EntityStore:
     documents: DataFrame
     chunks: DataFrame
     # shared by every store ``replace()`` derives with the same libraries
-    # DataFrame; the library mutations pass the catalog they derive
+    # DataFrame; a library mutation gets a fresh lazy one in __post_init__
     catalog: _Catalog | None = field(default=None, repr=False, compare=False)
 
     def __post_init__(self):
@@ -116,8 +116,7 @@ class EntityStore:
     # -- library CRUD (D1-D3) ----------------------------------------------
 
     def create_library(self, row: dict) -> "EntityStore":
-        rows = self._libraries()
-        if row["library_id"] in rows:
+        if row["library_id"] in self._libraries():
             raise DuplicateError(f"library {row['library_id']} exists")
         if row["embedding_dimension"] <= 0:
             raise DimensionMismatchError("embedding_dimension must be > 0")
@@ -125,9 +124,7 @@ class EntityStore:
             raise EntityError("num_projections must be positive")  # indexes.py:181
         row = {f.name: row.get(f.name) for f in self.libraries.schema.fields}
         new = self.libraries.sparkSession.createDataFrame([row], self.libraries.schema)
-        libraries = self.libraries.unionByName(new)
-        return replace(self, libraries=libraries,
-                       catalog=_Catalog(libraries, {**rows, row["library_id"]: row}))
+        return replace(self, libraries=self.libraries.unionByName(new))
 
     def update_library(self, library_id: str, updates: dict) -> "EntityStore":
         """PATCH semantics (P4): unset fields keep their value via MERGE-style
@@ -157,21 +154,14 @@ class EntityStore:
             if k == "library_id":
                 raise FrozenFieldError("library_id is immutable")
             df = df.withColumn(k, F.when(cond, F.lit(v)).otherwise(F.col(k)))
-        rows = dict(self._libraries())
-        rows[library_id] = {**rows[library_id], **updates}
-        return replace(self, libraries=df, catalog=_Catalog(df, rows))
+        return replace(self, libraries=df)
 
     def delete_library(self, library_id: str) -> "EntityStore":
         """Cascade (J5): anti-join rewrites of all three tables."""
         doomed_docs = self.documents.filter(F.col("library_id") == library_id)
-        libraries = self.libraries.filter(F.col("library_id") != library_id)
-        rows = self.catalog.rows
-        if rows is not None:
-            rows = {i: r for i, r in rows.items() if i != library_id}
         return replace(
             self,
-            libraries=libraries,
-            catalog=_Catalog(libraries, rows),
+            libraries=self.libraries.filter(F.col("library_id") != library_id),
             documents=self.documents.join(
                 doomed_docs.select("document_id"), "document_id", "left_anti"
             ),
@@ -253,20 +243,18 @@ class EntityStore:
         """D6: frozen FK; dimension re-validated when the embedding changes
         (the reference's dirty-check re-index, O10, is moot here -- indexes
         are batch-derived columns)."""
-        # one job: the chunk's document, and that document's library
-        # (doc_found is NULL when the document is missing)
-        rows = (
-            self.chunks.filter(F.col("chunk_id") == chunk_id)
-            .select("document_id")
-            .join(
+        rows = self.chunks.filter(F.col("chunk_id") == chunk_id).select("document_id")
+        if "embedding" in updates:
+            # one job: the chunk's document, and that document's library
+            # (doc_found is NULL when the document is missing)
+            rows = rows.join(
                 self.documents.select(
                     "document_id", F.lit(True).alias("doc_found"), "library_id"
                 ),
                 "document_id",
                 "left",
             )
-            .collect()
-        )
+        rows = rows.collect()
         if not rows:
             raise NotFoundError(f"chunk {chunk_id} not found")
         if "document_id" in updates or "chunk_id" in updates:
@@ -383,7 +371,7 @@ class EntityStore:
             proj = library_projections(lib)
             qb = _bucket_of([float(x) for x in query_vector], proj)
             # the kernel runs above the library semi-join and the metadata
-            # filter (mapInPandas stops the bucket filter's pushdown), so it
+            # filter (mapInArrow stops the bucket filter's pushdown), so it
             # buckets only this library's candidates; the fallback plan
             # skips it
             cand = cand.select("chunk_id", "embedding")

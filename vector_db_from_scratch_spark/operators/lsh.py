@@ -13,7 +13,7 @@ X6/X7, §4 O4/O5):
 
 Spark-first design:
   - The bucket is computed by one kernel, :func:`bucket_kernel`: a NumPy
-    sign-pack (one ``M @ P^T`` GEMM per Arrow batch) in ``mapInPandas``. The
+    sign-pack (one ``M @ P^T`` GEMM per Arrow batch) in ``mapInArrow``. The
     registry's index build (:func:`build_index`) and the entity store's
     random_projection search both run it, and :func:`_bucket_of` buckets a
     query vector with the same arithmetic. :func:`bucket_expr` is the same
@@ -99,16 +99,25 @@ def _sign_pack(m: np.ndarray, p: np.ndarray) -> np.ndarray:
     return signs @ (np.int64(1) << np.arange(p.shape[0], dtype=np.int64))
 
 
-def _buckets(vecs: np.ndarray, p: np.ndarray) -> np.ndarray:
-    """int32 bucket of each embedding in an object array (one Arrow
-    batch's column). A NULL embedding, or one whose length is not the
-    projection width, gets bucket 0 as in :func:`bucket_expr` (its dot
-    products are NULL)."""
+def _buckets(emb, p: np.ndarray) -> np.ndarray:
+    """int32 bucket of each embedding in one Arrow batch's list column. A
+    NULL embedding, one with a NULL element, or one whose length is not the
+    projection width gets bucket 0 as in :func:`bucket_expr` (its dot
+    products are NULL). NULL elements are read from the validity bitmap,
+    before NumPy would turn them into NaN."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     dim = p.shape[1]
-    ok = np.fromiter((v is not None and len(v) == dim for v in vecs), bool, len(vecs))
-    out = np.zeros(len(vecs), dtype=np.int32)
-    if ok.any():
-        out[ok] = _sign_pack(np.vstack(vecs[ok]).astype(np.float64), p)
+    ok = pc.fill_null(pc.list_value_length(emb), -1).to_numpy() == dim
+    vals = emb.filter(pa.array(ok)).flatten()  # dim values per kept row
+    m = vals.to_numpy(zero_copy_only=False).reshape(-1, dim)
+    if vals.null_count:
+        has_null = vals.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(axis=1)
+        ok[np.flatnonzero(ok)[has_null]] = False
+        m = m[~has_null]
+    out = np.zeros(len(emb), dtype=np.int32)
+    out[ok] = _sign_pack(m.astype(np.float64), p)
     return out
 
 
@@ -118,22 +127,22 @@ def bucket_kernel(df: DataFrame, projections: list[list[float]] | None = None) -
     matrix), one NumPy GEMM per Arrow batch.
 
     Agrees with :func:`bucket_expr` except for dot products within ~1e-13
-    of zero (BLAS vs sequential fold), which tests check empirically, and
-    for a NULL element inside an embedding: it arrives here as NaN and sets
-    the bits a NaN element would, where the expression gives bucket 0.
+    of zero (BLAS vs sequential fold), which tests check empirically.
 
-    ``mapInPandas`` is opaque to Catalyst: filters on ``bucket`` stay
+    ``mapInArrow`` is opaque to Catalyst: filters on ``bucket`` stay
     above it, so the kernel runs on whatever rows ``df`` already kept."""
+    import pyarrow as pa
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     p = np.asarray(projections if projections is not None else _PROJECTIONS, dtype=np.float64)
 
     def batches(it):
-        for pdf in it:
-            yield pdf.assign(bucket=_buckets(pdf["embedding"].to_numpy(), p))
+        for batch in it:
+            bucket = pa.array(_buckets(batch.column("embedding"), p), pa.int32())
+            yield batch.append_column("bucket", bucket)
 
     out_schema = StructType(df.schema.fields + [StructField("bucket", IntegerType())])
-    return df.mapInPandas(batches, out_schema)
+    return df.mapInArrow(batches, out_schema)
 
 
 def build_index(emb: DataFrame, fast: bool = True) -> DataFrame:
