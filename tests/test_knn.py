@@ -6,6 +6,52 @@ import pytest
 
 from vector_db_from_scratch_spark.operators.knn import batch_knn, flat_knn
 
+# the dyadic directory's MMR shortlist: every valid row except the query,
+# so it reaches the zero vector (relevance -inf) but not the NULL-distance
+# rows, which the descending-relevance shortlist sort puts last
+DYADIC_SHORTLIST = 60
+
+
+@pytest.fixture(scope="module")
+def dyadic_dir(tmp_path_factory):
+    """A 64-row sf directory (``embeddings`` only) of 64-d vectors with
+    k/128 components. vec 5 is vec 0 moved by 1/128 on one axis, so their
+    euclidean distance is exactly 0.0078125, a 6-dp half; vec 7 is the zero
+    vector. vecs 11, 13 and 17 are invalid candidates: a NULL embedding, a
+    63-element one and one with a NULL element. None of them is a query
+    (vec_id < 4) or a hard-negative anchor (vec_id % 25 == 0)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(7)
+    vecs = rng.integers(-64, 65, size=(64, 64)) / 128.0
+    vecs[5] = vecs[0]
+    vecs[5, 0] += 1 / 128
+    vecs[7] = 0.0
+    emb = [list(v) for v in vecs]
+    emb[11] = None
+    emb[13] = emb[13][:63]
+    emb[17][3] = None
+    path = tmp_path_factory.mktemp("dyadic")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(64), pa.int64()),
+                "embedding": pa.array(emb, pa.list_(pa.float32())),
+                "label": pa.array([i % 3 for i in range(64)], pa.int32()),
+            }
+        ),
+        path / "embeddings.parquet",
+    )
+    return str(path)
+
+
+@pytest.fixture(params=["sf", "dyadic"])
+def twin_dir(request, sf_dir):
+    """The directories on which each ``_fast`` path must equal its twin."""
+    return sf_dir if request.param == "sf" else request.getfixturevalue("dyadic_dir")
+
 
 def test_self_is_nearest_cosine(spark, sf_dir):
     rows = flat_knn(spark, sf_dir, "cosine", k=3, query_vec_id=0).collect()
@@ -45,12 +91,12 @@ def test_batch_knn_matches_single(spark, sf_dir):
         assert [v for _, v in sorted(hits)] == [r["vec_id"] for r in single]
 
 
-def test_fast_knn_matches_expression_path(spark, sf_dir):
+def test_fast_knn_matches_expression_path(spark, twin_dir):
     from vector_db_from_scratch_spark.operators.knn import flat_knn_fast
 
     for metric in ("cosine", "euclidean", "dot_product"):
-        slow = flat_knn(spark, sf_dir, metric, k=10).collect()
-        fast = flat_knn_fast(spark, sf_dir, metric, k=10).collect()
+        slow = flat_knn(spark, twin_dir, metric, k=10).collect()
+        fast = flat_knn_fast(spark, twin_dir, metric, k=10).collect()
         assert [(r["vec_id"], r["distance"]) for r in slow] == [
             (r["vec_id"], r["distance"]) for r in fast
         ], metric
@@ -75,14 +121,14 @@ def test_knn_per_label_covers_every_label_and_matches_filtered(spark, sf_dir):
     ]
 
 
-def test_batch_knn_fast_matches_expression_path(spark, sf_dir):
+def test_batch_knn_fast_matches_expression_path(spark, twin_dir):
     """The GEMM batch kernel must agree with the declarative two-phase
     window form on every metric -- same rows, distances, and ranks."""
     from vector_db_from_scratch_spark.operators.knn import batch_knn, batch_knn_fast
 
     for metric in ("cosine", "euclidean", "dot_product"):
-        slow = batch_knn(spark, sf_dir, metric, k=5, num_queries=4).collect()
-        fast = batch_knn_fast(spark, sf_dir, metric, k=5, num_queries=4).collect()
+        slow = batch_knn(spark, twin_dir, metric, k=5, num_queries=4).collect()
+        fast = batch_knn_fast(spark, twin_dir, metric, k=5, num_queries=4).collect()
         key = lambda r: (r["query_id"], r["rank"])
         assert sorted(
             [(r["query_id"], r["rank"], r["vec_id"], r["distance"]) for r in slow]
@@ -139,6 +185,45 @@ def test_mmr_rerank_greedy_matches_python_and_lambda1_degenerates(spark, sf_dir)
     assert picked == sel
 
 
+def test_mmr_rerank_matches_oracle_through_zero_vector(spark, dyadic_dir):
+    """With the zero vector in the shortlist, its MMR score from rank 2 on
+    is -inf + inf = NaN, which Spark and DuckDB order as the largest: the
+    driver greedy must pick it where the oracle does. DuckDB's list
+    functions reject a NULL element or a length mismatch, so the oracle
+    reads only the valid rows; the shortlist never reaches the others."""
+    from tools.check import frames_equal, normalize
+
+    import duckdb
+
+    from vector_db_from_scratch_spark.operators.knn import (
+        knn_mmr_rerank,
+        knn_mmr_rerank_oracle,
+    )
+
+    got = knn_mmr_rerank(spark, dyadic_dir, shortlist_n=DYADIC_SHORTLIST).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"""CREATE VIEW embeddings AS SELECT * FROM '{dyadic_dir}/embeddings.parquet'
+            WHERE len(embedding) = 64
+              AND NOT list_contains(list_transform(embedding, x -> x IS NULL), true)"""
+    )
+    want = con.execute(knn_mmr_rerank_oracle(shortlist_n=DYADIC_SHORTLIST)).fetchdf()
+    ok, msg = frames_equal(normalize(got), normalize(want))
+    assert ok, msg
+    assert 7 in set(got["vec_id"])
+
+
+def test_mmr_rerank_k_beyond_shortlist_returns_the_shortlist(spark, dyadic_dir):
+    """k larger than the shortlist picks every shortlisted row once."""
+    from vector_db_from_scratch_spark.operators.knn import knn_mmr_rerank
+
+    rows = knn_mmr_rerank(
+        spark, dyadic_dir, k=DYADIC_SHORTLIST + 2, shortlist_n=DYADIC_SHORTLIST
+    ).collect()
+    assert [r["rank"] for r in rows] == list(range(1, DYADIC_SHORTLIST + 1))
+    assert len({r["vec_id"] for r in rows}) == DYADIC_SHORTLIST
+
+
 def test_hard_negatives_are_cross_label_and_truly_nearest(spark, sf_dir):
     """Every mined negative has a different label from its anchor, and for
     one spot-checked anchor the distances equal the brute-force nearest
@@ -179,7 +264,7 @@ def test_hard_negatives_are_cross_label_and_truly_nearest(spark, sf_dir):
     assert got == brute
 
 
-def test_hard_negatives_fast_equals_expression_twin(spark, sf_dir):
+def test_hard_negatives_fast_equals_expression_twin(spark, twin_dir):
     """The Arrow GEMM kernel (the registered path) must equal the
     declarative expression twin bit for bit -- same rows, same order."""
     from vector_db_from_scratch_spark.operators.knn import (
@@ -187,8 +272,8 @@ def test_hard_negatives_fast_equals_expression_twin(spark, sf_dir):
         hard_negatives_fast,
     )
 
-    expr = hard_negatives(spark, sf_dir).collect()
-    fast = hard_negatives_fast(spark, sf_dir).collect()
+    expr = hard_negatives(spark, twin_dir).collect()
+    fast = hard_negatives_fast(spark, twin_dir).collect()
     assert [tuple(r) for r in fast] == [tuple(r) for r in expr]
 
 

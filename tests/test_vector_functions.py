@@ -63,3 +63,36 @@ def test_rounding_normalizes_negative_zero(spark):
     # -0.0 must fold to +0.0 so value hashes match the oracle
     d = _spark_distance(spark, "dot_product", [0.0, 0.0], [1.0, 1.0], round_to=6)
     assert math.copysign(1.0, d) == 1.0
+
+
+def test_round6_equals_duckdb_round():
+    """``round6`` is bit-identical to DuckDB's ``round(x, 6) + 0.0`` on
+    exact 6-dp halves of both signs (where ``np.round``'s half-to-even and
+    a one-sided ``floor(x * 1e6 + 0.5)`` both disagree), random doubles of
+    both signs, and ±inf, ±0.0 and NaN. No Spark session."""
+    import duckdb
+    import pandas as pd
+
+    from vector_db_from_scratch_spark.functions.vector import round6
+
+    halves = (np.arange(20_000) + 0.5) / 1e6
+    rng = np.random.default_rng(11)
+    x = np.concatenate(
+        [
+            halves,
+            -halves,
+            rng.uniform(-2.0, 2.0, 20_000),
+            rng.uniform(-1e4, 1e4, 20_000),
+            [np.inf, -np.inf, 0.0, -0.0, np.nan],
+        ]
+    )
+    df = pd.DataFrame({"i": np.arange(len(x)), "x": x})
+    con = duckdb.connect()
+    con.register("xs", df)
+    want = con.execute("SELECT round(x, 6) + 0.0 AS r FROM xs ORDER BY i").fetchdf()["r"]
+    want = want.to_numpy(dtype=np.float64)
+    got = round6(x)
+    same = ((got == want) & (np.signbit(got) == np.signbit(want))) | (
+        np.isnan(got) & np.isnan(want)
+    )
+    assert same.all(), list(zip(x[~same][:5], got[~same][:5], want[~same][:5]))

@@ -68,7 +68,8 @@ def main() -> None:
         ) or "-"
         topk = "TakeOrdered" if "TakeOrderedAndProject" in plan else "-"
         pushed = len(re.findall(r"DataFilters: \[[^\]]+\]", plan))
-        arrow = "arrow" if ("MapInPandas" in plan or "FlatMapGroupsInPandas" in plan) else "-"
+        arrow_ops = ("MapInPandas", "MapInArrow", "FlatMapGroupsInPandas")
+        arrow = "arrow" if any(op in plan for op in arrow_ops) else "-"
         rows.append(
             (name, str(shuffles), runtime, joins, topk, f"{pushed} scans filtered {arrow}")
         )

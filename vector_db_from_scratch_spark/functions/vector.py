@@ -1,4 +1,4 @@
-"""Vector distance expressions as pure Spark SQL columns.
+"""The distance contract: Spark SQL columns, their DuckDB twins, and NumPy.
 
 Reference parity (semantics only, see SURVEY.md §2.7):
   - cosine_distance  = 1 - (v.q)/(|v||q|); +inf when either norm is zero
@@ -9,23 +9,30 @@ Reference parity (semantics only, see SURVEY.md §2.7):
     negated so ascending sort is best-first everywhere).
   - metric dispatch by name                 (vector_db/indexes.py:99-106)
 
-Design: everything here is a Column expression over ``array<float>`` built
-from ``zip_with``/``aggregate`` -- it stays JVM-side (no Python UDF in the
-hot path) and is expressible 1:1 in the DuckDB oracle SQL. ``ZipWith`` and
-``ArrayAggregate`` are ``CodegenFallback`` expressions in Spark 4.1, so
-inside a whole-stage-codegen stage they are interpreted per row, lambda by
-lambda; the Arrow/NumPy kernels (``knn.flat_knn_fast``,
-``lsh.bucket_kernel``) are the vectorized alternative. Inputs are cast to
-``array<double>`` so both engines accumulate in float64 and hash-match
-after rounding.
+Three forms of the same contract live here:
+  - ``distance_expr``: Column expressions over ``array<float>`` built from
+    ``zip_with``/``aggregate``, JVM-side. ``ZipWith`` and ``ArrayAggregate``
+    are ``CodegenFallback`` expressions in Spark 4.1, so inside a
+    whole-stage codegen stage they are interpreted per row, lambda by
+    lambda. Inputs are cast to ``array<double>`` so Spark and DuckDB both
+    accumulate in float64.
+  - ``oracle_distance_sql``: the same distances as DuckDB SQL, 1:1 with
+    ``distance_expr``.
+  - the NumPy form for Arrow kernels: :func:`arrow_embeddings` decodes an
+    ``embedding`` list column, :func:`distance_matrix` scores it against a
+    query matrix, and :func:`round6` applies the 6-dp rule. The exact-scan
+    kernel in ``operators/knn.py`` and the LSH sign-pack in
+    ``operators/lsh.py`` are built on them.
 
 All distances are computed in double and, when ``round_to`` is given,
-rounded half-up and normalized (+0.0) so Spark and DuckDB produce
-bit-identical doubles (-0.0 folds to +0.0; ties then break on id columns).
+rounded half away from zero and normalized (+0.0) so Spark and DuckDB
+produce bit-identical doubles (-0.0 folds to +0.0; ties then break on id
+columns). :func:`round6` is the NumPy twin of DuckDB's ``round(x, 6) + 0.0``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -83,7 +90,8 @@ def distance_expr(metric: str, v: Column, q: Column, round_to: int | None = 6) -
 
 
 def normalize_float(c: Column, round_to: int | None = 6) -> Column:
-    """Round half-up and fold -0.0 to +0.0 so engine and oracle hash-match."""
+    """Round to ``round_to`` dp and fold -0.0 to +0.0 so engine and oracle
+    hash-match."""
     if round_to is not None:
         c = F.round(c, round_to)
     return c + F.lit(0.0)
@@ -115,3 +123,47 @@ def oracle_distance_sql(metric: str, v: str, q: str, round_to: int | None = 6) -
     if round_to is not None:
         d = f"round({d}, {round_to})"
     return f"({d} + 0.0)"
+
+
+def round6(a: np.ndarray) -> np.ndarray:
+    """NumPy twin of DuckDB's ``round(x, 6) + 0.0``: half away from zero
+    (``np.round`` rounds half to even), ±inf and NaN kept, -0.0 folded to
+    +0.0. Every 6-dp rounding in a NumPy kernel goes through here."""
+    return np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6 + 0.0
+
+
+def arrow_embeddings(emb, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """Decode one Arrow batch's ``embedding`` list column into ``(ok, m)``:
+    ``ok`` marks the rows whose embedding is non-NULL, has ``dim``
+    elements and no NULL element, and ``m`` is those rows as a float64
+    ``(ok.sum(), dim)`` matrix. The other rows are the ones whose
+    :func:`distance_expr` is NULL. NULL elements are read from the validity
+    bitmap, before NumPy would turn them into NaN."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ok = pc.fill_null(pc.list_value_length(emb), -1).to_numpy() == dim
+    vals = emb.filter(pa.array(ok)).flatten()  # dim values per kept row
+    m = vals.to_numpy(zero_copy_only=False).reshape(-1, dim)
+    if vals.null_count:
+        has_null = vals.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(axis=1)
+        ok[np.flatnonzero(ok)[has_null]] = False
+        m = m[~has_null]
+    return ok, m.astype(np.float64)
+
+
+def distance_matrix(metric: str, m: np.ndarray, q: np.ndarray) -> np.ndarray:
+    """Unrounded ``(len(m), len(q))`` distances of the rows of ``m`` to the
+    queries ``q`` (both float64), with :func:`distance_expr`'s formulas.
+    Euclidean is a per-query difference norm: the ``|v|^2 - 2vq + |q|^2``
+    GEMM form cancels catastrophically on near-identical vectors."""
+    if metric == "euclidean":
+        return np.stack([np.linalg.norm(m - qj, axis=1) for qj in q], axis=1)
+    if metric not in METRICS:
+        raise ValueError(f"unknown distance metric: {metric!r}; expected one of {METRICS}")
+    sims = m @ q.T
+    if metric == "dot_product":
+        return -sims
+    denom = np.linalg.norm(m, axis=1)[:, None] * np.linalg.norm(q, axis=1)[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, np.inf, 1.0 - sims / denom)

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from . import _memo
 from ..functions.hashing import MERSENNE31, hash31, hash31_sql, minhash_params
 from ..functions.text import tokens
-from ..functions.vector import distance_expr, normalize_float, oracle_distance_sql
+from ..functions.vector import distance_expr, normalize_float, oracle_distance_sql, round6
 from ..sources.tables import load_table
 
 SHINGLE_WIDTH = 3
@@ -293,31 +293,6 @@ sh AS (SELECT DISTINCT doc_id, {hash31_sql('s')} AS sh
 """.strip()
 
 
-def _jaccard_pairs_cte(threshold: float) -> tuple[str, str]:
-    """(cte_list, final_select) halves of the n-gram Jaccard pairs query,
-    shared by the standalone oracle and the clustering oracle so neither
-    has to slice the other's rendered SQL (a WITH-list and an unordered
-    SELECT compose into both forms structurally)."""
-    ctes = f"""
-{_shingle_index_sql()},
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-""".strip()
-    final = f"""
-SELECT d1, d2, c::DOUBLE / (s1.n + s2.n - c)::DOUBLE AS jaccard
-FROM inter JOIN sizes s1 ON d1 = s1.doc_id JOIN sizes s2 ON d2 = s2.doc_id
-WHERE c::DOUBLE / (s1.n + s2.n - c)::DOUBLE >= {threshold}
-""".strip()
-    return ctes, final
-
-
-def ngram_jaccard_pairs_oracle(threshold: float = 0.3) -> str:
-    ctes, final = _jaccard_pairs_cte(threshold)
-    return f"WITH {ctes}\n{final}\nORDER BY d1, d2"
-
-
 # --------------------------------------------------------------------------
 # Containment near-dup: |A ∩ B| / |A| -- the asymmetric twin of Jaccard
 # that catches a document EMBEDDED in a larger one (quote-expansion,
@@ -350,20 +325,6 @@ def containment_pairs(
         .select("src_doc", "dst_doc", "containment")
         .orderBy("src_doc", "dst_doc")
     )
-
-
-def containment_pairs_oracle(threshold: float = 0.6) -> str:
-    ctes, _ = _jaccard_pairs_cte(threshold)  # sh / sizes / inter CTEs only
-    return f"""
-WITH {ctes},
-dirs AS (SELECT d1 AS src_doc, d2 AS dst_doc, c FROM inter
-         UNION ALL
-         SELECT d2 AS src_doc, d1 AS dst_doc, c FROM inter)
-SELECT src_doc, dst_doc, c::DOUBLE / s.n::DOUBLE AS containment
-FROM dirs JOIN sizes s ON src_doc = s.doc_id
-WHERE c::DOUBLE / s.n::DOUBLE >= {threshold}
-ORDER BY src_doc, dst_doc
-""".strip()
 
 
 def containment_pairs_dfcap(
@@ -796,9 +757,9 @@ def _minhash_pairs_cte(
     band_size: int,
     bucket_cap: int = BUCKET_CAP,
 ) -> tuple[str, str]:
-    """(cte_list, final_select) halves of the MinHash-LSH pairs query --
-    same composition contract as :func:`_jaccard_pairs_cte`, so the
-    clustering oracle reuses the CTE list structurally. Replays all three
+    """(cte_list, final_select) halves of the MinHash-LSH pairs query (a
+    WITH-list and an unordered SELECT), so the clustering oracle reuses
+    the CTE list structurally. Replays all three
     scale guards of :func:`minhash_lsh_pairs` (bucket cap, signature
     pre-filter, exact verify) so both engines see identical pairs."""
     params = minhash_params(num_hashes)
@@ -885,7 +846,7 @@ def simhash_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash_body_sql() -> str:
     """Unordered (doc_id, simhash) SELECT -- the structural building block
     shared by the table oracle and both pair oracles (no rendered-string
-    slicing; same composition discipline as _jaccard_pairs_cte)."""
+    slicing)."""
     bit_sums = ",\n       ".join(
         f"sum(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}"
         for i in range(SIMHASH_BITS)
@@ -1034,7 +995,7 @@ def _neardup_blocks(df: DataFrame, block_col: str, threshold: float) -> DataFram
         u = m / norms[:, None]
         g = u @ u.T
         iu, ju = np.triu_indices(len(ids), k=1)
-        sims = np.round(g[iu, ju], 6) + 0.0
+        sims = round6(g[iu, ju])
         v1 = np.minimum(ids[iu], ids[ju])
         v2 = np.maximum(ids[iu], ids[ju])
         mask = sims >= threshold
@@ -1097,27 +1058,6 @@ def embedding_neardup(
         .filter(F.col("cos_sim") >= threshold)
         .orderBy("v1", "v2")
     )
-
-
-def _embedding_pairs_cte(threshold: float) -> tuple[str, str]:
-    """(cte_body, final_select) halves of the embedding pair SQL, shared by
-    the pairs report and the clustering oracle (no rendered-string surgery)."""
-    norm = "sqrt(list_inner_product(v, v))"
-    ctes = f"""e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-n AS (SELECT vec_id, label,
-             CASE WHEN {norm} = 0 THEN v
-                  ELSE list_transform(v, x -> x / {norm}) END AS u
-      FROM e)"""
-    final = f"""SELECT a.vec_id AS v1, b.vec_id AS v2,
-       (round(list_inner_product(a.u, b.u), 6) + 0.0) AS cos_sim
-FROM n a JOIN n b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE (round(list_inner_product(a.u, b.u), 6) + 0.0) >= {threshold}"""
-    return ctes, final
-
-
-def embedding_neardup_oracle(threshold: float = 0.4) -> str:
-    ctes, final = _embedding_pairs_cte(threshold)
-    return f"WITH {ctes}\n{final}\nORDER BY v1, v2"
 
 
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0.3) -> DataFrame:
@@ -1568,9 +1508,9 @@ def neardup_clusters_minhash_oracle(
 
 def _dfcap_pairs_cte(threshold: float = 0.3, max_df: int = 3) -> tuple[str, str]:
     """(cte_list, final_select) halves of the df-capped Jaccard pairs
-    query -- same composition contract as :func:`_jaccard_pairs_cte`, so
-    the clustering and corpus-prep oracles compose the flagship capped
-    form instead of the uncapped self-join."""
+    query (a WITH-list and an unordered SELECT), so the clustering and
+    corpus-prep oracles compose the flagship capped form instead of the
+    uncapped self-join."""
     ctes = f"""
 {_shingle_index_sql()},
 dfc AS (SELECT sh FROM (SELECT sh, count(*) AS df FROM sh GROUP BY sh) WHERE df <= {max_df}),

@@ -23,14 +23,29 @@ Spark-first design:
     ``k * num_partitions`` rows per query -- tiny. A single window over
     query_id alone would funnel the full candidate set for one query through
     one task, which dies at cluster scale.
+  - The ``_fast`` paths (``flat_knn_fast``, ``batch_knn_fast``,
+    ``hard_negatives_fast``) share one NumPy exact-scan kernel,
+    :func:`_local_topk`: a partition-local top-k per query in
+    ``mapInArrow``, then one global top-k over the survivors. It uses the NumPy form of the
+    distance contract in ``functions/vector.py`` (Arrow decode, metric
+    formulas, ``round6``), so each ``_fast`` path rounds as the DuckDB
+    oracle does and answers like its expression twin.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import distance_expr, oracle_distance_sql
+from ..functions.vector import (
+    arrow_embeddings,
+    distance_expr,
+    distance_matrix,
+    oracle_distance_sql,
+    round6,
+)
 from ..sources.tables import arrow_local_df, load_table
 from . import _memo
 
@@ -151,6 +166,90 @@ LIMIT {k}
 """.strip()
 
 
+def _local_topk(
+    emb: DataFrame,
+    metric: str,
+    qids: "np.ndarray",
+    qmat: "np.ndarray",
+    k: int,
+    qlabels: "np.ndarray | None" = None,
+) -> DataFrame:
+    """The exact-scan kernel behind the ``_fast`` paths: ``(query_id,
+    vec_id, distance)`` survivors, at most k per query (``qids[j]``, vector
+    ``qmat[j]``) per Arrow batch, under :func:`flat_knn`'s contract.
+
+    The partition-local half of REPOSE's shape; one global top-k over the
+    ``<= k * num_batches`` survivors per query (:func:`_global_topk`, or a
+    TakeOrderedAndProject for one query) completes it. Each ``mapInArrow``
+    batch is decoded once, scored against every query in one
+    :func:`distance_matrix` call (the driver-side query matrix rides in
+    the task closure), rounded by :func:`round6`, and cut to each query's
+    tie-inclusive local top-k. A row whose embedding is NULL, of the wrong
+    length or with a NULL element gets a NULL distance and sorts first, as
+    an ascending ``orderBy`` on :func:`distance_expr` puts it. With
+    ``qlabels``, a row competes for query j only when its ``label`` is
+    non-NULL and differs from ``qlabels[j]``."""
+    import numpy as np
+    import pyarrow as pa
+
+    if k <= 0:
+        raise ValueError("k must be > 0")
+
+    def local_topk(it):
+        for batch in it:
+            if not batch.num_rows or not len(qids):
+                continue
+            ok, m = arrow_embeddings(batch.column("embedding"), qmat.shape[1])
+            d = np.full((batch.num_rows, len(qids)), -np.inf)  # NULL rows first
+            d[ok] = round6(distance_matrix(metric, m, qmat))
+            ids = batch.column("vec_id").to_numpy(zero_copy_only=False)
+            if qlabels is not None:
+                labs = batch.column("label")
+                lab_ok = labs.is_valid().to_numpy(zero_copy_only=False)
+                labs = labs.fill_null(0).to_numpy(zero_copy_only=False)
+            tops, cols = [], []
+            for j in range(len(qids)):
+                if qlabels is None:
+                    rows = np.arange(len(ids))
+                else:
+                    rows = np.flatnonzero(lab_ok & (labs != qlabels[j]))
+                if len(rows) > 4 * k:
+                    # O(n) pre-select before the lexsort: keep every row not
+                    # above the k-th smallest distance -- ties included, so
+                    # the id tie-break stays exact under any partitioning
+                    dj = d[rows, j]
+                    rows = rows[~(dj > np.partition(dj, k - 1)[k - 1])]
+                top = rows[np.lexsort((ids[rows], d[rows, j], ok[rows]))][:k]
+                tops.append(top)
+                cols.append(np.full(len(top), j))
+            rows, cols = np.concatenate(tops), np.concatenate(cols)
+            if len(rows):
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(qids[cols], pa.int64()),
+                        pa.array(ids[rows], pa.int64()),
+                        pa.array(d[rows, cols], pa.float64(), mask=~ok[rows]),
+                    ],
+                    names=["query_id", "vec_id", "distance"],
+                )
+
+    cols = ["vec_id", "embedding"] + (["label"] if qlabels is not None else [])
+    return emb.select(*cols).mapInArrow(
+        local_topk, "query_id long, vec_id long, distance double"
+    )
+
+
+def _global_topk(survivors: DataFrame, k: int) -> DataFrame:
+    """Rank each query's :func:`_local_topk` survivors and keep the top k.
+    A window over ``query_id`` alone is safe here (unlike over the raw
+    scored set, see :func:`batch_knn`): it sees <= k * num_batches rows per
+    query."""
+    w = Window.partitionBy("query_id").orderBy("distance", "vec_id")
+    return survivors.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
+    )
+
+
 def flat_knn_fast(
     spark: SparkSession,
     sf_dir: str,
@@ -159,9 +258,9 @@ def flat_knn_fast(
     query_vec_id: int = 0,
     label_filter: int | None = None,
 ) -> DataFrame:
-    """Scale path for exact k-NN: per-partition NumPy top-k via mapInPandas
-    (one Arrow transfer per batch, BLAS distance kernel), then a global
-    top-k over the <= k * num_partitions survivors.
+    """Scale path for exact k-NN: :func:`flat_knn` through the NumPy
+    exact-scan kernel :func:`_local_topk` with one query, then a
+    TakeOrderedAndProject over the survivors.
 
     Same semantics and rounding contract as :func:`flat_knn` (identical
     output on the oracle comparison); the expression path keeps the
@@ -170,51 +269,13 @@ def flat_knn_fast(
     O(n) interpreted lambdas and O(n/batch) vectorized kernels at 100 TB.
     """
     import numpy as np
-    import pandas as pd
 
-    if k <= 0:
-        raise ValueError("k must be > 0")
     emb = load_table(spark, sf_dir, EMB)
     if label_filter is not None:
         emb = emb.filter(F.col("label") == label_filter)
-    qrow = (
-        load_table(spark, sf_dir, EMB)
-        .filter(F.col("vec_id") == query_vec_id)
-        .select("embedding")
-        .collect()
-    )
-    q = np.asarray([float(x) for x in qrow[0]["embedding"]], dtype=np.float64)
-
-    def local_topk(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            if metric == "cosine":
-                nv = np.linalg.norm(m, axis=1)
-                nq = np.linalg.norm(q)
-                denom = nv * nq
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    d = np.where(denom == 0.0, np.inf, 1.0 - (m @ q) / denom)
-            elif metric == "euclidean":
-                d = np.linalg.norm(m - q, axis=1)
-            else:
-                d = -(m @ q)
-            d = np.round(d, 6) + 0.0
-            ids = pdf["vec_id"].to_numpy()
-            if len(d) > 4 * k:
-                # O(n) pre-select, tie-inclusive (see batch_knn_fast)
-                kth = np.partition(d, k - 1)[k - 1]
-                sel = np.flatnonzero(d <= kth)
-                order = sel[np.lexsort((ids[sel], d[sel]))][:k]
-            else:
-                order = np.lexsort((ids, d))[:k]
-            yield pd.DataFrame({"vec_id": ids[order], "distance": d[order]})
-
-    survivors = emb.select("vec_id", "embedding").mapInPandas(
-        local_topk, "vec_id long, distance double"
-    )
-    return survivors.orderBy("distance", "vec_id").limit(k)
+    q = np.asarray([query_vector(spark, sf_dir, query_vec_id)], dtype=np.float64)
+    survivors = _local_topk(emb, metric, np.asarray([query_vec_id], dtype=np.int64), q, k)
+    return survivors.select("vec_id", "distance").orderBy("distance", "vec_id").limit(k)
 
 
 def batch_knn(
@@ -278,11 +339,9 @@ def batch_knn_fast(
     k: int = 5,
     num_queries: int = 8,
 ) -> DataFrame:
-    """Scale path for multi-query k-NN: one BLAS GEMM (``m @ Q.T``) per
-    Arrow batch scores ALL queries against the batch at once, followed by a
-    per-(query, batch) NumPy top-k -- the batch twin of
-    :func:`flat_knn_fast` with identical semantics and the same oracle as
-    :func:`batch_knn`.
+    """Scale path for multi-query k-NN: :func:`batch_knn` through the
+    exact-scan kernel :func:`_local_topk`, which scores ALL queries against
+    each Arrow batch at once, with the same oracle as :func:`batch_knn`.
 
     The query matrix is bounded by construction (``num_queries`` rows
     collected once, shipped in the task closure), the scan side streams
@@ -292,73 +351,9 @@ def batch_knn_fast(
     (vector_db/vector_store.py:30,237): amortizing the scan across the
     whole query batch costs one matrix product instead of Q scans.
     """
-    import numpy as np
-    import pandas as pd
-
-    if k <= 0:
-        raise ValueError("k must be > 0")
-    emb = load_table(spark, sf_dir, EMB)
     qids, qmat = _query_matrix(spark, sf_dir, num_queries)
-    qnorm = np.linalg.norm(qmat, axis=1)
-
-    def local_topk(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            if metric == "euclidean":
-                # per-query difference norm: the |v|^2 - 2vq + |q|^2 GEMM
-                # trick cancels catastrophically for near-identical
-                # vectors; Q is small, so Q vectorized passes stay cheap
-                dmat = np.stack(
-                    [np.linalg.norm(m - qmat[j], axis=1) for j in range(len(qids))],
-                    axis=1,
-                )
-            else:
-                sims = m @ qmat.T
-                if metric == "cosine":
-                    nv = np.linalg.norm(m, axis=1)
-                    denom = nv[:, None] * qnorm[None, :]
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        dmat = np.where(denom == 0.0, np.inf, 1.0 - sims / denom)
-                else:
-                    dmat = -sims
-            dmat = np.round(dmat, 6) + 0.0
-            out_q, out_v, out_d = [], [], []
-            for j in range(len(qids)):
-                d = dmat[:, j]
-                if len(d) > 4 * k:
-                    # O(n) pre-select before the O(m log m) lexsort: keep
-                    # every row whose distance <= the k-th smallest value
-                    # (ties INCLUDED, so the id tie-break below stays exact)
-                    kth = np.partition(d, k - 1)[k - 1]
-                    sel = np.flatnonzero(d <= kth)
-                    order = sel[np.lexsort((ids[sel], d[sel]))][:k]
-                else:
-                    order = np.lexsort((ids, d))[:k]
-                out_q.append(np.full(len(order), qids[j], dtype=np.int64))
-                out_v.append(ids[order])
-                out_d.append(d[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_v),
-                    "distance": np.concatenate(out_d),
-                }
-            )
-
-    survivors = emb.select("vec_id", "embedding").mapInPandas(
-        local_topk, "query_id long, vec_id long, distance double"
-    )
-    # survivors <= k * num_batches per query -- a window over query_id alone
-    # is safe here (unlike over the raw scored set, see batch_knn docstring)
-    global_w = Window.partitionBy("query_id").orderBy("distance", "vec_id")
-    return (
-        survivors.withColumn("rank", F.row_number().over(global_w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "distance", "rank")
-    )
+    survivors = _local_topk(load_table(spark, sf_dir, EMB), metric, qids, qmat, k)
+    return _global_topk(survivors, k).select("query_id", "vec_id", "distance", "rank")
 
 
 def radius_search(
@@ -624,25 +619,37 @@ def knn_mmr_rerank(
     short.unpersist()
     sim = {(r["a"], r["b"]): r["sim"] for r in pair_rows}
     # greedy selection: first pick = max rel (ties -> smallest vec_id),
-    # later picks maximize lam*rel - (1-lam)*maxsim over the chosen set
-    first = max(rel, key=lambda v: (rel[v], -v))
-    sel = [(1, first, rel[first], lam * rel[first])]
+    # later picks maximize lam*rel - (1-lam)*maxsim over the chosen set;
+    # NaN orders as the largest score, as in Spark and DuckDB (a zero-norm
+    # row scores -inf + inf = NaN), and at most len(rel) rows are picked
+    def best(score: dict[int, float]) -> int:
+        nan = {v for v, x in score.items() if math.isnan(x)}
+        if nan:
+            return min(nan)
+        return max(score, key=lambda v: (score[v], -v))
+
+    sel: list[tuple[int, int, float, float]] = []
     maxsim: dict[int, float] = {}
-    for i in range(2, k + 1):
-        last = sel[-1][1]
-        for v in rel:
-            if v != last:
-                s = sim[(v, last)]
-                if v not in maxsim or s > maxsim[v]:
-                    maxsim[v] = s
-        chosen = {r[1] for r in sel}
-        cand = {
-            v: lam * rel[v] - (1.0 - lam) * maxsim[v]
-            for v in rel
-            if v not in chosen
-        }
-        pick = max(cand, key=lambda v: (cand[v], -v))
-        sel.append((i, pick, rel[pick], cand[pick]))
+    for i in range(1, min(k, len(rel)) + 1):
+        if not sel:
+            pick = best(rel)
+            score = lam * rel[pick]
+        else:
+            last = sel[-1][1]
+            for v in rel:
+                if v != last:
+                    s = sim[(v, last)]
+                    if v not in maxsim or s > maxsim[v] or math.isnan(s):
+                        maxsim[v] = s
+            chosen = {r[1] for r in sel}
+            cand = {
+                v: lam * rel[v] - (1.0 - lam) * maxsim[v]
+                for v in rel
+                if v not in chosen
+            }
+            pick = best(cand)
+            score = cand[pick]
+        sel.append((i, pick, rel[pick], score))
     local = arrow_local_df(
         spark,
         {
@@ -784,18 +791,12 @@ def hard_negatives_fast(
     anchor_mod: int = HN_ANCHOR_MOD,
 ) -> DataFrame:
     """Scale path for :func:`hard_negatives` -- identical semantics and
-    oracle, executed as one BLAS GEMM (``m @ A.T``) per Arrow batch over
-    the bounded anchor matrix (n / anchor_mod rows, collected once and
-    shipped in the task closure), a per-(anchor, batch) NumPy top-k with
-    the same-label mask applied in the kernel, then a global per-anchor
-    window over the <= k * P survivors. The batch_knn_fast discipline:
-    zero-norm rows keep +inf distances (they are legitimate cosine
-    candidates), ties break (distance, vec_id), round-6dp before ranking
-    so quantized ties resolve identically to the expression twin."""
+    oracle, executed by the exact-scan kernel :func:`_local_topk` over the
+    bounded anchor matrix (n / anchor_mod rows, collected once and shipped
+    in the task closure), with the same-label mask applied in the kernel.
+    Zero-norm rows keep +inf distances (they are legitimate cosine
+    candidates) and ties break on (distance, vec_id)."""
     import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, EMB)
     arows = (
@@ -808,63 +809,9 @@ def hard_negatives_fast(
     A = np.asarray(
         [[float(x) for x in r["embedding"]] for r in arows], dtype=np.float64
     )
-    anorm = np.linalg.norm(A, axis=1)
-
-    def local_topk(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            ids = pdf["vec_id"].to_numpy()
-            labs = pdf["label"].to_numpy()
-            nv = np.linalg.norm(m, axis=1)
-            denom = nv[:, None] * anorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                d = np.where(denom == 0.0, np.inf, 1.0 - (m @ A.T) / denom)
-            # explicit half-UP (floor(x*1e6+0.5)), not np.round's
-            # half-to-even: F.round / DuckDB round are HALF_UP on an
-            # exact .5 at the 6th decimal, and this kernel is the
-            # REGISTERED gated path (the Lloyd d^2 lesson, ivf.py
-            # ALGO_VERSION v3->v4); cosine distance is non-negative so
-            # half-up == half-away-from-zero, and floor(inf)=inf keeps
-            # the zero-norm rows' +inf intact
-            d = np.floor(d * 1e6 + 0.5) / 1e6 + 0.0
-            out_a: list[int] = []
-            out_v: list[int] = []
-            out_d: list[float] = []
-            for j in range(len(aid)):
-                mask = labs != alab[j]
-                dj = d[mask, j]
-                vj = ids[mask]
-                if not len(dj):
-                    continue
-                if len(dj) > 4 * k:
-                    # O(n) pre-select, tie-inclusive (batch_knn_fast)
-                    kth = np.partition(dj, k - 1)[k - 1]
-                    sel = np.flatnonzero(dj <= kth)
-                    order = sel[np.lexsort((vj[sel], dj[sel]))][:k]
-                else:
-                    order = np.lexsort((vj, dj))[:k]
-                out_a.extend([int(aid[j])] * len(order))
-                out_v.extend(int(v) for v in vj[order])
-                out_d.extend(float(x) for x in dj[order])
-            if out_a:
-                yield pd.DataFrame(
-                    {
-                        "anchor_id": np.asarray(out_a, dtype=np.int64),
-                        "vec_id": np.asarray(out_v, dtype=np.int64),
-                        "distance": np.asarray(out_d, dtype=np.float64),
-                    }
-                )
-
-    survivors = emb.select("vec_id", "embedding", "label").mapInPandas(
-        local_topk, "anchor_id long, vec_id long, distance double"
-    )
-    w = Window.partitionBy("anchor_id").orderBy("distance", "vec_id")
     return (
-        survivors.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("anchor_id", "rank", "vec_id", "distance")
+        _global_topk(_local_topk(emb, "cosine", aid, A, k, qlabels=alab), k)
+        .select(F.col("query_id").alias("anchor_id"), "rank", "vec_id", "distance")
         .orderBy("anchor_id", "rank")
     )
 

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from . import _memo
 
-from ..functions.vector import distance_expr, dot, oracle_distance_sql
+from ..functions.vector import arrow_embeddings, distance_expr, dot, oracle_distance_sql
 from ..sources.tables import load_table
 
 NUM_PROJECTIONS = 8
@@ -101,23 +101,12 @@ def _sign_pack(m: np.ndarray, p: np.ndarray) -> np.ndarray:
 
 def _buckets(emb, p: np.ndarray) -> np.ndarray:
     """int32 bucket of each embedding in one Arrow batch's list column. A
-    NULL embedding, one with a NULL element, or one whose length is not the
-    projection width gets bucket 0 as in :func:`bucket_expr` (its dot
-    products are NULL). NULL elements are read from the validity bitmap,
-    before NumPy would turn them into NaN."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    dim = p.shape[1]
-    ok = pc.fill_null(pc.list_value_length(emb), -1).to_numpy() == dim
-    vals = emb.filter(pa.array(ok)).flatten()  # dim values per kept row
-    m = vals.to_numpy(zero_copy_only=False).reshape(-1, dim)
-    if vals.null_count:
-        has_null = vals.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(axis=1)
-        ok[np.flatnonzero(ok)[has_null]] = False
-        m = m[~has_null]
+    row that :func:`arrow_embeddings` rejects (NULL, wrong length, NULL
+    element) gets bucket 0 as in :func:`bucket_expr`, whose dot products
+    are NULL there."""
+    ok, m = arrow_embeddings(emb, p.shape[1])
     out = np.zeros(len(emb), dtype=np.int32)
-    out[ok] = _sign_pack(m.astype(np.float64), p)
+    out[ok] = _sign_pack(m, p)
     return out
 
 

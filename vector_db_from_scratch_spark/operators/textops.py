@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..functions.vector import round6
 from ..sources.tables import load_table
 
 
@@ -1321,11 +1322,7 @@ def char_entropy(spark: SparkSession, sf_dir: str, fast: bool = True) -> DataFra
                     {
                         "doc_id": pdf["doc_id"],
                         "n_chars_total": n_chars,
-                        # half-up to match F.round / DuckDB round (np.round
-                        # is half-to-even -- a value landing exactly on a
-                        # 6-dp boundary would hash-mismatch the gate)
-                        "entropy_bits": np.floor(np.array(ents) * 1e6 + 0.5) / 1e6
-                        + 0.0,
+                        "entropy_bits": round6(np.array(ents)),
                     }
                 )
 

@@ -258,21 +258,22 @@ def build() -> dict[str, Entry]:
         lambda spark, sf: knn.flat_knn(spark, sf, "cosine", k=5, query_literal=ZERO64),
         knn.flat_knn_oracle("cosine", k=5, query_literal=ZERO64),
     )
-    # scale fast path: mapInPandas local top-k; SAME oracle as the
+    # scale fast path: the NumPy exact-scan kernel (knn._local_topk,
+    # mapInArrow local top-k + one global merge); SAME oracle as the
     # expression form -- both must produce identical rounded results
     reg["knn_cosine_flat_fast"] = (
         lambda spark, sf: knn.flat_knn_fast(spark, sf, "cosine", k=10, query_vec_id=0),
         knn.flat_knn_oracle("cosine", k=10, query_vec_id=0),
     )
-    # the same BLAS batch kernel proven for the other two metrics
+    # the same exact-scan kernel proven for the other two metrics
     for _m in ("euclidean", "dot_product"):
         reg[f"knn_{_m}_flat_fast"] = (
             (lambda m: lambda spark, sf: knn.flat_knn_fast(spark, sf, m, k=10, query_vec_id=0))(_m),
             knn.flat_knn_oracle(_m, k=10, query_vec_id=0),
         )
-    # multi-query batch (beyond-reference): one GEMM per Arrow batch scores
-    # all queries at once, then the two-phase distributed top-k; same
-    # oracle as the declarative twin below
+    # multi-query batch (beyond-reference): the exact-scan kernel scores
+    # all queries against each Arrow batch at once, then the two-phase
+    # distributed top-k; same oracle as the declarative twin below
     reg["knn_batch"] = (
         lambda spark, sf: knn.batch_knn_fast(spark, sf, "cosine", k=5, num_queries=8),
         knn.batch_knn_oracle("cosine", k=5, num_queries=8),
@@ -823,8 +824,9 @@ def build() -> dict[str, Entry]:
     reg["graph_hits_topn"] = (graph.hits_topn, graph.hits_topn_oracle())
     # hard-negative mining: per anchor, the k nearest OTHER-label vectors
     # (the contrastive-training negatives worth training on)
-    # routed through the Arrow GEMM kernel (batch_knn_fast discipline);
-    # the expression twin stays pinned bit-equal in tests/test_knn
+    # routed through the exact-scan kernel behind every knn _fast path,
+    # with the same-label mask applied in the kernel; the expression twin
+    # stays pinned bit-equal in tests/test_knn
     reg["knn_hard_negatives"] = (
         knn.hard_negatives_fast,
         knn.hard_negatives_oracle(),

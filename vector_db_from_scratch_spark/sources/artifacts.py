@@ -33,13 +33,13 @@ def scratch_dir(prefix: str) -> str:
     return path
 
 
-def write_partitioned(df, path: str, *cols: str, mode: str = "overwrite") -> None:
-    """``partitionBy(*cols)`` parquet write, pre-repartitioned BY THE
-    PARTITION COLUMNS so directory/file creation parallelizes across
-    tasks and each partition directory gets exactly one file (guide §6:
-    cluster by the partition key before the write -- Iceberg's
-    ``write.distribution-mode=hash`` is the table-format form of the same
-    move). The index/layout artifacts here are built from cached or
+def write_partitioned(df, path: str, *cols: str) -> None:
+    """``partitionBy(*cols)`` parquet overwrite of ``path``, pre-repartitioned
+    BY THE PARTITION COLUMNS so directory/file creation parallelizes across
+    tasks and each write leaves exactly one file in each partition
+    directory (guide §6: cluster by the partition key before the write --
+    Iceberg's ``write.distribution-mode=hash`` is the table-format form of
+    the same move). The index/layout artifacts here are built from cached or
     single-file sources that arrive as ONE Spark partition, so the bare
     write emitted every partition directory from a single task at
     ~50-100ms of per-file create/commit latency apiece -- measured 3-5x
@@ -51,7 +51,7 @@ def write_partitioned(df, path: str, *cols: str, mode: str = "overwrite") -> Non
     (small here, and at 100 TB the shuffle is what buys file-count
     hygiene)."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    df.repartition(n, *cols).write.mode(mode).partitionBy(*cols).parquet(path)
+    df.repartition(n, *cols).write.mode("overwrite").partitionBy(*cols).parquet(path)
 
 
 def discard_corrupt_artifact(path: str) -> None:
