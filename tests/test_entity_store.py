@@ -299,7 +299,9 @@ def test_entity_calls_eager_job_counts(spark):
     join inside that job (AQE would add a job per query stage). Building
     a flat or filtered search runs no job, an LSH search only its <k
     fallback count, add_chunks one lookup and update_chunk one lookup,
-    with or without a new embedding to validate."""
+    with or without a new embedding to validate. delete_chunk and a text
+    update of a delta chunk run none, and neither does building a flat
+    search over a written store (its delta relation is local)."""
     import uuid
 
     sc = spark.sparkContext
@@ -328,6 +330,11 @@ def test_entity_calls_eager_job_counts(spark):
         assert jobs(lambda: store.add_chunks([row])) == 1
         assert jobs(lambda: store.update_chunk("ch-2", {"embedding": [0.9, 0.1, 0.0]})) == 1
         assert jobs(lambda: store.update_chunk("ch-2", {"text": "t2"})) == 1
+        assert jobs(lambda: store.delete_chunk("ch-2")) == 0
+        written = store.add_chunks([row])
+        assert jobs(lambda: written.update_chunk("new-jobs", {"text": "t2"})) == 0
+        written = written.update_chunk("ch-2", {"embedding": [0.9, 0.1, 0.0]}).delete_chunk("ch-3")
+        assert jobs(lambda: written.search("lib-cos", q, k=3)) == 0
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
@@ -360,3 +367,186 @@ def test_write_guards_raise_in_order_after_one_lookup(store):
     )
     with pytest.raises(NotFoundError, match="document doc-a not found"):
         orphaned.update_chunk("ch-1", {"embedding": [1.0, 0.0, 0.0]})
+
+
+@pytest.mark.parametrize("method,target", [
+    ("update_chunk", "ch-1"),
+    ("update_document", "doc-a"),
+    ("update_library", "lib-cos"),
+])
+def test_update_unknown_field_raises_entity_error(store, method, target):
+    """A key outside the table's columns is an EntityError naming it, raised
+    where the frozen-field check raises: after NotFound, after Frozen."""
+    with pytest.raises(EntityError, match="unknown .* field: colour") as err:
+        getattr(store, method)(target, {"colour": "red"})
+    assert type(err.value) is EntityError
+    with pytest.raises(NotFoundError):
+        getattr(store, method)("missing", {"colour": "red"})
+    frozen = {"update_chunk": "chunk_id", "update_document": "document_id",
+              "update_library": "library_id"}[method]
+    with pytest.raises(FrozenFieldError):
+        getattr(store, method)(target, {"colour": "red", frozen: "x"})
+
+
+def _round6_spark(x: float) -> float:
+    """Spark's ``round(x, 6) + 0.0`` on a double: HALF_UP on the shortest
+    decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    if not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)) + 0.0
+
+
+def _cosine_model(v, q) -> float:
+    dot = lambda a, b: sum(float(x) * float(y) for x, y in zip(a, b))  # noqa: E731
+    denom = math.sqrt(dot(v, v)) * math.sqrt(dot(q, q))
+    return math.inf if denom == 0.0 else 1.0 - dot(v, q) / denom
+
+
+@pytest.mark.parametrize("seed,compact_at", [(0, None), (1, 6)])
+def test_delta_store_matches_dict_model(spark, monkeypatch, seed, compact_at):
+    """Seeded add/update/delete sequences against a dict model. A fixed
+    prefix covers updates and deletes of delta rows, a re-add after a
+    delete, duplicates against a delta row and an updated base row, and an
+    update after a delete; random steps follow. After every step: flat
+    search equals the model's exact top-k, and the chunk count, listing,
+    library counts and embeddings read back equal the model. The second
+    sequence lowers the compaction threshold so the delta folds into a
+    new base along the way."""
+    import numpy as np
+
+    from vector_db_from_scratch_spark.operators import entity
+
+    if compact_at is not None:
+        monkeypatch.setattr(entity, "COMPACT_AT", compact_at)
+    rng = np.random.default_rng(seed)
+    doc_lib = {"doc-a": "lib-cos", "doc-b": "lib-cos", "doc-e": "lib-euc",
+               "doc-d": "lib-dot", "doc-l": "lib-lsh", "doc-s": "lib-lsh-seeded"}
+    # checkpointed, so no step re-reads the fixture's pickled rows through
+    # Python workers
+    fixture = demo_store(spark)
+    store = entity.EntityStore(*(df.localCheckpoint() for df in (
+        fixture.libraries, fixture.documents, fixture.chunks)))
+    model = {r["chunk_id"]: (r["document_id"], r["text"], [float(x) for x in r["embedding"]])
+             for r in store.chunks.collect()}
+    dead: list[str] = []
+    compactions = 0
+    n_new = 0
+
+    def vec():  # dyadic k/8: exact in float32, exact dot products
+        return [float(x) for x in rng.integers(-8, 9, 3) / 8]
+
+    def add(doc, ids):
+        rows = [dict(chunk_id=c, document_id=doc, text=f"t-{c}", embedding=vec(),
+                     metadata={}, chunk_index=i) for i, c in enumerate(ids)]
+        return rows, lambda st: st.add_chunks(rows)
+
+    def check(st):
+        q = vec()
+        got = [(r["chunk_id"], r["distance"]) for r in st.search("lib-cos", q, k=5).collect()]
+        scored = sorted((_round6_spark(_cosine_model(e, q)), c)
+                        for c, (d, _, e) in model.items() if doc_lib[d] == "lib-cos")
+        assert got == [(c, d) for d, c in scored[:5]]
+        assert st.chunks.count() == len(model)
+        listed = [(r["chunk_id"], r["document_id"], r["text"])
+                  for r in st.list_chunks(library_id="lib-cos", limit=1000).collect()]
+        assert listed == sorted((c, d, t) for c, (d, t, _) in model.items()
+                                if doc_lib[d] == "lib-cos")
+        counts = {r["library_id"]: r["chunk_count"] for r in st.library_counts().collect()}
+        want = {lib: 0 for lib in set(doc_lib.values())}
+        for d, _, _ in model.values():
+            want[doc_lib[d]] += 1
+        assert counts == want
+        back = {r["chunk_id"]: [float(x) for x in r["embedding"]]
+                for r in st.chunks.select("chunk_id", "embedding").collect()}
+        assert back == {c: e for c, (_, _, e) in model.items()}
+
+    def step(op, *args):
+        nonlocal store, compactions, n_new
+        if op == "add":
+            doc, ids = args
+            rows, fn = add(doc, ids)
+            new = fn(store)
+            for r in rows:
+                model[r["chunk_id"]] = (doc, r["text"], r["embedding"])
+                if r["chunk_id"] in dead:
+                    dead.remove(r["chunk_id"])
+        elif op == "dup":
+            doc, ids = args
+            with pytest.raises(DuplicateError):
+                add(doc, ids)[1](store)
+            return
+        elif op == "update":
+            cid, field = args
+            value = vec() if field == "embedding" else f"u-{cid}"
+            new = store.update_chunk(cid, {field: value})
+            d, t, e = model[cid]
+            model[cid] = (d, value, e) if field == "text" else (d, t, value)
+        elif op == "update_dead":
+            with pytest.raises(NotFoundError):
+                store.update_chunk(args[0], {"text": "x"})
+            return
+        else:
+            new = store.delete_chunk(args[0])
+            del model[args[0]]
+            dead.append(args[0])
+        if compact_at is not None and not new.delta and not new.tombstones \
+                and new.base is not store.base:
+            compactions += 1
+        store = new
+        check(store)
+
+    prefix = [
+        ("add", "doc-a", ["n-0", "n-1"]),
+        ("update", "n-0", "text"),          # a delta row, no lookup
+        ("update", "n-1", "embedding"),     # a delta row, library known
+        ("delete", "n-0"),                  # a delta row
+        ("delete", "ch-1"),                 # a base row
+        ("update_dead", "ch-1"),
+        ("add", "doc-b", ["ch-1"]),         # re-add after a delete
+        ("dup", "doc-a", ["n-1"]),          # against a delta row
+        ("update", "ch-2", "embedding"),    # a base row moves to the delta
+        ("dup", "doc-b", ["ch-2"]),
+        ("update", "ch-4", "text"),         # library unknown in the delta
+        ("update", "ch-4", "embedding"),    # ... so it is looked up
+    ]
+    for op, *args in prefix:
+        step(op, *args)
+    for _ in range(8):
+        live = sorted(model)
+        kind = rng.choice(["add", "update", "delete", "dead"], p=[0.35, 0.3, 0.25, 0.1])
+        if kind == "add":
+            n_new += 1
+            ids = [f"r-{n_new}-{i}" for i in range(int(rng.integers(1, 4)))]
+            if dead and rng.random() < 0.5:
+                ids.append(dead[0])
+            step("add", str(rng.choice(["doc-a", "doc-b", "doc-e"])), ids)
+        elif kind == "update":
+            step("update", str(rng.choice(live)), str(rng.choice(["text", "embedding"])))
+        elif kind == "delete":
+            step("delete", str(rng.choice(live)))
+        elif dead:
+            step("update_dead", dead[-1])
+    if compact_at is not None:
+        assert compactions >= 1
+
+
+def test_add_chunks_lookup_quotes_ids(spark):
+    """The base lookup's ``chunk_id IN (...)`` text quotes each id: ids with
+    quotes and backslashes are found in the base (DuplicateError) and a
+    tombstone on one of them is honoured."""
+    from vector_db_from_scratch_spark.operators.entity import EntityStore
+
+    odd = ["it's", "back\\slash", "both\\'"]
+    rows = [dict(chunk_id=c, document_id="doc-a", text="t", embedding=[1.0, 0.0, 0.0],
+                 metadata={}, chunk_index=i) for i, c in enumerate(odd)]
+    written = demo_store(spark).add_chunks(rows)
+    rebased = EntityStore(written.libraries, written.documents, written.chunks)
+    for r in rows:
+        with pytest.raises(DuplicateError, match="chunks exist"):
+            rebased.add_chunks([r])
+    gone = rebased.delete_chunk(odd[0])
+    assert {r["chunk_id"] for r in gone.chunks.collect()} >= set(odd[1:])
+    assert gone.chunks.filter(gone.chunks["chunk_id"] == odd[0]).count() == 0
+    assert gone.add_chunks([rows[0]]).chunks.count() == written.chunks.count()

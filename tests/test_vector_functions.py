@@ -96,3 +96,116 @@ def test_round6_equals_duckdb_round():
         np.isnan(got) & np.isnan(want)
     )
     assert same.all(), list(zip(x[~same][:5], got[~same][:5], want[~same][:5]))
+
+
+# The Column builder that distance_expr replaced (one py4j call per literal,
+# operator and lambda), kept verbatim as the reference for the SQL-text form.
+def _ref_dbl(a):
+    return a.cast("array<double>")
+
+
+def _ref_dot(a, b):
+    return F.aggregate(
+        F.zip_with(_ref_dbl(a), _ref_dbl(b), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _ref_l2_norm(a):
+    return F.sqrt(_ref_dot(a, a))
+
+
+def _ref_cosine_distance(v, q):
+    denom = _ref_l2_norm(v) * _ref_l2_norm(q)
+    return F.when(denom == 0.0, F.lit(float("inf"))).otherwise(
+        F.lit(1.0) - _ref_dot(v, q) / denom
+    )
+
+
+def _ref_euclidean_distance(v, q):
+    diff_sq = F.zip_with(_ref_dbl(v), _ref_dbl(q), lambda x, y: (x - y) * (x - y))
+    return F.sqrt(F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x))
+
+
+def _ref_dot_product_distance(v, q):
+    return -_ref_dot(v, q)
+
+
+_REF_DISPATCH = {
+    "cosine": _ref_cosine_distance,
+    "euclidean": _ref_euclidean_distance,
+    "dot_product": _ref_dot_product_distance,
+}
+
+
+def _ref_distance_expr(metric, v, q, round_to=6):
+    d = _REF_DISPATCH[metric](v, q)
+    if round_to is not None:
+        d = F.round(d, round_to)
+    return d + F.lit(0.0)
+
+
+def _hex(x):
+    if x is None:
+        return None
+    return "nan" if math.isnan(x) else float.hex(x)
+
+
+@pytest.fixture(scope="module")
+def distance_rows(spark):
+    """Dyadic k/128 rows, a zero vector, NULL, a 63-element embedding and
+    one with a NULL element, in ``embedding array<float>``."""
+    rng = np.random.default_rng(7)
+    rows = [[float(x) for x in rng.integers(-128, 129, 64) / 128] for _ in range(40)]
+    rows += [[0.0] * 64, None, [0.5] * 63, [0.25] * 31 + [None] + [0.25] * 32]
+    return spark.createDataFrame([(i, r) for i, r in enumerate(rows)],
+                                 "id int, embedding array<float>")
+
+
+def _queries():
+    rng = np.random.default_rng(8)
+    rand = [float(x) for x in rng.standard_normal(64)]
+    rand[3] = -0.0
+    dyadic = [k / 128 for k in range(-32, 32)]
+    dyadic[0] = -0.0
+    return {"random": rand, "zero": [0.0] * 32 + [-0.0] * 32, "dyadic": dyadic}
+
+
+@pytest.mark.parametrize("round_to", [6, None])
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "dot_product"])
+def test_sql_text_distance_is_bit_identical_to_column_builder(
+    spark, distance_rows, metric, round_to
+):
+    """The one-``F.expr`` distance equals the Column builder it replaced, bit
+    for bit, whether the candidate is a column name or a Column and the
+    query a driver-side vector or a Column (an ``F.array`` of literals)."""
+    for name, q in _queries().items():
+        q_col = F.array(*[F.lit(float(x)) for x in q])
+        cases = {
+            "reference": _ref_distance_expr(metric, F.col("embedding"), q_col, round_to),
+            "name_vector": distance_expr(metric, "embedding", q, round_to=round_to),
+            "column_vector": distance_expr(metric, F.col("embedding"), q, round_to=round_to),
+            "name_column": distance_expr(metric, "embedding", q_col, round_to=round_to),
+            "ndarray": distance_expr(metric, "embedding", np.asarray(q), round_to=round_to),
+        }
+        rows = distance_rows.select(
+            "id", *[c.alias(k) for k, c in cases.items()]
+        ).orderBy("id").collect()
+        assert len(rows) == 44
+        for r in rows:
+            want = _hex(r["reference"])
+            for k in cases:
+                assert _hex(r[k]) == want, (name, r["id"], k, r[k], r["reference"])
+
+
+def test_sql_text_operands_render_exactly(spark):
+    """NaN, ±inf, -0.0 and full-precision doubles in a driver-side vector
+    parse back to the same doubles; a dotted name qualifies like ``F.col``."""
+    from vector_db_from_scratch_spark.functions.vector import _operand_sql, l2_norm
+
+    v = [float("nan"), float("inf"), float("-inf"), -0.0, 0.1, 1e-300, 2.0 ** 70 + 2.0 ** 18]
+    got = spark.range(1).select(F.expr(_operand_sql(v)).alias("a")).collect()[0]["a"]
+    assert [_hex(x) for x in got] == [_hex(x) for x in v]
+    a = spark.createDataFrame([([3.0, 4.0],)], "u array<double>").alias("a")
+    assert a.select(l2_norm("a.u").alias("n")).collect()[0]["n"] == 5.0

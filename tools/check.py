@@ -7,6 +7,9 @@ ints/strings, bit-exact for doubles -- queries round in BOTH engines, so
 anything non-identical is a real divergence to fix).
 
 Usage: python tools/check.py [sf_dir] [query_name ...]
+
+Trained artifacts (IVF, PQ, media fixtures) are rebuilt in a fresh
+directory removed at exit, unless ``$SPARK_GRAFT_ARTIFACT_DIR`` names one.
 """
 
 from __future__ import annotations
@@ -126,7 +129,12 @@ def check_all(spark, sf_dir: str, only: list[str] | None = None) -> list[tuple[s
 
 def run(sf_dir: str, only: list[str] | None = None) -> int:
     from vector_db_from_scratch_spark.session import get_spark
+    from vector_db_from_scratch_spark.sources.artifacts import ARTIFACT_ROOT_ENV, scratch_dir
 
+    # trained artifacts come from this run unless a directory is given:
+    # a check inherits nothing that an earlier run left behind
+    if ARTIFACT_ROOT_ENV not in os.environ:
+        os.environ[ARTIFACT_ROOT_ENV] = scratch_dir("check-artifacts-")
     spark = get_spark("oracle-check")
     failures = 0
     for name, status, msg in check_all(spark, sf_dir, only):

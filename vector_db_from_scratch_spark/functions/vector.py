@@ -10,12 +10,18 @@ Reference parity (semantics only, see SURVEY.md §2.7):
   - metric dispatch by name                 (vector_db/indexes.py:99-106)
 
 Three forms of the same contract live here:
-  - ``distance_expr``: Column expressions over ``array<float>`` built from
-    ``zip_with``/``aggregate``, JVM-side. ``ZipWith`` and ``ArrayAggregate``
-    are ``CodegenFallback`` expressions in Spark 4.1, so inside a
-    whole-stage codegen stage they are interpreted per row, lambda by
-    lambda. Inputs are cast to ``array<double>`` so Spark and DuckDB both
-    accumulate in float64.
+  - ``distance_expr`` (and ``dot``, ``l2_norm`` and the per-metric
+    functions): one Spark SQL string per call, parsed by a single
+    ``F.expr``, over ``zip_with``/``aggregate`` on ``array<double>``.
+    Each operand is a column name, a driver-side vector (written into the
+    text as ``array(<repr>D, ...)``, NaN and ±inf as ``CAST``s, so every
+    double is spelled exactly) or a ``Column`` (rendered once through the
+    session's expression converter). Building it costs one py4j call per
+    ``Column`` operand plus the parse, not one per literal, operator and
+    lambda. ``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback``
+    expressions in Spark 4.1, so inside a whole-stage codegen stage they
+    are interpreted per row, lambda by lambda. Inputs are cast to
+    ``array<double>`` so Spark and DuckDB both accumulate in float64.
   - ``oracle_distance_sql``: the same distances as DuckDB SQL, 1:1 with
     ``distance_expr``.
   - the NumPy form for Arrow kernels: :func:`arrow_embeddings` decodes an
@@ -32,61 +38,111 @@ columns). :func:`round6` is the NumPy twin of DuckDB's ``round(x, 6) + 0.0``.
 
 from __future__ import annotations
 
+import math
+from typing import Sequence, Union
+
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 METRICS = ("cosine", "euclidean", "dot_product")
 
+# a column name (dots qualify, as in ``F.col``), a driver-side vector, or a Column
+Operand = Union[str, Sequence[float], np.ndarray, Column]
 
-def _dbl(a: Column) -> Column:
-    return a.cast("array<double>")
+
+def _double_sql(x: float) -> str:
+    if math.isnan(x):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(x):
+        return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{x!r}D"
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product in double precision."""
-    return F.aggregate(
-        F.zip_with(_dbl(a), _dbl(b), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _operand_sql(a: Operand) -> str:
+    """SQL text of one operand. A ``Column`` goes through the session's
+    converter, which quotes names where needed and spells double literals
+    exactly; note that it prints no cast to an array, map or struct type
+    (``Cast.sql`` omits those), so cast such operands in a column first."""
+    if isinstance(a, str):
+        return ".".join(f"`{part}`" for part in a.split("."))
+    if isinstance(a, Column):
+        return SparkSession.active()._jsparkSession.expression(a._jc).sql()
+    return "array(" + ", ".join(_double_sql(float(x)) for x in a) + ")"
+
+
+def _fold_sql(a: str, b: str, term: str) -> str:
+    """Sequential left-fold sum, in double precision, of ``term`` over the
+    element pairs ``(x, y)`` of ``a`` and ``b``."""
+    return (
+        f"aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), CAST({b} AS ARRAY<DOUBLE>), "
+        f"(x, y) -> {term}), 0.0D, (acc, x) -> acc + x)"
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+def _dot_sql(a: str, b: str) -> str:
+    return _fold_sql(a, b, "x * y")
 
 
-def cosine_distance(v: Column, q: Column) -> Column:
-    denom = l2_norm(v) * l2_norm(q)
-    return F.when(denom == 0.0, F.lit(float("inf"))).otherwise(
-        F.lit(1.0) - dot(v, q) / denom
+def _l2_norm_sql(a: str) -> str:
+    return f"SQRT({_dot_sql(a, a)})"
+
+
+def _cosine_sql(v: str, q: str) -> str:
+    denom = f"({_l2_norm_sql(v)} * {_l2_norm_sql(q)})"
+    return (
+        f"CASE WHEN {denom} = 0.0D THEN CAST('Infinity' AS DOUBLE) "
+        f"ELSE 1.0D - {_dot_sql(v, q)} / {denom} END"
     )
 
 
-def euclidean_distance(v: Column, q: Column) -> Column:
-    diff_sq = F.zip_with(_dbl(v), _dbl(q), lambda x, y: (x - y) * (x - y))
-    return F.sqrt(F.aggregate(diff_sq, F.lit(0.0), lambda acc, x: acc + x))
+def _euclidean_sql(v: str, q: str) -> str:
+    return f"SQRT({_fold_sql(v, q, '(x - y) * (x - y)')})"
 
 
-def dot_product_distance(v: Column, q: Column) -> Column:
-    return -dot(v, q)
+def _dot_product_sql(v: str, q: str) -> str:
+    return f"-({_dot_sql(v, q)})"
 
 
 _DISPATCH = {
-    "cosine": cosine_distance,
-    "euclidean": euclidean_distance,
-    "dot_product": dot_product_distance,
+    "cosine": _cosine_sql,
+    "euclidean": _euclidean_sql,
+    "dot_product": _dot_product_sql,
 }
 
 
-def distance_expr(metric: str, v: Column, q: Column, round_to: int | None = 6) -> Column:
-    """Metric dispatch (reference vector_db/indexes.py:99-106); unknown -> raise."""
+def dot(a: Operand, b: Operand) -> Column:
+    return F.expr(_dot_sql(_operand_sql(a), _operand_sql(b)))
+
+
+def l2_norm(a: Operand) -> Column:
+    return F.expr(_l2_norm_sql(_operand_sql(a)))
+
+
+def cosine_distance(v: Operand, q: Operand) -> Column:
+    return F.expr(_cosine_sql(_operand_sql(v), _operand_sql(q)))
+
+
+def euclidean_distance(v: Operand, q: Operand) -> Column:
+    return F.expr(_euclidean_sql(_operand_sql(v), _operand_sql(q)))
+
+
+def dot_product_distance(v: Operand, q: Operand) -> Column:
+    return F.expr(_dot_product_sql(_operand_sql(v), _operand_sql(q)))
+
+
+def distance_expr(metric: str, v: Operand, q: Operand, round_to: int | None = 6) -> Column:
+    """Metric dispatch (reference vector_db/indexes.py:99-106); unknown -> raise.
+    The distance, rounded and normalized like :func:`normalize_float`, as
+    one parsed SQL expression."""
     try:
         fn = _DISPATCH[metric]
     except KeyError:
         raise ValueError(f"unknown distance metric: {metric!r}; expected one of {METRICS}")
-    d = fn(v, q)
-    return normalize_float(d, round_to)
+    d = fn(_operand_sql(v), _operand_sql(q))
+    if round_to is not None:
+        d = f"round({d}, {int(round_to)})"
+    return F.expr(f"({d}) + 0.0D")
 
 
 def normalize_float(c: Column, round_to: int | None = 6) -> Column:

@@ -17,11 +17,19 @@ Reference parity (SURVEY.md §1, §2.8):
   - search = scoped chunks -> filter -> distance -> top-k
                                    vector_db/vector_store.py:229-259
 
-HOW diverges by design: every mutation is a DataFrame transformation
-returning a NEW store (append / MERGE overwrite / anti-join delete), not an
-in-place dict mutation under a lock; at scale each table is a parquet/Delta
-table and these transformations are the batch jobs that rewrite them. The
-one piece of driver state is the library catalog (the reference's
+HOW diverges by design: every mutation returns a NEW store, not an
+in-place dict mutation under a lock. The chunk table is LSM-shaped: a base
+DataFrame, a tombstone set of chunk ids removed from it, and a delta of
+written rows held on the driver. ``add_chunks``, ``update_chunk`` and
+``delete_chunk`` look up the base only (at most one job) and change the
+delta and tombstones, so a write costs O(batch), not O(write history); a
+read sees base - tombstones + delta (the delta as one Arrow-built local
+relation), assembled once per store. Past ``COMPACT_AT`` delta rows plus
+tombstones, the parts fold into a new base. Library and document
+mutations stay DataFrame transformations (append / MERGE overwrite /
+anti-join delete); at scale each table is a parquet/Delta table, the
+delta is a small segment, and compaction is the batch job that rewrites
+the base. The other driver state is the library catalog (the reference's
 ``Dict[UUID, Library]``): the small libraries table, collected once and
 shared by every store derived with the same ``libraries`` DataFrame, so the
 guards of search and CRUD read it without a Spark job.
@@ -31,7 +39,6 @@ from __future__ import annotations
 
 import hashlib
 
-from dataclasses import dataclass, field, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +48,10 @@ from ..functions.vector import distance_expr
 from . import _memo
 
 MAX_BATCH = 1000  # vector_db/schemas.py:90
+# a store whose delta rows plus tombstones pass this folds them into a new
+# base with one localCheckpoint() job; it bounds the rows held on the
+# driver and the tombstone IN-list that every read of the store carries
+COMPACT_AT = 10 * MAX_BATCH
 
 
 class EntityError(ValueError):
@@ -79,18 +90,79 @@ class _Catalog:
         self.rows: dict[str, dict] | None = None
 
 
-@dataclass(frozen=True)
-class EntityStore:
-    libraries: DataFrame
-    documents: DataFrame
-    chunks: DataFrame
-    # shared by every store ``replace()`` derives with the same libraries
-    # DataFrame; a library mutation gets a fresh lazy one in __post_init__
-    catalog: _Catalog | None = field(default=None, repr=False, compare=False)
+def _sql_strings(values) -> str:
+    """Comma-separated Spark SQL string literals: one ``F.expr`` parse in
+    place of one py4j call per ``F.lit``."""
+    return ", ".join(
+        "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'" for v in values
+    )
 
-    def __post_init__(self):
-        if self.catalog is None or self.catalog.libraries is not self.libraries:
-            object.__setattr__(self, "catalog", _Catalog(self.libraries))
+
+class EntityStore:
+    """One immutable version of the three tables. Every mutation returns a
+    new store and leaves this one as it was.
+
+    ``chunks`` is the full logical chunk table, derived from three parts:
+    ``base`` (a DataFrame), minus ``tombstones`` (chunk ids), plus
+    ``delta`` (``chunk_id -> (row, library_id)``, held on the driver;
+    ``library_id`` is the row's library when it was known at write time,
+    else None). The DataFrame is assembled once, on first read, with the
+    delta as one Arrow-built local relation."""
+
+    __slots__ = ("libraries", "documents", "base", "delta", "tombstones", "catalog", "_chunks")
+
+    def __init__(
+        self,
+        libraries: DataFrame,
+        documents: DataFrame,
+        chunks: DataFrame,
+        catalog: _Catalog | None = None,
+        delta: dict[str, tuple[dict, str | None]] | None = None,
+        tombstones: frozenset[str] = frozenset(),
+    ):
+        self.libraries = libraries
+        self.documents = documents
+        self.base = chunks
+        self.delta = delta or {}
+        self.tombstones = tombstones
+        # shared by every store derived with the same libraries DataFrame; a
+        # library mutation gets a fresh lazy one
+        if catalog is None or catalog.libraries is not libraries:
+            catalog = _Catalog(libraries)
+        self.catalog = catalog
+        self._chunks: DataFrame | None = None
+
+    def _replace(self, **changes) -> "EntityStore":
+        parts = dict(
+            libraries=self.libraries, documents=self.documents, chunks=self.base,
+            catalog=self.catalog, delta=self.delta, tombstones=self.tombstones,
+        )
+        parts.update(changes)
+        store = EntityStore(**parts)
+        if len(store.delta) + len(store.tombstones) > COMPACT_AT:
+            store = EntityStore(
+                store.libraries, store.documents, store.chunks.localCheckpoint(),
+                catalog=store.catalog,
+            )
+        return store
+
+    @property
+    def chunks(self) -> DataFrame:
+        if self._chunks is None:
+            df = self.base
+            if self.tombstones:
+                df = df.filter(F.expr(f"NOT chunk_id IN ({_sql_strings(sorted(self.tombstones))})"))
+            if self.delta:
+                import pandas as pd
+
+                from ..sources.tables import arrow_local_df
+
+                schema = self.base.schema
+                rows = [row for row, _ in self.delta.values()]
+                data = {f.name: pd.Series([r[f.name] for r in rows], dtype=object) for f in schema}
+                df = df.unionByName(arrow_local_df(df.sparkSession, data, schema))
+            self._chunks = df
+        return self._chunks
 
     # -- lookups / guards (F5: a catalog hit for libraries, cardinality --
     # -- checks for documents and chunks) ----------------------------------
@@ -113,6 +185,12 @@ class EntityStore:
             raise NotFoundError(f"document {document_id} not found")
         return rows[0].asDict()
 
+    @staticmethod
+    def _known_fields(table: str, columns: list[str], updates: dict) -> None:
+        unknown = [k for k in updates if k not in columns]
+        if unknown:
+            raise EntityError(f"unknown {table} field: {unknown[0]}")
+
     # -- library CRUD (D1-D3) ----------------------------------------------
 
     def create_library(self, row: dict) -> "EntityStore":
@@ -124,7 +202,7 @@ class EntityStore:
             raise EntityError("num_projections must be positive")  # indexes.py:181
         row = {f.name: row.get(f.name) for f in self.libraries.schema.fields}
         new = self.libraries.sparkSession.createDataFrame([row], self.libraries.schema)
-        return replace(self, libraries=self.libraries.unionByName(new))
+        return self._replace(libraries=self.libraries.unionByName(new))
 
     def update_library(self, library_id: str, updates: dict) -> "EntityStore":
         """PATCH semantics (P4): unset fields keep their value via MERGE-style
@@ -148,19 +226,20 @@ class EntityStore:
                 raise FrozenFieldError(
                     "cannot change index settings of a non-empty library"
                 )
+        if "library_id" in updates:
+            raise FrozenFieldError("library_id is immutable")
+        self._known_fields("library", self.libraries.columns, updates)
         cond = F.col("library_id") == library_id
         df = self.libraries
         for k, v in updates.items():
-            if k == "library_id":
-                raise FrozenFieldError("library_id is immutable")
             df = df.withColumn(k, F.when(cond, F.lit(v)).otherwise(F.col(k)))
-        return replace(self, libraries=df)
+        return self._replace(libraries=df)
 
     def delete_library(self, library_id: str) -> "EntityStore":
-        """Cascade (J5): anti-join rewrites of all three tables."""
+        """Cascade (J5): anti-join rewrites of all three tables; the chunk
+        table's rewrite becomes the new base."""
         doomed_docs = self.documents.filter(F.col("library_id") == library_id)
-        return replace(
-            self,
+        return EntityStore(
             libraries=self.libraries.filter(F.col("library_id") != library_id),
             documents=self.documents.join(
                 doomed_docs.select("document_id"), "document_id", "left_anti"
@@ -177,23 +256,24 @@ class EntityStore:
         if self.documents.filter(F.col("document_id") == row["document_id"]).count():
             raise DuplicateError(f"document {row['document_id']} exists")
         new = self.documents.sparkSession.createDataFrame([row], self.documents.schema)
-        return replace(self, documents=self.documents.unionByName(new))
+        return self._replace(documents=self.documents.unionByName(new))
 
     def update_document(self, document_id: str, updates: dict) -> "EntityStore":
         self._document(document_id)
         if "library_id" in updates or "document_id" in updates:
             raise FrozenFieldError("document FK/id are immutable")
+        self._known_fields("document", self.documents.columns, updates)
         cond = F.col("document_id") == document_id
         df = self.documents
         for k, v in updates.items():
             df = df.withColumn(k, F.when(cond, F.lit(v)).otherwise(F.col(k)))
-        return replace(self, documents=df)
+        return self._replace(documents=df)
 
     def delete_document(self, document_id: str) -> "EntityStore":
-        return replace(
-            self,
+        return self._replace(
             documents=self.documents.filter(F.col("document_id") != document_id),
-            chunks=self.chunks.filter(F.col("document_id") != document_id),
+            chunks=self.base.filter(F.col("document_id") != document_id),
+            delta={c: v for c, v in self.delta.items() if v[0]["document_id"] != document_id},
         )
 
     # -- chunk CRUD (D5-D8) ------------------------------------------------
@@ -208,7 +288,8 @@ class EntityStore:
 
     def add_chunks(self, rows: list[dict]) -> "EntityStore":
         """D5/D8: single-row insert is the batch of one. All validation runs
-        BEFORE any mutation (validate-then-apply atomicity, O11)."""
+        BEFORE any mutation (validate-then-apply atomicity, O11). The rows
+        go into the delta; only the base is looked up."""
         if len(rows) > MAX_BATCH:
             raise BatchTooLargeError(f"batch > {MAX_BATCH}")
         if not rows:
@@ -217,13 +298,14 @@ class EntityStore:
         if len(doc_ids) > 1:
             raise EntityError("batch must target a single document")
         doc_id = next(iter(doc_ids))
+        ids = [r["chunk_id"] for r in rows]
         # one job answers both lookups: the document's library, and which of
-        # the new chunk_ids exist already
+        # the new chunk_ids the base holds
         found = (
             self.documents.filter(F.col("document_id") == doc_id)
             .select(F.lit(True).alias("is_doc"), F.col("library_id").alias("id"))
             .unionByName(
-                self.chunks.filter(F.col("chunk_id").isin([r["chunk_id"] for r in rows]))
+                self.base.filter(F.expr(f"chunk_id IN ({_sql_strings(ids)})"))
                 .select(F.lit(False).alias("is_doc"), F.col("chunk_id").alias("id"))
             )
             .collect()
@@ -233,50 +315,72 @@ class EntityStore:
             raise NotFoundError(f"document {doc_id} not found")
         lib = self._library(doc_libs[0])
         self._validate_dim(lib, rows)
-        existing = {r["id"] for r in found if not r["is_doc"]}
+        existing = {r["id"] for r in found if not r["is_doc"]} - self.tombstones
+        existing.update(c for c in ids if c in self.delta)
         if existing:
             raise DuplicateError(f"chunks exist: {sorted(existing)}")
-        new = self.chunks.sparkSession.createDataFrame(rows, self.chunks.schema)
-        return replace(self, chunks=self.chunks.unionByName(new))
+        if len(set(ids)) < len(ids):
+            repeated = sorted({c for c in ids if ids.count(c) > 1})
+            raise DuplicateError(f"chunk_ids repeated in the batch: {repeated}")
+        names = self.base.columns
+        delta = dict(self.delta)
+        for r in rows:
+            delta[r["chunk_id"]] = ({n: r.get(n) for n in names}, lib["library_id"])
+        return self._replace(delta=delta)
 
     def update_chunk(self, chunk_id: str, updates: dict) -> "EntityStore":
         """D6: frozen FK; dimension re-validated when the embedding changes
         (the reference's dirty-check re-index, O10, is moot here -- indexes
-        are batch-derived columns)."""
-        rows = self.chunks.filter(F.col("chunk_id") == chunk_id).select("document_id")
-        if "embedding" in updates:
-            # one job: the chunk's document, and that document's library
-            # (doc_found is NULL when the document is missing)
-            rows = rows.join(
-                self.documents.select(
-                    "document_id", F.lit(True).alias("doc_found"), "library_id"
-                ),
-                "document_id",
-                "left",
-            )
-        rows = rows.collect()
-        if not rows:
+        are batch-derived columns). The updated row goes into the delta and
+        tombstones the base's row; a delta chunk needs no lookup."""
+        names = self.base.columns
+        if chunk_id in self.delta:
+            row, library_id = self.delta[chunk_id]
+            doc_found = True
+        elif chunk_id in self.tombstones:
             raise NotFoundError(f"chunk {chunk_id} not found")
+        else:
+            hits = self.base.filter(F.col("chunk_id") == chunk_id)
+            if "embedding" in updates:
+                # one job: the chunk, and its document's library (_doc_found
+                # is NULL when the document is missing)
+                hits = hits.join(
+                    self.documents.select(
+                        "document_id",
+                        F.lit(True).alias("_doc_found"),
+                        F.col("library_id").alias("_library_id"),
+                    ),
+                    "document_id",
+                    "left",
+                )
+            hits = hits.collect()
+            if not hits:
+                raise NotFoundError(f"chunk {chunk_id} not found")
+            hit = hits[0].asDict()
+            row = {n: hit[n] for n in names}
+            doc_found = hit.get("_doc_found", True)
+            library_id = hit.get("_library_id")
         if "document_id" in updates or "chunk_id" in updates:
             raise FrozenFieldError("chunk FK/id are immutable")
+        self._known_fields("chunk", names, updates)
         if "embedding" in updates:
-            if rows[0]["doc_found"] is None:
-                raise NotFoundError(f"document {rows[0]['document_id']} not found")
-            lib = self._library(rows[0]["library_id"])
+            if doc_found is None:
+                raise NotFoundError(f"document {row['document_id']} not found")
+            if library_id is None:
+                library_id = self._document(row["document_id"])["library_id"]
+            lib = self._library(library_id)
             if len(updates["embedding"]) != lib["embedding_dimension"]:
                 raise DimensionMismatchError("embedding dimension mismatch")
-        cond = F.col("chunk_id") == chunk_id
-        df = self.chunks
-        for k, v in updates.items():
-            df = df.withColumn(
-                k,
-                F.when(cond, F.lit(v) if k != "embedding" else F.array(*[F.lit(float(x)) for x in v]))
-                .otherwise(F.col(k)),
-            )
-        return replace(self, chunks=df)
+        delta = dict(self.delta)
+        delta[chunk_id] = ({**row, **updates}, library_id)
+        return self._replace(delta=delta, tombstones=self.tombstones | {chunk_id})
 
     def delete_chunk(self, chunk_id: str) -> "EntityStore":
-        return replace(self, chunks=self.chunks.filter(F.col("chunk_id") != chunk_id))
+        delta = self.delta
+        if chunk_id in delta:
+            delta = dict(delta)
+            del delta[chunk_id]
+        return self._replace(delta=delta, tombstones=self.tombstones | {chunk_id})
 
     # -- listings (S1-S3) with projection (P1-P3) and pagination (T2) ------
 
@@ -378,11 +482,10 @@ class EntityStore:
             probed = bucket_kernel(cand, proj).filter(F.col("bucket") == qb)
             if probed.count() >= k:
                 cand = probed
-        q = F.array(*[F.lit(float(x)) for x in query_vector])
         return (
             cand.select(
                 "chunk_id",
-                distance_expr(lib["distance_metric"], F.col("embedding"), q).alias("distance"),
+                distance_expr(lib["distance_metric"], "embedding", query_vector).alias("distance"),
             )
             .orderBy("distance", "chunk_id")
             .limit(k)
@@ -430,21 +533,14 @@ class EntityStore:
             )
             cand = cand.filter(pred)
 
-        def lit_vec(cid: str):
-            return F.array(*[F.lit(x) for x in vecs[cid]])
-
         def least_of(cols):
             return cols[0] if len(cols) == 1 else F.least(*cols)
 
         metric = lib["distance_metric"]
-        d_pos = least_of(
-            [distance_expr(metric, F.col("embedding"), lit_vec(c)) for c in pos]
-        )
+        d_pos = least_of([distance_expr(metric, "embedding", vecs[c]) for c in pos])
         inf = F.lit(float("inf"))
         if neg:
-            d_neg = least_of(
-                [distance_expr(metric, F.col("embedding"), lit_vec(c)) for c in neg]
-            )
+            d_neg = least_of([distance_expr(metric, "embedding", vecs[c]) for c in neg])
             score = F.when(d_pos == inf, inf).otherwise(d_pos - d_neg)
         else:
             score = d_pos
@@ -720,7 +816,9 @@ def store_from_driver_tables(
     this surface scans the documents x embeddings join (a random_projection
     search twice: the <k fallback count, then the probe), which dominated
     the warm cost -- in production the chunk table is the materialized
-    asset."""
+    asset. The cached chunk table is the store's base: chunk writes on it
+    go to the driver-side delta and tombstones and leave the cache as it
+    is, so every store derived from this one shares it."""
     from ..sources.tables import load_table
 
     memo_key = (

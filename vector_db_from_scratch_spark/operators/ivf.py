@@ -645,21 +645,10 @@ def train_centroids(
 # concurrent process never reads a half-written artifact.
 # --------------------------------------------------------------------------
 
-ARTIFACT_ROOT_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
-
-
-def _artifact_root() -> str:
-    import tempfile
-
-    return os.environ.get(
-        ARTIFACT_ROOT_ENV, os.path.join(tempfile.gettempdir(), "spark-graft-artifacts")
-    )
-
-
 def trained_artifact_path(sf_dir: str, n_cells: int, iterations: int) -> str:
     import hashlib
 
-    from ..sources.artifacts import source_ident
+    from ..sources.artifacts import artifact_root, source_ident
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     # source_ident folds in a footer fingerprint + ALGO_VERSION, so a
@@ -667,7 +656,7 @@ def trained_artifact_path(sf_dir: str, n_cells: int, iterations: int) -> str:
     tag = hashlib.md5(
         f"{source_ident(src)}:{n_cells}:{iterations}".encode()
     ).hexdigest()[:12]
-    return os.path.join(_artifact_root(), f"ivf-trained-{tag}")
+    return os.path.join(artifact_root(), f"ivf-trained-{tag}")
 
 
 def _load_persisted_centroids(
@@ -2018,9 +2007,6 @@ def ivf_recommend(
     ids = [int(v) for v in pos + neg]
     vecs = _example_vectors(spark, sf_dir, ids)
 
-    def lit_vec(vid: int):
-        return F.array(*[F.lit(x) for x in vecs[int(vid)]])
-
     def least_of(cols):
         return cols[0] if len(cols) == 1 else F.least(*cols)
 
@@ -2030,7 +2016,7 @@ def ivf_recommend(
         pc = (
             cent.select(
                 "cell",
-                distance_expr("euclidean", F.col("cv"), lit_vec(vid)).alias("qd"),
+                distance_expr("euclidean", F.col("cv"), vecs[int(vid)]).alias("qd"),
             )
             .orderBy("qd", "cell")
             .limit(nprobe)
@@ -2045,12 +2031,12 @@ def ivf_recommend(
         .filter(~F.col("vec_id").isin(ids))
     )
     d_pos = least_of(
-        [distance_expr(metric, F.col("embedding"), lit_vec(p)) for p in pos]
+        [distance_expr(metric, F.col("embedding"), vecs[int(p)]) for p in pos]
     )
     inf = F.lit(float("inf"))
     if neg:
         d_neg = least_of(
-            [distance_expr(metric, F.col("embedding"), lit_vec(n)) for n in neg]
+            [distance_expr(metric, F.col("embedding"), vecs[int(n)]) for n in neg]
         )
         score = F.when(d_pos == inf, inf).otherwise(d_pos - d_neg)
     else:

@@ -1331,9 +1331,6 @@ def knn_recommend(
         raise ValueError("recommend needs at least one positive example")
     vecs = _example_vectors(spark, sf_dir, pos + neg)
 
-    def lit_vec(vid: int):
-        return F.array(*[F.lit(x) for x in vecs[int(vid)]])
-
     def least_of(cols):
         return cols[0] if len(cols) == 1 else F.least(*cols)
 
@@ -1345,12 +1342,12 @@ def knn_recommend(
         # any distance work (and composes with the example exclusion)
         emb = emb.filter(F.col("label") == label_filter)
     d_pos = least_of(
-        [distance_expr(metric, F.col("embedding"), lit_vec(p)) for p in pos]
+        [distance_expr(metric, F.col("embedding"), vecs[int(p)]) for p in pos]
     )
     inf = F.lit(float("inf"))
     if neg:
         d_neg = least_of(
-            [distance_expr(metric, F.col("embedding"), lit_vec(n)) for n in neg]
+            [distance_expr(metric, F.col("embedding"), vecs[int(n)]) for n in neg]
         )
         score = F.when(d_pos == inf, inf).otherwise(d_pos - d_neg)
     else:
@@ -1698,14 +1695,11 @@ def knn_discovery(
     ids = [int(target)] + [v for p in prs for v in p]
     vecs = _example_vectors(spark, sf_dir, ids)
 
-    def lit_vec(vid: int):
-        return F.array(*[F.lit(x) for x in vecs[int(vid)]])
-
     emb = load_table(spark, sf_dir, EMB).filter(~F.col("vec_id").isin(ids))
     votes = [
         F.when(
-            distance_expr(metric, F.col("embedding"), lit_vec(a))
-            < distance_expr(metric, F.col("embedding"), lit_vec(b)),
+            distance_expr(metric, F.col("embedding"), vecs[int(a)])
+            < distance_expr(metric, F.col("embedding"), vecs[int(b)]),
             1,
         ).otherwise(0)
         for a, b in prs
@@ -1717,7 +1711,7 @@ def knn_discovery(
         emb.select(
             "vec_id",
             score.cast("long").alias("context_score"),
-            distance_expr(metric, F.col("embedding"), lit_vec(int(target))).alias(
+            distance_expr(metric, F.col("embedding"), vecs[int(target)]).alias(
                 "target_distance"
             ),
         )

@@ -68,8 +68,7 @@ def bucket_expr(v: Column, projections: list[list[float]] | None = None) -> Colu
     proj = projections if projections is not None else _PROJECTIONS
     b = F.lit(0)
     for i, row in enumerate(proj):
-        p = F.array(*[F.lit(x) for x in row])
-        b = b + F.when(dot(v, p) >= 0.0, F.lit(1 << i)).otherwise(F.lit(0))
+        b = b + F.when(dot(v, row) >= 0.0, F.lit(1 << i)).otherwise(F.lit(0))
     return b.cast("int")
 
 
@@ -224,12 +223,11 @@ def lsh_knn(
         allowed.crossJoin(F.broadcast(occ.filter(F.col("occ") < k)))
         .select("vec_id", "embedding")
     )
-    q = F.array(*[F.lit(x) for x in qvec])
     return (
         probe.unionAll(widened)
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), q).alias("distance"),
+            distance_expr(metric, F.col("embedding"), qvec).alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -267,10 +265,9 @@ def lsh_knn_multiprobe(
         b for b in range(1 << NUM_PROJECTIONS)
         if bin(b ^ qb).count("1") <= max_hamming
     ]
-    q = F.array(*[F.lit(x) for x in qvec])
     return (
         emb.filter(F.col("bucket").isin(probe))
-        .select("vec_id", distance_expr(metric, F.col("embedding"), q).alias("distance"))
+        .select("vec_id", distance_expr(metric, F.col("embedding"), qvec).alias("distance"))
         .orderBy("distance", "vec_id")
         .limit(k)
     )

@@ -120,9 +120,8 @@ def train_codebooks(
 def pq_artifact_path(sf_dir: str, m: int, ks: int, iters: int) -> str:
     import hashlib
     import os
-    import tempfile
 
-    from ..sources.artifacts import source_ident
+    from ..sources.artifacts import artifact_root, source_ident
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     # footer fingerprint + ALGO_VERSION via source_ident: regenerated
@@ -130,11 +129,7 @@ def pq_artifact_path(sf_dir: str, m: int, ks: int, iters: int) -> str:
     tag = hashlib.md5(
         f"{source_ident(src)}:pq:{m}:{ks}:{iters}:{TRAIN_SAMPLE}".encode()
     ).hexdigest()[:12]
-    root = os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark-graft-artifacts"),
-    )
-    return os.path.join(root, f"pq-trained-{tag}")
+    return os.path.join(artifact_root(), f"pq-trained-{tag}")
 
 
 def _load_persisted_codebooks(

@@ -12,10 +12,22 @@ paths already have (operators/_memo.py).
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 
+ARTIFACT_ROOT_ENV = "SPARK_GRAFT_ARTIFACT_DIR"
 _SCRATCH_DIRS: list[str] = []
+
+
+def artifact_root() -> str:
+    """Where trained artifacts (IVF, PQ, media fixtures) persist across
+    processes: ``$SPARK_GRAFT_ARTIFACT_DIR``, else ``spark-graft-artifacts``
+    under the system temp dir. Point the variable at an empty directory to
+    rebuild every artifact from a clean state."""
+    return os.environ.get(
+        ARTIFACT_ROOT_ENV, os.path.join(tempfile.gettempdir(), "spark-graft-artifacts")
+    )
 
 
 def _cleanup() -> None:
@@ -61,8 +73,6 @@ def discard_corrupt_artifact(path: str) -> None:
     writer's fresh output under the live path is never swept by our
     rmtree. If the rename fails (another process already discarded or is
     rewriting it), do nothing -- the other process owns the repair."""
-    import os
-
     aside = f"{path}.corrupt-{os.getpid()}"
     try:
         os.rename(path, aside)

@@ -27,7 +27,6 @@ from __future__ import annotations
 import json
 import os
 import struct
-import tempfile
 
 import numpy as np
 
@@ -39,12 +38,10 @@ _WAV_RATE = 8000
 
 
 def media_fixture_dir() -> str:
-    root = os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark-graft-artifacts"),
-    )
+    from .artifacts import artifact_root
+
     return os.path.join(
-        root, f"media-fixture-v{FIXTURE_VERSION}-n{N_PER_KIND}-s{SEED}"
+        artifact_root(), f"media-fixture-v{FIXTURE_VERSION}-n{N_PER_KIND}-s{SEED}"
     )
 
 

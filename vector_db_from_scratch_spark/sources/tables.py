@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -57,7 +58,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def arrow_local_df(spark: SparkSession, data: dict, schema: str) -> DataFrame:
+def arrow_local_df(spark: SparkSession, data: dict, schema: str | StructType) -> DataFrame:
     """Small driver-side table as a DataFrame via the pandas/Arrow path.
 
     The tuple-list ``createDataFrame`` route builds a pickled local

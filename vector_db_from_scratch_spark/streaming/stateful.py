@@ -377,11 +377,10 @@ def knn_ingest_stream(
     from .windows import embeddings_stream
 
     qv = _example_vectors(spark, sf_dir, [query_vec_id])[query_vec_id]
-    q = F.array(*[F.lit(float(x)) for x in qv])
     vec = embeddings_stream(spark, sf_dir)
     scored = vec.select(
         "vec_id",
-        distance_expr("cosine", F.col("embedding"), q).alias("distance"),
+        distance_expr("cosine", F.col("embedding"), qv).alias("distance"),
         (F.col("vec_id") % KNN_STREAM_SHARDS).alias("shard"),
     )
     return scored.groupBy("shard").applyInPandasWithState(
