@@ -300,8 +300,9 @@ def test_entity_calls_eager_job_counts(spark):
     a flat or filtered search runs no job, an LSH search only its <k
     fallback count, add_chunks one lookup and update_chunk one lookup,
     with or without a new embedding to validate. delete_chunk and a text
-    update of a delta chunk run none, and neither does building a flat
-    search over a written store (its delta relation is local)."""
+    update of a delta chunk run none; a new embedding for a delta chunk
+    runs one (its document's library). Building a flat search over a
+    written store runs none (its delta relation is local)."""
     import uuid
 
     sc = spark.sparkContext
@@ -333,6 +334,7 @@ def test_entity_calls_eager_job_counts(spark):
         assert jobs(lambda: store.delete_chunk("ch-2")) == 0
         written = store.add_chunks([row])
         assert jobs(lambda: written.update_chunk("new-jobs", {"text": "t2"})) == 0
+        assert jobs(lambda: written.update_chunk("new-jobs", {"embedding": [0.0, 1.0, 0.0]})) == 1
         written = written.update_chunk("ch-2", {"embedding": [0.9, 0.1, 0.0]}).delete_chunk("ch-3")
         assert jobs(lambda: written.search("lib-cos", q, k=3)) == 0
     finally:
@@ -413,7 +415,8 @@ def test_delta_store_matches_dict_model(spark, monkeypatch, seed, compact_at):
     search equals the model's exact top-k, and the chunk count, listing,
     library counts and embeddings read back equal the model. The second
     sequence lowers the compaction threshold so the delta folds into a
-    new base along the way."""
+    new base along the way. Every tombstone names a base row: a delta
+    row's update or delete adds none."""
     import numpy as np
 
     from vector_db_from_scratch_spark.operators import entity
@@ -461,6 +464,7 @@ def test_delta_store_matches_dict_model(spark, monkeypatch, seed, compact_at):
         back = {r["chunk_id"]: [float(x) for x in r["embedding"]]
                 for r in st.chunks.select("chunk_id", "embedding").collect()}
         assert back == {c: e for c, (_, _, e) in model.items()}
+        assert st.tombstones <= {r["chunk_id"] for r in st.base.select("chunk_id").collect()}
 
     def step(op, *args):
         nonlocal store, compactions, n_new
@@ -500,7 +504,7 @@ def test_delta_store_matches_dict_model(spark, monkeypatch, seed, compact_at):
     prefix = [
         ("add", "doc-a", ["n-0", "n-1"]),
         ("update", "n-0", "text"),          # a delta row, no lookup
-        ("update", "n-1", "embedding"),     # a delta row, library known
+        ("update", "n-1", "embedding"),     # a delta row, library looked up
         ("delete", "n-0"),                  # a delta row
         ("delete", "ch-1"),                 # a base row
         ("update_dead", "ch-1"),
@@ -508,8 +512,8 @@ def test_delta_store_matches_dict_model(spark, monkeypatch, seed, compact_at):
         ("dup", "doc-a", ["n-1"]),          # against a delta row
         ("update", "ch-2", "embedding"),    # a base row moves to the delta
         ("dup", "doc-b", ["ch-2"]),
-        ("update", "ch-4", "text"),         # library unknown in the delta
-        ("update", "ch-4", "embedding"),    # ... so it is looked up
+        ("update", "ch-4", "text"),         # a base row, no library lookup
+        ("update", "ch-4", "embedding"),    # now a delta row
     ]
     for op, *args in prefix:
         step(op, *args)
@@ -550,3 +554,42 @@ def test_add_chunks_lookup_quotes_ids(spark):
     assert {r["chunk_id"] for r in gone.chunks.collect()} >= set(odd[1:])
     assert gone.chunks.filter(gone.chunks["chunk_id"] == odd[0]).count() == 0
     assert gone.add_chunks([rows[0]]).chunks.count() == written.chunks.count()
+
+
+def test_malformed_chunk_rows_raise_at_write(spark):
+    """Rows are checked against the chunk schema when they are written, by
+    the verifier ``createDataFrame`` runs: a wrong element type, an int out
+    of range or None in a non-nullable field raises in add_chunks or
+    update_chunk, and the store it was called on (and one derived from it)
+    still reads. A string field takes any value's string form, as it does
+    in ``createDataFrame``."""
+    from pyspark.sql import functions as F
+
+    from vector_db_from_scratch_spark.operators.entity import EntityStore
+
+    demo = demo_store(spark)
+    # chunk_index non-nullable, as in store_from_driver_tables
+    store = EntityStore(demo.libraries, demo.documents, demo.chunks.withColumn(
+        "chunk_index", F.coalesce("chunk_index", F.lit(0))))
+    written = store.add_chunks([dict(chunk_id="n-1", document_id="doc-a", text="t",
+                                     embedding=[1.0, 0.0, 0.0], metadata={}, chunk_index=0)])
+
+    def row(**kw):
+        return {**dict(chunk_id="n-2", document_id="doc-a", text="t",
+                       embedding=[1.0, 0.0, 0.0], metadata={}, chunk_index=1), **kw}
+
+    for bad in (dict(embedding=["a", "b", "c"]), dict(chunk_index=2 ** 40),
+                dict(chunk_index=None), dict(chunk_index="1")):
+        for st in (store, written):
+            with pytest.raises((TypeError, ValueError)):
+                st.add_chunks([row(**bad)])
+    for cid in ("ch-1", "n-1"):
+        with pytest.raises((TypeError, ValueError)):
+            written.update_chunk(cid, {"chunk_index": None})
+        with pytest.raises((TypeError, ValueError)):
+            written.update_chunk(cid, {"embedding": [1.0, "x", 0.0]})
+    assert store.chunks.count() == 13
+    assert written.chunks.count() == 14
+    texts = written.add_chunks([row(text=5)]).update_chunk("n-1", {"text": 7}).chunks
+    assert {r["chunk_id"]: r["text"] for r in texts.filter("chunk_id LIKE 'n-%'").collect()} \
+        == {"n-1": "7", "n-2": "5"}

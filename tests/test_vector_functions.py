@@ -209,3 +209,22 @@ def test_sql_text_operands_render_exactly(spark):
     assert [_hex(x) for x in got] == [_hex(x) for x in v]
     a = spark.createDataFrame([([3.0, 4.0],)], "u array<double>").alias("a")
     assert a.select(l2_norm("a.u").alias("n")).collect()[0]["n"] == 5.0
+
+
+def test_column_operand_renders_through_classic_session_converter(spark):
+    """A ``Column`` operand is rendered by ``SparkSession._jsparkSession
+    .expression(col._jc).sql()``, an internal method of classic sessions.
+    On Spark 4.1.2, the version this engine pins, it quotes a name that
+    needs quoting and spells double literals exactly; a Spark upgrade must
+    keep both."""
+    import pyspark
+
+    from vector_db_from_scratch_spark.functions.vector import _operand_sql, dot
+
+    df = spark.createDataFrame([([1.0, 2.0],)], "`odd name` array<double>")
+    version = f"Column rendering changed on Spark {pyspark.__version__}"
+    assert "`odd name`" in _operand_sql(F.col("odd name")), version
+    x = 0.1 + 0.2
+    q = F.array(F.lit(x), F.lit(1e-300))
+    got = df.select(dot(F.col("odd name"), q).alias("d")).collect()[0]["d"]
+    assert got == 1.0 * x + 2.0 * 1e-300, version

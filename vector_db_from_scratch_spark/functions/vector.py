@@ -18,7 +18,12 @@ Three forms of the same contract live here:
     double is spelled exactly) or a ``Column`` (rendered once through the
     session's expression converter). Building it costs one py4j call per
     ``Column`` operand plus the parse, not one per literal, operator and
-    lambda. ``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback``
+    lambda. The converter is ``SparkSession._jsparkSession.expression``,
+    an internal JVM method of a classic (non-Connect) session; the
+    rendering is pinned by tests on Spark 4.1.2 only, so callers pass a
+    column name wherever the operand is a plain column and keep
+    ``Column`` operands for real expressions (``F.slice``, a cast).
+    ``ZipWith`` and ``ArrayAggregate`` are ``CodegenFallback``
     expressions in Spark 4.1, so inside a whole-stage codegen stage they
     are interpreted per row, lambda by lambda. Inputs are cast to
     ``array<double>`` so Spark and DuckDB both accumulate in float64.
@@ -61,7 +66,8 @@ def _double_sql(x: float) -> str:
 
 def _operand_sql(a: Operand) -> str:
     """SQL text of one operand. A ``Column`` goes through the session's
-    converter, which quotes names where needed and spells double literals
+    converter (an internal, classic-session JVM method; see the module
+    docstring), which quotes names where needed and spells double literals
     exactly; note that it prints no cast to an array, map or struct type
     (``Cast.sql`` omits those), so cast such operands in a column first."""
     if isinstance(a, str):

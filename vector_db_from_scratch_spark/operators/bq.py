@@ -221,7 +221,7 @@ def bq_knn_rerank(
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -344,7 +344,7 @@ def bq_knn_batch(
         .select(
             "query_id",
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)

@@ -1043,11 +1043,11 @@ def embedding_neardup(
     from ..functions.vector import dot, l2_norm
 
     v = F.col("embedding").cast("array<double>")
-    n = l2_norm(F.col("embedding"))
+    n = l2_norm("embedding")
     unit = F.when(n == 0.0, v).otherwise(F.transform(v, lambda x: x / n))
     normed = emb.select("vec_id", "label", unit.alias("u"))
     a, b = normed.alias("a"), normed.alias("b")
-    sim = normalize_float(dot(F.col("a.u"), F.col("b.u")), 6)
+    sim = normalize_float(dot("a.u", "b.u"), 6)
     return (
         a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .select(

@@ -104,10 +104,10 @@ class EntityStore:
 
     ``chunks`` is the full logical chunk table, derived from three parts:
     ``base`` (a DataFrame), minus ``tombstones`` (chunk ids), plus
-    ``delta`` (``chunk_id -> (row, library_id)``, held on the driver;
-    ``library_id`` is the row's library when it was known at write time,
-    else None). The DataFrame is assembled once, on first read, with the
-    delta as one Arrow-built local relation."""
+    ``delta`` (``chunk_id -> row``, held on the driver; every row passed
+    the base schema's type check when it was written). The DataFrame is
+    assembled once, on first read, with the delta as one Arrow-built local
+    relation."""
 
     __slots__ = ("libraries", "documents", "base", "delta", "tombstones", "catalog", "_chunks")
 
@@ -117,7 +117,7 @@ class EntityStore:
         documents: DataFrame,
         chunks: DataFrame,
         catalog: _Catalog | None = None,
-        delta: dict[str, tuple[dict, str | None]] | None = None,
+        delta: dict[str, dict] | None = None,
         tombstones: frozenset[str] = frozenset(),
     ):
         self.libraries = libraries
@@ -158,7 +158,7 @@ class EntityStore:
                 from ..sources.tables import arrow_local_df
 
                 schema = self.base.schema
-                rows = [row for row, _ in self.delta.values()]
+                rows = list(self.delta.values())
                 data = {f.name: pd.Series([r[f.name] for r in rows], dtype=object) for f in schema}
                 df = df.unionByName(arrow_local_df(df.sparkSession, data, schema))
             self._chunks = df
@@ -273,10 +273,24 @@ class EntityStore:
         return self._replace(
             documents=self.documents.filter(F.col("document_id") != document_id),
             chunks=self.base.filter(F.col("document_id") != document_id),
-            delta={c: v for c, v in self.delta.items() if v[0]["document_id"] != document_id},
+            delta={c: r for c, r in self.delta.items() if r["document_id"] != document_id},
         )
 
     # -- chunk CRUD (D5-D8) ------------------------------------------------
+
+    def _checked_rows(self, rows: list[dict]) -> list[dict]:
+        """``rows`` as full chunk rows, each checked against the base schema
+        by the verifier ``createDataFrame`` runs (a wrong type, or None in a
+        non-nullable field, raises here), so a bad write raises before the
+        delta holds it and no later read of the delta can fail."""
+        from pyspark.sql.types import _make_type_verifier
+
+        schema = self.base.schema
+        verify = _make_type_verifier(schema)
+        full = [{f.name: r.get(f.name) for f in schema} for r in rows]
+        for r in full:
+            verify(tuple(r.values()))
+        return full
 
     def _validate_dim(self, library: dict, rows: list[dict]) -> None:
         dim = library["embedding_dimension"]
@@ -322,21 +336,20 @@ class EntityStore:
         if len(set(ids)) < len(ids):
             repeated = sorted({c for c in ids if ids.count(c) > 1})
             raise DuplicateError(f"chunk_ids repeated in the batch: {repeated}")
-        names = self.base.columns
         delta = dict(self.delta)
-        for r in rows:
-            delta[r["chunk_id"]] = ({n: r.get(n) for n in names}, lib["library_id"])
+        for r in self._checked_rows(rows):
+            delta[r["chunk_id"]] = r
         return self._replace(delta=delta)
 
     def update_chunk(self, chunk_id: str, updates: dict) -> "EntityStore":
         """D6: frozen FK; dimension re-validated when the embedding changes
         (the reference's dirty-check re-index, O10, is moot here -- indexes
         are batch-derived columns). The updated row goes into the delta and
-        tombstones the base's row; a delta chunk needs no lookup."""
+        tombstones the base's row; a delta chunk needs no chunk lookup."""
         names = self.base.columns
         if chunk_id in self.delta:
-            row, library_id = self.delta[chunk_id]
-            doc_found = True
+            row = self.delta[chunk_id]
+            doc_found, library_id = True, None
         elif chunk_id in self.tombstones:
             raise NotFoundError(f"chunk {chunk_id} not found")
         else:
@@ -367,20 +380,25 @@ class EntityStore:
             if doc_found is None:
                 raise NotFoundError(f"document {row['document_id']} not found")
             if library_id is None:
+                # a delta chunk: its document's library, in one job
                 library_id = self._document(row["document_id"])["library_id"]
             lib = self._library(library_id)
             if len(updates["embedding"]) != lib["embedding_dimension"]:
                 raise DimensionMismatchError("embedding dimension mismatch")
+            updates = {**updates, "embedding": [float(x) for x in updates["embedding"]]}
+        (new_row,) = self._checked_rows([{**row, **updates}])
         delta = dict(self.delta)
-        delta[chunk_id] = ({**row, **updates}, library_id)
-        return self._replace(delta=delta, tombstones=self.tombstones | {chunk_id})
+        delta[chunk_id] = new_row
+        # a delta id is either absent from the base or tombstoned already
+        tombstones = self.tombstones if chunk_id in self.delta else self.tombstones | {chunk_id}
+        return self._replace(delta=delta, tombstones=tombstones)
 
     def delete_chunk(self, chunk_id: str) -> "EntityStore":
-        delta = self.delta
-        if chunk_id in delta:
-            delta = dict(delta)
+        if chunk_id in self.delta:
+            delta = dict(self.delta)
             del delta[chunk_id]
-        return self._replace(delta=delta, tombstones=self.tombstones | {chunk_id})
+            return self._replace(delta=delta)
+        return self._replace(tombstones=self.tombstones | {chunk_id})
 
     # -- listings (S1-S3) with projection (P1-P3) and pagination (T2) ------
 

@@ -89,7 +89,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(b, F.col("src") != F.col("dst")).select(
         "src",
         "dst",
-        distance_expr("cosine", F.col("va"), F.col("vb")).alias("d"),
+        distance_expr("cosine", "va", "vb").alias("d"),
     )
     rn = F.row_number().over(Window.partitionBy("src").orderBy("d", "dst"))
     # the window is partitioned by src (bounded PR_K survivors per node) --
@@ -734,7 +734,7 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = a.join(b, F.col("src") != F.col("dst")).select(
         "src",
         "dst",
-        distance_expr("cosine", F.col("va"), F.col("vb")).alias("d"),
+        distance_expr("cosine", "va", "vb").alias("d"),
     )
     rn = F.row_number().over(Window.partitionBy("src").orderBy("d", "dst"))
     kept = pairs.withColumn("rn", rn).filter(F.col("rn") <= PR_K)

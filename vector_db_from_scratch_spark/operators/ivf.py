@@ -72,7 +72,7 @@ def assign_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _CELLS_MEMO[key]
     emb = load_table(spark, sf_dir, "embeddings")
     cent = _centroids(spark, sf_dir)
-    d = distance_expr("euclidean", F.col("embedding"), F.col("cv"))
+    d = distance_expr("euclidean", "embedding", "cv")
     expanded = emb.crossJoin(F.broadcast(cent)).withColumn("cd", d)
     out = argmin_cell(expanded, "vec_id", ["label", "embedding"]).select(
         "vec_id", "label", "embedding", "cell"
@@ -104,7 +104,7 @@ def ivf_knn(
     )
     probe_cells = (
         cent.crossJoin(F.broadcast(q))
-        .select("cell", distance_expr("euclidean", F.col("cv"), F.col("qv")).alias("qd"))
+        .select("cell", distance_expr("euclidean", "cv", "qv").alias("qd"))
         .orderBy("qd", "cell")
         .limit(nprobe)
         .select("cell")
@@ -112,7 +112,7 @@ def ivf_knn(
     pool = assigned.join(F.broadcast(probe_cells), "cell")
     return (
         pool.crossJoin(F.broadcast(q))
-        .select("vec_id", distance_expr(metric, F.col("embedding"), F.col("qv")).alias("distance"))
+        .select("vec_id", distance_expr(metric, "embedding", "qv").alias("distance"))
         .orderBy("distance", "vec_id")
         .limit(k)
     )
@@ -447,7 +447,7 @@ def ivf_knn_trained_quantized(
         pool.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("qv")).alias("distance"),
+            distance_expr(metric, "embedding", "qv").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -867,7 +867,7 @@ def _probe_trained(
     tables are in-process or loaded from the persisted artifact."""
     probe_cells = (
         cent_df.crossJoin(F.broadcast(q))
-        .select("cell", distance_expr("euclidean", F.col("cv"), F.col("qv")).alias("qd"))
+        .select("cell", distance_expr("euclidean", "cv", "qv").alias("qd"))
         .orderBy("qd", "cell")
         .limit(nprobe)
         .select("cell")
@@ -875,7 +875,7 @@ def _probe_trained(
     pool = assigned.join(F.broadcast(probe_cells), "cell")
     return (
         pool.crossJoin(F.broadcast(q))
-        .select("vec_id", distance_expr(metric, F.col("embedding"), F.col("qv")).alias("distance"))
+        .select("vec_id", distance_expr(metric, "embedding", "qv").alias("distance"))
         .orderBy("distance", "vec_id")
         .limit(k)
     )
@@ -904,7 +904,7 @@ def ivf_knn_batch(
     )
     from pyspark.sql import Window
 
-    qd = distance_expr("euclidean", F.col("cv"), F.col("q"))
+    qd = distance_expr("euclidean", "cv", "q")
     wq = Window.partitionBy("query_id").orderBy("qd", "cell")
     probe = (
         cent.crossJoin(F.broadcast(queries))
@@ -919,7 +919,7 @@ def ivf_knn_batch(
         pool.select(
             "query_id",
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
@@ -1515,7 +1515,7 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "n_a",
             "n_b",
-            distance_expr("cosine", F.col("va"), F.col("vb")).alias("drift"),
+            distance_expr("cosine", "va", "vb").alias("drift"),
         )
         .orderBy("label")
     )
@@ -1739,7 +1739,7 @@ def knn_strategy_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cent.crossJoin(F.broadcast(q))
                 .select(
                     "cell",
-                    distance_expr("euclidean", F.col("cv"), F.col("qv")).alias("qd"),
+                    distance_expr("euclidean", "cv", "qv").alias("qd"),
                 )
                 .orderBy("qd", "cell")
                 .limit(NPROBE)
@@ -1764,7 +1764,7 @@ def knn_strategy_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand.crossJoin(F.broadcast(q))
             .select(
                 "vec_id",
-                distance_expr("cosine", F.col("embedding"), F.col("qv")).alias(
+                distance_expr("cosine", "embedding", "qv").alias(
                     "distance"
                 ),
             )
@@ -1926,7 +1926,7 @@ def centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "clabel",
-        distance_expr("euclidean", F.col("v"), F.col("cv")).alias("distance"),
+        distance_expr("euclidean", "v", "cv").alias("distance"),
     )
     rn = F.row_number().over(
         Window.partitionBy("vec_id").orderBy("distance", "clabel")
@@ -2016,7 +2016,7 @@ def ivf_recommend(
         pc = (
             cent.select(
                 "cell",
-                distance_expr("euclidean", F.col("cv"), vecs[int(vid)]).alias("qd"),
+                distance_expr("euclidean", "cv", vecs[int(vid)]).alias("qd"),
             )
             .orderBy("qd", "cell")
             .limit(nprobe)
@@ -2031,12 +2031,12 @@ def ivf_recommend(
         .filter(~F.col("vec_id").isin(ids))
     )
     d_pos = least_of(
-        [distance_expr(metric, F.col("embedding"), vecs[int(p)]) for p in pos]
+        [distance_expr(metric, "embedding", vecs[int(p)]) for p in pos]
     )
     inf = F.lit(float("inf"))
     if neg:
         d_neg = least_of(
-            [distance_expr(metric, F.col("embedding"), vecs[int(n)]) for n in neg]
+            [distance_expr(metric, "embedding", vecs[int(n)]) for n in neg]
         )
         score = F.when(d_pos == inf, inf).otherwise(d_pos - d_neg)
     else:

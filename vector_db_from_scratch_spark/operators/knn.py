@@ -135,7 +135,7 @@ def flat_knn(
     return (
         joined.select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -300,7 +300,7 @@ def batch_knn(
     scored = emb.crossJoin(F.broadcast(queries)).select(
         "query_id",
         "vec_id",
-        distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+        distance_expr(metric, "embedding", "q").alias("distance"),
     )
     local = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
         "distance", "vec_id"
@@ -379,7 +379,7 @@ def radius_search(
     return (
         joined.select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .filter(F.col("distance") <= radius)
         .orderBy("distance", "vec_id")
@@ -431,7 +431,7 @@ def knn_per_label(
     scored = joined.select(
         "label",
         "vec_id",
-        distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+        distance_expr(metric, "embedding", "q").alias("distance"),
     )
     w = Window.partitionBy("label").orderBy("distance", "vec_id")
     return (
@@ -594,7 +594,7 @@ def knn_mmr_rerank(
             "embedding",
             (
                 F.lit(1.0)
-                - distance_expr("cosine", F.col("embedding"), F.col("q"))
+                - distance_expr("cosine", "embedding", "q")
             ).alias("rel"),
         )
         .orderBy(F.col("rel").desc(), "vec_id")
@@ -610,7 +610,7 @@ def knn_mmr_rerank(
             "a",
             "b",
             (
-                F.lit(1.0) - distance_expr("cosine", F.col("va"), F.col("vb"))
+                F.lit(1.0) - distance_expr("cosine", "va", "vb")
             ).alias("sim"),
         )
         .collect()
@@ -752,7 +752,7 @@ def hard_negatives(
         .select(
             "anchor_id",
             "vec_id",
-            distance_expr("cosine", F.col("v"), F.col("av")).alias("distance"),
+            distance_expr("cosine", "v", "av").alias("distance"),
         )
     )
     rn = F.row_number().over(
@@ -857,7 +857,7 @@ def _relevant_topk(
         "qid",
         "qlabel",
         "label",
-        distance_expr("cosine", F.col("v"), F.col("qv")).alias("distance"),
+        distance_expr("cosine", "v", "qv").alias("distance"),
         "vec_id",
     )
     rn = F.row_number().over(Window.partitionBy("qid").orderBy("distance", "vec_id"))
@@ -1150,7 +1150,7 @@ def late_interaction_topk(
             "label",
             "qtoken",
             F.round(
-                (F.lit(1.0) - cosine_distance(F.col("ee"), F.col("qv")))
+                (F.lit(1.0) - cosine_distance("ee", "qv"))
                 * F.lit(1_000_000.0),
                 0,
             )
@@ -1219,7 +1219,7 @@ def knn_search_after(
         emb.crossJoin(F.broadcast(query_vector_df(spark, sf_dir, query_vec_id)))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
     )
     cursor = (
@@ -1342,12 +1342,12 @@ def knn_recommend(
         # any distance work (and composes with the example exclusion)
         emb = emb.filter(F.col("label") == label_filter)
     d_pos = least_of(
-        [distance_expr(metric, F.col("embedding"), vecs[int(p)]) for p in pos]
+        [distance_expr(metric, "embedding", vecs[int(p)]) for p in pos]
     )
     inf = F.lit(float("inf"))
     if neg:
         d_neg = least_of(
-            [distance_expr(metric, F.col("embedding"), vecs[int(n)]) for n in neg]
+            [distance_expr(metric, "embedding", vecs[int(n)]) for n in neg]
         )
         score = F.when(d_pos == inf, inf).otherwise(d_pos - d_neg)
     else:
@@ -1443,7 +1443,7 @@ def knn_group_topk(
     ).select(
         "label",
         "vec_id",
-        distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+        distance_expr(metric, "embedding", "q").alias("distance"),
     )
     w_hits = Window.partitionBy("label").orderBy("distance", "vec_id")
     hits = (
@@ -1531,7 +1531,7 @@ def knn_distance_matrix(
         .select(
             "a_id",
             "b_id",
-            distance_expr(metric, F.col("embedding"), F.col("b_emb")).alias(
+            distance_expr(metric, "embedding", "b_emb").alias(
                 "distance"
             ),
         )
@@ -1613,7 +1613,7 @@ def knn_recommend_centroid(
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr("cosine", F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr("cosine", "embedding", "q").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -1698,8 +1698,8 @@ def knn_discovery(
     emb = load_table(spark, sf_dir, EMB).filter(~F.col("vec_id").isin(ids))
     votes = [
         F.when(
-            distance_expr(metric, F.col("embedding"), vecs[int(a)])
-            < distance_expr(metric, F.col("embedding"), vecs[int(b)]),
+            distance_expr(metric, "embedding", vecs[int(a)])
+            < distance_expr(metric, "embedding", vecs[int(b)]),
             1,
         ).otherwise(0)
         for a, b in prs
@@ -1711,7 +1711,7 @@ def knn_discovery(
         emb.select(
             "vec_id",
             score.cast("long").alias("context_score"),
-            distance_expr(metric, F.col("embedding"), vecs[int(target)]).alias(
+            distance_expr(metric, "embedding", vecs[int(target)]).alias(
                 "target_distance"
             ),
         )

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from . import _memo
 
-from ..functions.vector import arrow_embeddings, distance_expr, dot, oracle_distance_sql
+from ..functions.vector import Operand, arrow_embeddings, distance_expr, dot, oracle_distance_sql
 from ..sources.tables import load_table
 
 NUM_PROJECTIONS = 8
@@ -63,8 +63,9 @@ def projection_matrix(
 _PROJECTIONS = projection_matrix()
 
 
-def bucket_expr(v: Column, projections: list[list[float]] | None = None) -> Column:
-    """Little-endian sign-bit packing: bit i set iff P_i . v >= 0."""
+def bucket_expr(v: Operand, projections: list[list[float]] | None = None) -> Column:
+    """Little-endian sign-bit packing: bit i set iff P_i . v >= 0 (``v`` is
+    any ``dot`` operand, usually a column name)."""
     proj = projections if projections is not None else _PROJECTIONS
     b = F.lit(0)
     for i, row in enumerate(proj):
@@ -143,7 +144,7 @@ def build_index(emb: DataFrame, fast: bool = True) -> DataFrame:
     oracle-exact :func:`bucket_expr` path.
     """
     if not fast:
-        return emb.withColumn("bucket", bucket_expr(F.col("embedding")))
+        return emb.withColumn("bucket", bucket_expr("embedding"))
     return bucket_kernel(emb)
 
 
@@ -227,7 +228,7 @@ def lsh_knn(
         probe.unionAll(widened)
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), qvec).alias("distance"),
+            distance_expr(metric, "embedding", qvec).alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -267,7 +268,7 @@ def lsh_knn_multiprobe(
     ]
     return (
         emb.filter(F.col("bucket").isin(probe))
-        .select("vec_id", distance_expr(metric, F.col("embedding"), qvec).alias("distance"))
+        .select("vec_id", distance_expr(metric, "embedding", qvec).alias("distance"))
         .orderBy("distance", "vec_id")
         .limit(k)
     )
@@ -323,7 +324,7 @@ def lsh_knn_batch(
         probed.select(
             "query_id",
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
@@ -378,7 +379,7 @@ def lsh_knn_batch_fallback(
         pool.select(
             "query_id",
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
@@ -479,7 +480,7 @@ def bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     function over every vector. One groupBy on an 8-bit key: at any scale
     the shuffle moves at most 2^num_projections rows per partition."""
     emb = load_table(spark, sf_dir, "embeddings")
-    idx = emb.withColumn("bucket", bucket_expr(F.col("embedding")))
+    idx = emb.withColumn("bucket", bucket_expr("embedding"))
     return (
         idx.groupBy("bucket")
         .agg(
@@ -785,7 +786,7 @@ def knn_graph_blocked(
         .select(
             "vec_id",
             "nbr_id",
-            distance_expr(metric, F.col("embedding"), F.col("nbr_emb")).alias("distance"),
+            distance_expr(metric, "embedding", "nbr_emb").alias("distance"),
         )
     )
     w = Window.partitionBy("vec_id").orderBy("distance", "nbr_id")

@@ -72,7 +72,7 @@ def matryoshka_knn(
         .crossJoin(F.broadcast(qrow.select("qh")))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("h"), F.col("qh")).alias("coarse"),
+            distance_expr(metric, "h", "qh").alias("coarse"),
         )
         .orderBy("coarse", "vec_id")
         .limit(k * oversample)
@@ -82,7 +82,7 @@ def matryoshka_knn(
         .crossJoin(F.broadcast(qrow.select("q")))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)

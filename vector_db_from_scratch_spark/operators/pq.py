@@ -339,7 +339,7 @@ def _adc_rerank(
     return (
         emb.join(F.broadcast(shortlist), "vec_id")
         .crossJoin(F.broadcast(q))
-        .select("vec_id", distance_expr(metric, F.col("embedding"), F.col("qv")).alias("distance"))
+        .select("vec_id", distance_expr(metric, "embedding", "qv").alias("distance"))
         .orderBy("distance", "vec_id")
         .limit(k)
     )
@@ -382,7 +382,7 @@ def _ivfpq_index(
     )
     from .ivf import argmin_cell
 
-    cd = distance_expr("euclidean", F.col("embedding"), F.col("cv"), round_to=None)
+    cd = distance_expr("euclidean", "embedding", "cv", round_to=None)
     assigned = argmin_cell(
         emb.crossJoin(F.broadcast(cent_df)).withColumn("cd", cd),
         "vec_id",
@@ -458,7 +458,7 @@ def ivfpq_knn(
     return (
         emb.join(F.broadcast(shortlist), "vec_id")
         .crossJoin(F.broadcast(q))
-        .select("vec_id", distance_expr(metric, F.col("embedding"), F.col("qv")).alias("distance"))
+        .select("vec_id", distance_expr(metric, "embedding", "qv").alias("distance"))
         .orderBy("distance", "vec_id")
         .limit(k)
     )
@@ -919,7 +919,7 @@ def pq_knn_rerank_quantized(
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("v"), F.col("qv")).alias("distance"),
+            distance_expr(metric, "v", "qv").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -1117,7 +1117,7 @@ def ivfpq_knn_quantized(
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("v"), F.col("qv")).alias("distance"),
+            distance_expr(metric, "v", "qv").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)

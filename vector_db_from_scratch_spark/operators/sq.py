@@ -104,7 +104,7 @@ def sq8_knn(
         recon.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("r"), F.col("q")).alias("distance"),
+            distance_expr(metric, "r", "q").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)
@@ -165,7 +165,7 @@ def sq8_knn_rerank(
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            distance_expr(metric, F.col("embedding"), F.col("q")).alias("distance"),
+            distance_expr(metric, "embedding", "q").alias("distance"),
         )
         .orderBy("distance", "vec_id")
         .limit(k)

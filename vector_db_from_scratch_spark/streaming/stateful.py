@@ -380,7 +380,7 @@ def knn_ingest_stream(
     vec = embeddings_stream(spark, sf_dir)
     scored = vec.select(
         "vec_id",
-        distance_expr("cosine", F.col("embedding"), qv).alias("distance"),
+        distance_expr("cosine", "embedding", qv).alias("distance"),
         (F.col("vec_id") % KNN_STREAM_SHARDS).alias("shard"),
     )
     return scored.groupBy("shard").applyInPandasWithState(

@@ -647,7 +647,7 @@ def lsh_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vec = embeddings_stream(spark, sf_dir)
     return (
-        vec.withColumn("bucket", bucket_expr(F.col("embedding")))
+        vec.withColumn("bucket", bucket_expr("embedding"))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
