@@ -432,17 +432,15 @@ def test_canonical_select_policy_and_partition(spark, sf_dir):
 
     from vector_db_from_scratch_spark.operators.dedup import (
         canonical_select,
-        minhash_lsh_pairs,
         _clusters_cached,
     )
     from vector_db_from_scratch_spark.sources.tables import load_table
 
     rows = canonical_select(spark, sf_dir).collect()
     assert rows
-    pairs = minhash_lsh_pairs(spark, sf_dir).select("d1", "d2")
     labels = {
         r["node"]: r["cluster_rep"]
-        for r in _clusters_cached(spark, sf_dir, 0.3, "minhash", pairs).collect()
+        for r in _clusters_cached(spark, sf_dir, 0.3, "minhash").collect()
     }
     nchars = {
         r["doc_id"]: r["n_chars"]

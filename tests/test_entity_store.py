@@ -302,8 +302,14 @@ def test_entity_calls_eager_job_counts(spark):
     with or without a new embedding to validate. delete_chunk and a text
     update of a delta chunk run none; a new embedding for a delta chunk
     runs one (its document's library). Building a flat search over a
-    written store runs none (its delta relation is local)."""
+    written store runs none (its delta relation is local).
+
+    The fixture's tables are re-based on RDDs, as any scanned table is: a
+    local relation answers a collect on the driver without a job, which
+    would hide the lookups this test counts."""
     import uuid
+
+    from vector_db_from_scratch_spark.operators.entity import EntityStore
 
     sc = spark.sparkContext
 
@@ -316,7 +322,9 @@ def test_entity_calls_eager_job_counts(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    store = demo_store(spark)
+    demo = demo_store(spark)
+    store = EntityStore(*(spark.createDataFrame(df.rdd, df.schema)
+                          for df in (demo.libraries, demo.documents, demo.chunks)))
     assert jobs(lambda: store._library("lib-cos")) == 1  # the catalog, once
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

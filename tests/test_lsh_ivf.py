@@ -342,7 +342,7 @@ def test_merged_segments_probe_equals_in_memory(spark, sf_dir):
     exactly the in-memory probe's results (ids AND distances), and the
     merged index holds every corpus row exactly once."""
     from vector_db_from_scratch_spark.operators.lsh import (
-        _SEGMENT_MEMO,
+        _merged_segments_path,
         load_index,
         lsh_index_merge_knn,
     )
@@ -350,7 +350,7 @@ def test_merged_segments_probe_equals_in_memory(spark, sf_dir):
     mem = lsh_knn(spark, sf_dir, "cosine", k=10, query_vec_id=0).collect()
     merged = lsh_index_merge_knn(spark, sf_dir, "cosine", k=10, query_vec_id=0).collect()
     assert [tuple(r) for r in mem] == [tuple(r) for r in merged]
-    path = _SEGMENT_MEMO[(spark.sparkContext.applicationId, sf_dir)]
+    path = _merged_segments_path(spark, sf_dir)  # memo hit: the probed artifact
     idx = load_index(spark, path)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     assert idx.count() == emb.count()

@@ -99,17 +99,38 @@ def test_property_link_prediction_matches_python_on_random_graphs(spark):
     run()
 
 
-def test_kcore_override_states_registered_for_release(spark):
+def test_kcore_override_states_registered_for_release(spark, monkeypatch):
     """ADVICE r9: the override path's localCheckpointed per-iteration
-    states must be reachable from the memo registry so _memo.clear() can
-    unpersist them (repeated fuzz calls otherwise accumulate checkpointed
-    RDDs until process exit)."""
+    states must be held by the memo layer so _memo.clear() can unpersist
+    them (repeated fuzz calls otherwise accumulate checkpointed RDDs until
+    process exit). The layer's containers are swapped for empty ones so
+    the clear() below releases only this call's states, not the session's
+    other artifacts."""
+    from vector_db_from_scratch_spark.operators import _memo
+
+    monkeypatch.setattr(_memo, "_STORE", {})
+    monkeypatch.setattr(_memo, "_HELD", [])
     nodes_df, und_df = _dfs(spark, [0, 1, 2], [(0, 1), (1, 2)])
-    before = {k for k in graph._CHAIN_MEMO if "override" in k}
     graph.kcore_trajectory(
         spark, "unused", k=1, iters=2, nodes_df=nodes_df, und_df=und_df
     ).collect()
-    added = {k for k in graph._CHAIN_MEMO if "override" in k} - before
-    assert len(added) == 1
-    states = graph._CHAIN_MEMO[added.pop()]
+    assert len(_memo._HELD) == 1
+    app_id, states = _memo._HELD[0]
+    assert app_id == spark.sparkContext.applicationId
     assert len(states) == 3  # initial + 2 iterations, each (nodes, edges)
+
+    frames = [df for state in states for df in state]
+    cls = type(frames[0])
+    released = []
+    original = cls.unpersist
+
+    def recording_unpersist(self, *args, **kwargs):
+        released.append(self)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "unpersist", recording_unpersist)
+    assert _memo.clear(app_id) == 1
+    assert _memo._HELD == []
+    assert len(released) == 6 and all(
+        any(r is f for r in released) for f in frames
+    )

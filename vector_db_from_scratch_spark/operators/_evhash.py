@@ -36,43 +36,38 @@ from .countmin import CM_DEPTH, _bucket_expr
 # column so it is computed once).
 N_SHARDS = 4
 
-_MEMO: dict[tuple, DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def events_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(user_id, grp, shard, h, b0..b{CM_DEPTH-1})`` — one row per events
     row: ``grp`` = event_type, ``shard`` = user_id % N_SHARDS, ``h`` =
     hash60(user_id), ``bi`` = the i-th count-min bucket of user_id."""
-    key = (spark.sparkContext.applicationId, sf_dir, "events_hashed")
-    if key not in _MEMO:
-        # the frame BAKES the shard column, so a drifted or dropped
-        # module-level N_SHARDS in any consumer family would silently
-        # corrupt that family's merge demonstrators (ADVICE r10) -- fail
-        # loudly instead
-        from . import ams, hll, kmv
-        from . import countmin as cm
+    # the frame BAKES the shard column, so a drifted or dropped
+    # module-level N_SHARDS in any consumer family would silently
+    # corrupt that family's merge demonstrators (ADVICE r10) -- fail
+    # loudly instead
+    from . import ams, hll, kmv
+    from . import countmin as cm
 
-        for mod in (ams, cm, kmv, hll):
-            got = getattr(mod, "N_SHARDS", None)
-            if got != N_SHARDS:
-                raise AssertionError(
-                    f"{mod.__name__}.N_SHARDS is "
-                    f"{'missing' if got is None else got}, not _evhash.N_SHARDS "
-                    f"({N_SHARDS}); the shared hashed-events frame bakes the shard column"
-                )
-        uid = F.col("user_id")
-        _MEMO[key] = (
-            load_table(spark, sf_dir, "events")
-            .select(
-                uid,
-                F.col("event_type").alias("grp"),
-                (uid % N_SHARDS).alias("shard"),
-                hash60(uid.cast("string")).alias("h"),
-                *[_bucket_expr(uid, i).alias(f"b{i}") for i in range(CM_DEPTH)],
+    for mod in (ams, cm, kmv, hll):
+        got = getattr(mod, "N_SHARDS", None)
+        if got != N_SHARDS:
+            raise AssertionError(
+                f"{mod.__name__}.N_SHARDS is "
+                f"{'missing' if got is None else got}, not _evhash.N_SHARDS "
+                f"({N_SHARDS}); the shared hashed-events frame bakes the shard column"
             )
-            .localCheckpoint()
+    uid = F.col("user_id")
+    return (
+        load_table(spark, sf_dir, "events")
+        .select(
+            uid,
+            F.col("event_type").alias("grp"),
+            (uid % N_SHARDS).alias("shard"),
+            hash60(uid.cast("string")).alias("h"),
+            *[_bucket_expr(uid, i).alias(f"b{i}") for i in range(CM_DEPTH)],
         )
-    return _MEMO[key]
+        .localCheckpoint()
+    )
 
 
 def cm_cells(frame: DataFrame, *keys: str) -> DataFrame:

@@ -26,8 +26,6 @@ from pyspark.sql import functions as F
 from ..operators import _memo
 from ..sources.tables import load_table
 
-_BOOT_MEMO: dict[tuple, "DataFrame"] = _memo.register({})
-
 FUNNEL_STEPS = ("view", "click", "purchase")
 FUNNEL_WINDOW = "INTERVAL 1 HOUR"  # each step within 1h of the previous
 
@@ -410,6 +408,27 @@ _POISSON1_CDF_MICROS = (
 )
 
 
+@_memo.per_app
+def _hashed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(h, p_micros) per order, materialized BEFORE the replicate
+    crossJoin: project collapsing would otherwise inline the md5 into
+    every one of the 9 threshold comparisons x 2 uses of w per (row,
+    replicate) -- measured 7s warm at sf0.1 vs <1s hashed-once."""
+    from ..functions.hashing import hash31
+    from .relational import MICRO
+
+    return (
+        load_table(spark, sf_dir, "orders")
+        .select(
+            hash31(F.col("o_orderkey").cast("string")).alias("h"),
+            F.round(F.col("o_totalprice") * F.lit(float(MICRO)), 0)
+            .cast("long")
+            .alias("p_micros"),
+        )
+        .localCheckpoint()
+    )
+
+
 def bootstrap_ci(
     spark: SparkSession, sf_dir: str, b: int = B_REPLICATES
 ) -> DataFrame:
@@ -437,28 +456,10 @@ def bootstrap_ci(
     # divisor (ADVICE r9)
     if b < 4:
         raise ValueError(f"bootstrap_ci: b must be >= 4, got {b}")
-    from ..functions.hashing import MERSENNE31, hash31, minhash_params
+    from ..functions.hashing import MERSENNE31, minhash_params
     from .relational import MICRO
 
-    key = (spark.sparkContext.applicationId, sf_dir, "bootstrap_hashed")
-    if key in _BOOT_MEMO:
-        orders = _BOOT_MEMO[key]
-    else:
-        # materialize (h, p_micros) BEFORE the replicate crossJoin:
-        # project collapsing would otherwise inline the md5 into every
-        # one of the 9 threshold comparisons x 2 uses of w per
-        # (row, replicate) -- measured 7s warm at sf0.1 vs <1s hashed-once
-        orders = (
-            load_table(spark, sf_dir, "orders")
-            .select(
-                hash31(F.col("o_orderkey").cast("string")).alias("h"),
-                F.round(F.col("o_totalprice") * F.lit(float(MICRO)), 0)
-                .cast("long")
-                .alias("p_micros"),
-            )
-            .localCheckpoint()
-        )
-        _BOOT_MEMO[key] = orders
+    orders = _hashed_orders(spark, sf_dir)
     params = minhash_params(b, seed=131)
     # arrow_local_df, not createDataFrame: tuple-list local relations
     # re-serialize per ACTION on this build (~4.5s for a handful of rows

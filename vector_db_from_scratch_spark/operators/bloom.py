@@ -115,31 +115,18 @@ def _positions_df(keys: DataFrame, m_bits: int) -> DataFrame:
 # The filter is a content-keyed artifact like the LSH/IVF index tables
 # (VERDICT r7 "what's wrong" #1: rebuilding it per call -- a keys.count()
 # sizing job plus the position-set recompute -- was the slowest warm
-# query's entire cost). Built once per (application, sf_dir, sizing
-# params), cached, shared by bloom_bitmap and bloom_prefiltered_join.
-_FILTER_MEMO: dict[tuple[str, str, int, int, int], tuple[int, DataFrame, DataFrame]] = (
-    _memo.register({})
-)
-
-
+# query's entire cost). Built once per (application, sf_dir), cached,
+# shared by bloom_bitmap and bloom_prefiltered_join.
+@_memo.per_app
 def _bloom_filter(spark: SparkSession, sf_dir: str) -> tuple[int, DataFrame, DataFrame]:
     """(m_bits, keys, distinct position set) for the urgent-orders filter,
     memoized per application -- the cluster analog is building the filter
     once and broadcasting it to every probe stage."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        K_HASHES,
-        BITS_PER_KEY,
-        BITS_PER_WORD,
-    )
-    if key not in _FILTER_MEMO:
-        keys = _urgent_keys(spark, sf_dir).cache()
-        m_bits = _m_bits(keys.count())
-        bits = _positions_df(keys, m_bits).distinct().cache()
-        bits.count()  # materialize: probes must never re-run the build
-        _FILTER_MEMO[key] = (m_bits, keys, bits)
-    return _FILTER_MEMO[key]
+    keys = _urgent_keys(spark, sf_dir).cache()
+    m_bits = _m_bits(keys.count())
+    bits = _positions_df(keys, m_bits).distinct().cache()
+    bits.count()  # materialize: probes must never re-run the build
+    return m_bits, keys, bits
 
 
 def bloom_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -57,29 +57,29 @@ from ..sources.tables import arrow_local_df, load_table
 DIM = 64
 HALF = 32
 
-_THR_MEMO: dict[tuple[str, str, int], list] = _memo.register({})
+@_memo.per_app
+def threshold_list(spark: SparkSession, sf_dir: str, dim: int = DIM) -> list[float]:
+    """The trained binarizer: thr[i] = (min_i + max_i) / 2 over the corpus.
+    Elementwise min/max as 2*dim scalar aggregates in one pass; memoized
+    per (application, sf_dir) like the SQ8 ranges (operators/sq.py)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = F.col("embedding")
+    row = emb.agg(
+        F.array(
+            *[
+                (F.min(e[i].cast("double")) + F.max(e[i].cast("double")))
+                / F.lit(2.0)
+                for i in range(dim)
+            ]
+        ).alias("thr")
+    ).collect()[0]
+    return list(row["thr"])
 
 
 def bq_thresholds(spark: SparkSession, sf_dir: str, dim: int = DIM) -> DataFrame:
-    """One-row DataFrame of the per-dimension threshold array -- the
-    trained binarizer: thr[i] = (min_i + max_i) / 2 over the corpus.
-    Elementwise min/max as 2*dim scalar aggregates in one pass; memoized
-    per (application, sf_dir) like the SQ8 ranges (operators/sq.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir, dim)
-    if key not in _THR_MEMO:
-        emb = load_table(spark, sf_dir, "embeddings")
-        e = F.col("embedding")
-        row = emb.agg(
-            F.array(
-                *[
-                    (F.min(e[i].cast("double")) + F.max(e[i].cast("double")))
-                    / F.lit(2.0)
-                    for i in range(dim)
-                ]
-            ).alias("thr")
-        ).collect()[0]
-        _THR_MEMO[key] = list(row["thr"])
-    return arrow_local_df(spark, {"thr": [_THR_MEMO[key]]}, "thr array<double>")
+    """One-row DataFrame of the per-dimension threshold array."""
+    thr = threshold_list(spark, sf_dir, dim)
+    return arrow_local_df(spark, {"thr": [thr]}, "thr array<double>")
 
 
 # bit j of the low half = dim j; bit j of the high half = dim 32+j.
@@ -258,7 +258,13 @@ LIMIT {k}
 # memory-tier deployment where codes live in RAM and vectors on disk.
 # --------------------------------------------------------------------------
 
-_CODES_PERSISTED_MEMO: dict[tuple[str, str], str] = _memo.register({})
+@_memo.per_app
+def _persisted_codes(spark: SparkSession, sf_dir: str) -> str:
+    from ..sources.artifacts import scratch_dir
+
+    path = scratch_dir("bq-codes-")
+    _codes(spark, sf_dir).write.mode("overwrite").parquet(path)
+    return path
 
 
 def bq_index_persisted_knn(
@@ -273,14 +279,7 @@ def bq_index_persisted_knn(
     run the Hamming shortlist + exact re-rank against the artifact. Same
     results as :func:`bq_knn_rerank` -- the gate runs both against the
     same oracle."""
-    from ..sources.artifacts import scratch_dir
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CODES_PERSISTED_MEMO:
-        path = scratch_dir("bq-codes-")
-        _codes(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _CODES_PERSISTED_MEMO[key] = path
-    codes = spark.read.parquet(_CODES_PERSISTED_MEMO[key])
+    codes = spark.read.parquet(_persisted_codes(spark, sf_dir))
     return bq_knn_rerank(
         spark,
         sf_dir,

@@ -716,7 +716,7 @@ def leakage_safe_split(
     from .dedup import _clusters_cached, minhash_lsh_pairs
 
     pairs = minhash_lsh_pairs(spark, sf_dir, threshold).select("d1", "d2")
-    labels = _clusters_cached(spark, sf_dir, threshold, "minhash", pairs).select(
+    labels = _clusters_cached(spark, sf_dir, threshold, "minhash").select(
         F.col("node").alias("doc_id"), "cluster_rep"
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id")

@@ -118,9 +118,7 @@ def _shingle_batches(it):
         yield pd.DataFrame({"doc_id": out_id, "sh": out_h})
 
 
-_INDEX_MEMO: dict[tuple[str, str, bool], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _shingle_index(spark: SparkSession, sf_dir: str, fast: bool = True) -> DataFrame:
     """Inverted shingle index (doc_id, shingle_hash).
 
@@ -137,9 +135,6 @@ def _shingle_index(spark: SparkSession, sf_dir: str, fast: bool = True) -> DataF
     materialized once as a table; the per-application memo + cache() is
     the in-session analog (ints only -- strings never survive the map).
     """
-    key = (spark.sparkContext.applicationId, sf_dir, fast)
-    if key in _INDEX_MEMO:
-        return _INDEX_MEMO[key]
     docs = load_table(spark, sf_dir, "documents")
     if fast:
         out = (
@@ -154,13 +149,10 @@ def _shingle_index(spark: SparkSession, sf_dir: str, fast: bool = True) -> DataF
             .distinct()  # per-doc-distinct hashes; see _shingle_batches
             .cache()
         )
-    _INDEX_MEMO[key] = out
     return out
 
 
-_DF_MEMO: dict[tuple[str, str], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _shingle_df_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shingle document frequency (sh, df) -- the index's stats table.
 
@@ -169,18 +161,11 @@ def _shingle_df_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dfcap variants share it. At 100 TB this is the stats sidecar you
     materialize next to the inverted index; locally cache() stands in.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DF_MEMO:
-        return _DF_MEMO[key]
     sh = _shingle_index(spark, sf_dir)
-    out = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).cache()
-    _DF_MEMO[key] = out
-    return out
+    return sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df")).cache()
 
 
-_SETS_MEMO: dict[tuple[str, str], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shset, n): per-document distinct-shingle array + set size --
     the candidate VERIFICATION artifact. Exact Jaccard/containment for a
@@ -192,17 +177,12 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized next to the inverted index; rows are a few hundred longs
     each, so the join moves O(candidates) compact arrays, not O(candidates
     x shingles) exploded rows."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SETS_MEMO:
-        return _SETS_MEMO[key]
     sh = _shingle_index(spark, sf_dir)
-    out = (
+    return (
         sh.groupBy("doc_id")
         .agg(F.collect_list("sh").alias("shset"), F.count(F.lit(1)).alias("n"))
         .cache()
     )
-    _SETS_MEMO[key] = out
-    return out
 
 
 def _verify_jaccard(surv: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
@@ -225,31 +205,24 @@ def _verify_jaccard(surv: DataFrame, sets: DataFrame, threshold: float) -> DataF
     )
 
 
-_PAIRS_MEMO: dict[tuple[str, str, float], DataFrame] = _memo.register({})
-_INTER_MEMO: dict[tuple[str, str], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _pair_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unordered pair intersection counts (d1 < d2, c = |shingles(d1) ∩
     shingles(d2)|) -- the expensive self-join over the inverted index,
     shared by the Jaccard AND containment families (memoized: one shuffle
     feeds both similarity definitions)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _INTER_MEMO:
-        return _INTER_MEMO[key]
     sh = _shingle_index(spark, sf_dir)
     a = sh.alias("a")
     b = sh.alias("b")
-    out = (
+    return (
         a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .agg(F.count(F.lit(1)).alias("c"))
         .cache()
     )
-    _INTER_MEMO[key] = out
-    return out
 
 
+@_memo.per_app
 def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str, threshold: float) -> DataFrame:
     """Unordered verified near-dup pair table (d1, d2, jaccard) -- the
     second derived artifact after the shingle index. Memoized + cached:
@@ -257,16 +230,13 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str, threshold: float) ->
     prep's drop set, tests), each of which re-ran the self-join +
     intersection aggregation. At 100 TB this is the materialized pair
     table every dedup job reads; locally cache() stands in."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    if key in _PAIRS_MEMO:
-        return _PAIRS_MEMO[key]
     sh = _shingle_index(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = _pair_intersections(spark, sf_dir)
     sa = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
     sb = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     jac = F.col("c").cast("double") / (F.col("n1") + F.col("n2") - F.col("c")).cast("double")
-    out = (
+    return (
         inter.join(sa, "d1")
         .join(sb, "d2")
         .withColumn("jaccard", jac)
@@ -274,8 +244,6 @@ def _jaccard_pairs_cached(spark: SparkSession, sf_dir: str, threshold: float) ->
         .select("d1", "d2", "jaccard")
         .cache()
     )
-    _PAIRS_MEMO[key] = out
-    return out
 
 
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.3) -> DataFrame:
@@ -457,11 +425,7 @@ def _minhash_signature(sh: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-_SIG_MEMO: dict[tuple[str, str, int], DataFrame] = _memo.register({})
-_MH_CAND_MEMO: dict[tuple, DataFrame] = _memo.register({})
-_MH_PAIRS_MEMO: dict[tuple, DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _minhash_signature_cached(
     spark: SparkSession, sf_dir: str, num_hashes: int
 ) -> DataFrame:
@@ -469,12 +433,7 @@ def _minhash_signature_cached(
     default and autotuned banding schemes use different K). One groupBy
     over the shingle index per scheme per application -- the signature
     table a production MinHash pipeline materializes next to the index."""
-    key = (spark.sparkContext.applicationId, sf_dir, num_hashes)
-    if key in _SIG_MEMO:
-        return _SIG_MEMO[key]
-    out = _minhash_signature(_shingle_index(spark, sf_dir), num_hashes).cache()
-    _SIG_MEMO[key] = out
-    return out
+    return _minhash_signature(_shingle_index(spark, sf_dir), num_hashes).cache()
 
 
 def minhash_lsh_pairs(
@@ -499,23 +458,32 @@ def minhash_lsh_pairs(
        (:func:`_shingle_sets`) instead of re-joining the exploded
        inverted index twice.
     """
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "mh_pairs",
-        threshold, num_hashes, band_size, bucket_cap,
+    return _minhash_pairs_cached(
+        spark, sf_dir, threshold, num_hashes, band_size, bucket_cap
+    ).orderBy("d1", "d2")
+
+
+@_memo.per_app
+def _minhash_pairs_cached(
+    spark: SparkSession,
+    sf_dir: str,
+    threshold: float,
+    num_hashes: int,
+    band_size: int,
+    bucket_cap: int,
+) -> DataFrame:
+    surv = _minhash_candidates(
+        spark, sf_dir, threshold, num_hashes, band_size, bucket_cap
     )
-    if key not in _MH_PAIRS_MEMO:
-        surv = _minhash_candidates(
-            spark, sf_dir, threshold, num_hashes, band_size, bucket_cap
-        )
-        sets = _shingle_sets(spark, sf_dir)
-        # cached verified-pair artifact, same discipline as the dfcap and
-        # embedding pair tables (builds.py already lists this as a named
-        # build; the memo is what actually makes later consumers --
-        # leakage split, canonical select, cluster labels -- memo hits)
-        _MH_PAIRS_MEMO[key] = _verify_jaccard(surv, sets, threshold).cache()
-    return _MH_PAIRS_MEMO[key].orderBy("d1", "d2")
+    sets = _shingle_sets(spark, sf_dir)
+    # cached verified-pair artifact, same discipline as the dfcap and
+    # embedding pair tables (builds.py already lists this as a named
+    # build; the memo is what actually makes later consumers --
+    # leakage split, canonical select, cluster labels -- memo hits)
+    return _verify_jaccard(surv, sets, threshold).cache()
 
 
+@_memo.per_app
 def _minhash_candidates(
     spark: SparkSession,
     sf_dir: str,
@@ -531,12 +499,6 @@ def _minhash_candidates(
     the banding window + bucket self-join + signature prefilter ran once
     per CONSUMING QUERY before round 10 (edit-distance, jaccard, and the
     cluster/split/canonical chain each re-ran it on every invocation)."""
-    key = (
-        spark.sparkContext.applicationId, sf_dir, "mh_cand",
-        threshold, num_hashes, band_size, bucket_cap,
-    )
-    if key in _MH_CAND_MEMO:
-        return _MH_CAND_MEMO[key]
     sig = _minhash_signature_cached(spark, sf_dir, num_hashes)
     n_bands = num_hashes // band_size
     band_keys = [
@@ -580,7 +542,7 @@ def _minhash_candidates(
         F.lit(0),
         lambda acc, v: acc + v,
     )
-    out = (
+    return (
         cand.join(
             sigarr.select(F.col("doc_id").alias("d1"), F.col("sig").alias("sig1")), "d1"
         )
@@ -591,11 +553,6 @@ def _minhash_candidates(
         .select("d1", "d2")
         .cache()
     )
-    _MH_CAND_MEMO[key] = out
-    return out
-
-
-_BUCKETCAP_AUTO_MEMO: dict[tuple, DataFrame] = _memo.register({})
 
 
 def minhash_lsh_pairs_bucketcap_auto(
@@ -615,13 +572,21 @@ def minhash_lsh_pairs_bucketcap_auto(
     Computed in-engine with exact integer arithmetic, so the oracle
     derives the identical cap. The signature pre-filter and shingle-set
     verification are unchanged. The verified pair table is memoized like
-    every other derived pair artifact (_PAIRS_MEMO discipline)."""
-    memo_key = (
-        spark.sparkContext.applicationId, sf_dir,
-        threshold, num_hashes, band_size, pairs_per_doc,
-    )
-    if memo_key in _BUCKETCAP_AUTO_MEMO:
-        return _BUCKETCAP_AUTO_MEMO[memo_key].orderBy("d1", "d2")
+    every other derived pair artifact."""
+    return _bucketcap_auto_pairs(
+        spark, sf_dir, threshold, num_hashes, band_size, pairs_per_doc
+    ).orderBy("d1", "d2")
+
+
+@_memo.per_app
+def _bucketcap_auto_pairs(
+    spark: SparkSession,
+    sf_dir: str,
+    threshold: float,
+    num_hashes: int,
+    band_size: int,
+    pairs_per_doc: int,
+) -> DataFrame:
     sig = _minhash_signature_cached(spark, sf_dir, num_hashes)
     n_bands = num_hashes // band_size
     band_keys = [
@@ -693,9 +658,7 @@ def minhash_lsh_pairs_bucketcap_auto(
         .select("d1", "d2")
     )
     sets = _shingle_sets(spark, sf_dir)
-    out = _verify_jaccard(surv, sets, threshold).cache()
-    _BUCKETCAP_AUTO_MEMO[memo_key] = out
-    return out.orderBy("d1", "d2")
+    return _verify_jaccard(surv, sets, threshold).cache()
 
 
 def minhash_lsh_pairs_bucketcap_auto_oracle(
@@ -978,9 +941,6 @@ ORDER BY d1, d2
 # Embedding-cosine near-dup (blocked by label as the scale-path bucketing)
 # --------------------------------------------------------------------------
 
-_EMB_PAIRS_MEMO: dict[tuple[str, str, float], DataFrame] = _memo.register({})
-
-
 def _neardup_blocks(df: DataFrame, block_col: str, threshold: float) -> DataFrame:
     """Per-block pair similarity: each block's vectors cross the Arrow
     boundary once; the whole pair space is a single G = U.U^T matmul."""
@@ -1007,6 +967,20 @@ def _neardup_blocks(df: DataFrame, block_col: str, threshold: float) -> DataFram
         .orderBy("v1", "v2")
     )
 
+
+# memoized: the verified pair table feeds both the pairs report and the
+# clustering query (the materialized-artifact pattern of
+# _jaccard_pairs_cached applied to the embedding modality)
+@_memo.per_app
+def _label_blocked_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float
+) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _neardup_blocks(
+        emb.select("vec_id", "label", "embedding"), "label", threshold
+    ).cache()
+
+
 def embedding_neardup(
     spark: SparkSession, sf_dir: str, threshold: float = 0.4, fast: bool = True
 ) -> DataFrame:
@@ -1028,20 +1002,12 @@ def embedding_neardup(
     Zero vectors normalize to zero (sim 0 with everything), matching the
     unguarded-cosine exclusion below any positive threshold.
     """
-    emb = load_table(spark, sf_dir, "embeddings")
     if fast:
-        # memoized: the verified pair table feeds both the pairs report and
-        # the clustering query (the materialized-artifact pattern of
-        # _jaccard_pairs_cached applied to the embedding modality)
-        key = (spark.sparkContext.applicationId, sf_dir, threshold)
-        if key not in _EMB_PAIRS_MEMO:
-            _EMB_PAIRS_MEMO[key] = _neardup_blocks(
-                emb.select("vec_id", "label", "embedding"), "label", threshold
-            ).cache()
-        return _EMB_PAIRS_MEMO[key]
+        return _label_blocked_pairs(spark, sf_dir, threshold)
 
     from ..functions.vector import dot, l2_norm
 
+    emb = load_table(spark, sf_dir, "embeddings")
     v = F.col("embedding").cast("array<double>")
     n = l2_norm("embedding")
     unit = F.when(n == 0.0, v).otherwise(F.transform(v, lambda x: x / n))
@@ -1070,15 +1036,19 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str, threshold: float = 0
     threshold) like the label-blocked twin: the verified pair table feeds
     both the pairs report and the clustering query.
     """
+    return _bucket_blocked_pairs(spark, sf_dir, threshold)
+
+
+@_memo.per_app
+def _bucket_blocked_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float
+) -> DataFrame:
     from .lsh import index_table
 
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, "lsh")
-    if key not in _EMB_PAIRS_MEMO:
-        emb = index_table(spark, sf_dir)
-        _EMB_PAIRS_MEMO[key] = _neardup_blocks(
-            emb.select("vec_id", F.col("bucket"), "embedding"), "bucket", threshold
-        ).cache()
-    return _EMB_PAIRS_MEMO[key]
+    emb = index_table(spark, sf_dir)
+    return _neardup_blocks(
+        emb.select("vec_id", F.col("bucket"), "embedding"), "bucket", threshold
+    ).cache()
 
 
 def _embedding_lsh_pairs_cte(threshold: float) -> tuple[str, str]:
@@ -1106,9 +1076,7 @@ def embedding_neardup_lsh_oracle(threshold: float = 0.3) -> str:
     return f"WITH {ctes}\n{final}\nORDER BY v1, v2"
 
 
-_DFCAP_PAIRS_MEMO: dict[tuple[str, str, float, int], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _dfcap_pairs_cached(
     spark: SparkSession, sf_dir: str, threshold: float, max_df: int
 ) -> DataFrame:
@@ -1117,9 +1085,6 @@ def _dfcap_pairs_cached(
     clustering query, and the corpus-prep drop set (same fan-out as the
     uncapped `_jaccard_pairs_cached`, which survives as the test-only
     recall cross-check)."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, max_df)
-    if key in _DFCAP_PAIRS_MEMO:
-        return _DFCAP_PAIRS_MEMO[key]
     sh = _shingle_index(spark, sf_dir)
     df_counts = _shingle_df_counts(spark, sf_dir)
     rare = sh.join(
@@ -1132,9 +1097,7 @@ def _dfcap_pairs_cached(
         .distinct()
     )
     sets = _shingle_sets(spark, sf_dir)
-    out = _verify_jaccard(cand, sets, threshold).cache()
-    _DFCAP_PAIRS_MEMO[key] = out
-    return out
+    return _verify_jaccard(cand, sets, threshold).cache()
 
 
 def ngram_jaccard_pairs_dfcap(
@@ -1171,9 +1134,6 @@ def minhash_lsh_pairs_autotuned_oracle(threshold: float = 0.5, max_hashes: int =
     return minhash_lsh_pairs_oracle(threshold, num_hashes=b * r, band_size=r)
 
 
-_DFCAP_AUTO_MEMO: dict[tuple[str, str, float, int], DataFrame] = _memo.register({})
-
-
 def ngram_jaccard_pairs_dfcap_auto(
     spark: SparkSession, sf_dir: str, threshold: float = 0.3, pairs_per_doc: int = 24
 ) -> DataFrame:
@@ -1190,11 +1150,16 @@ def ngram_jaccard_pairs_dfcap_auto(
     the fixed-cap flagship's (`_dfcap_pairs_cached`): it is the same
     derived artifact, keyed by the budget instead of the cap.
     """
-    from pyspark.sql import Window
+    return _dfcap_auto_pairs(
+        spark, sf_dir, threshold, pairs_per_doc
+    ).orderBy("d1", "d2")
 
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, pairs_per_doc)
-    if key in _DFCAP_AUTO_MEMO:
-        return _DFCAP_AUTO_MEMO[key].orderBy("d1", "d2")
+
+@_memo.per_app
+def _dfcap_auto_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float, pairs_per_doc: int
+) -> DataFrame:
+    from pyspark.sql import Window
 
     sh = _shingle_index(spark, sf_dir)
     docs_n = load_table(spark, sf_dir, "documents").agg(
@@ -1221,9 +1186,7 @@ def ngram_jaccard_pairs_dfcap_auto(
         .distinct()
     )
     sets = _shingle_sets(spark, sf_dir)
-    out = _verify_jaccard(cand, sets, threshold).cache()
-    _DFCAP_AUTO_MEMO[key] = out
-    return out.orderBy("d1", "d2")
+    return _verify_jaccard(cand, sets, threshold).cache()
 
 
 def ngram_jaccard_pairs_dfcap_auto_oracle(
@@ -1261,28 +1224,30 @@ ORDER BY d1, d2
 # component), so the outputs are hash-identical.
 # --------------------------------------------------------------------------
 
-_CLUSTER_MEMO: dict[tuple[str, str, float, str], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _clusters_cached(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float,
-    kind: str,
-    pairs: DataFrame,
-    backend=None,
+    spark: SparkSession, sf_dir: str, threshold: float, kind: str
 ) -> DataFrame:
-    """Memoized connected-components labels for a pair graph. The
-    label-propagation/star loops run full Spark jobs per round (count()
-    for the convergence check), so re-running them on every call dominated
-    the clustering queries' warm cost; the label table is tiny (one row
-    per near-dup doc) and static per (sf_dir, threshold), so cache the
-    converged result like the pair table it derives from."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold, kind)
-    if key not in _CLUSTER_MEMO:
-        fn = backend if backend is not None else connected_components
-        _CLUSTER_MEMO[key] = fn(pairs).cache()
-    return _CLUSTER_MEMO[key]
+    """Memoized connected-components labels (node, cluster_rep) for one
+    pair graph: ``kind`` is "jaccard" (df-capped n-gram pairs), "star"
+    (the same graph through :func:`connected_components_star`), "minhash"
+    or "embedding_lsh". The label-propagation/star loops run full Spark
+    jobs per round (count() for the convergence check), so re-running them
+    on every call dominated the clustering queries' warm cost; the label
+    table is tiny (one row per near-dup doc) and static per (sf_dir,
+    threshold), so cache the converged result like the pair table it
+    derives from."""
+    if kind == "minhash":
+        pairs = minhash_lsh_pairs(spark, sf_dir, threshold).select("d1", "d2")
+    elif kind == "embedding_lsh":
+        pairs = embedding_neardup_lsh(spark, sf_dir, threshold).select(
+            F.col("v1").alias("d1"), F.col("v2").alias("d2")
+        )
+    else:
+        pairs = ngram_jaccard_pairs_dfcap(spark, sf_dir, threshold)
+        pairs = pairs.select("d1", "d2")
+    fn = connected_components_star if kind == "star" else connected_components
+    return fn(pairs).cache()
 
 
 def neardup_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.3) -> DataFrame:
@@ -1302,8 +1267,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.3) -
     MapReduce and Beyond"), which converges in O(log^2 n) rounds with the
     same (node, label) output contract -- equality property-tested.
     """
-    pairs = ngram_jaccard_pairs_dfcap(spark, sf_dir, threshold).select("d1", "d2")
-    return _clusters_cached(spark, sf_dir, threshold, "jaccard", pairs).select(
+    return _clusters_cached(spark, sf_dir, threshold, "jaccard").select(
         F.col("node").alias("doc_id"), "cluster_rep"
     ).orderBy("doc_id")
 
@@ -1355,11 +1319,8 @@ def neardup_clusters_star(
     backend -- the adversarial-diameter form under the same oracle (the
     two algorithms provably produce identical (doc_id, cluster_rep)
     labelings, so the recursive-CTE clustering oracle gates both)."""
-    pairs = ngram_jaccard_pairs_dfcap(spark, sf_dir, threshold).select("d1", "d2")
     return (
-        _clusters_cached(
-            spark, sf_dir, threshold, "star", pairs, backend=connected_components_star
-        )
+        _clusters_cached(spark, sf_dir, threshold, "star")
         .select(F.col("node").alias("doc_id"), "cluster_rep")
         .orderBy("doc_id")
     )
@@ -1491,8 +1452,7 @@ def neardup_clusters_minhash(
     graph behind :func:`neardup_clusters` is unaffordable. Same min-label
     propagation; the oracle replays the full banding scheme inside the
     recursive-CTE clustering."""
-    pairs = minhash_lsh_pairs(spark, sf_dir, threshold).select("d1", "d2")
-    return _clusters_cached(spark, sf_dir, threshold, "minhash", pairs).select(
+    return _clusters_cached(spark, sf_dir, threshold, "minhash").select(
         F.col("node").alias("doc_id"), "cluster_rep"
     ).orderBy("doc_id")
 
@@ -1590,10 +1550,7 @@ def embedding_neardup_clusters(
     exactly as :func:`neardup_clusters` does for text. Sits on the
     LSH-bucket-blocked pair table (the skew-safe scale path), not the
     label-blocked twin."""
-    pairs = embedding_neardup_lsh(spark, sf_dir, threshold).select(
-        F.col("v1").alias("d1"), F.col("v2").alias("d2")
-    )
-    return _clusters_cached(spark, sf_dir, threshold, "embedding_lsh", pairs).select(
+    return _clusters_cached(spark, sf_dir, threshold, "embedding_lsh").select(
         F.col("node").alias("vec_id"), "cluster_rep"
     ).orderBy("vec_id")
 
@@ -1858,9 +1815,7 @@ def _positional_grams_declarative(docs: DataFrame) -> DataFrame:
     )
 
 
-_GRAMS_MEMO: dict[tuple, DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _positional_grams_cached(
     spark: SparkSession, sf_dir: str, use_arrow: bool = True
 ) -> DataFrame:
@@ -1871,18 +1826,15 @@ def _positional_grams_cached(
     aggregate and the position stream it filters) read this one
     materialization instead of re-running the O(K*len) rolling-hash kernel
     per reference."""
-    key = (spark.sparkContext.applicationId, sf_dir, "pos_grams", use_arrow)
-    if key not in _GRAMS_MEMO:
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text", "n_chars")
-            .filter(F.col("n_chars") >= K_SPAN)
-        )
-        gram_fn = (
-            _positional_grams_arrow if use_arrow else _positional_grams_declarative
-        )
-        _GRAMS_MEMO[key] = gram_fn(docs).cache()
-    return _GRAMS_MEMO[key]
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "text", "n_chars")
+        .filter(F.col("n_chars") >= K_SPAN)
+    )
+    gram_fn = (
+        _positional_grams_arrow if use_arrow else _positional_grams_declarative
+    )
+    return gram_fn(docs).cache()
 
 
 def repeated_substring_spans(
@@ -2089,8 +2041,7 @@ def canonical_select(
     """
     from pyspark.sql import Window
 
-    pairs = minhash_lsh_pairs(spark, sf_dir, threshold).select("d1", "d2")
-    labels = _clusters_cached(spark, sf_dir, threshold, "minhash", pairs).select(
+    labels = _clusters_cached(spark, sf_dir, threshold, "minhash").select(
         F.col("node").alias("doc_id"), "cluster_rep"
     )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")

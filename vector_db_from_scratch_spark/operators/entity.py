@@ -654,10 +654,24 @@ def demo_store(spark: SparkSession) -> EntityStore:
         ("ch-13", "doc-s", "s2", [0.0, 1.0, 0.0], {}, 1),
     ]
     return EntityStore(
-        libraries=spark.createDataFrame(libs, LIB_SCHEMA),
-        documents=spark.createDataFrame(docs, DOC_SCHEMA),
-        chunks=spark.createDataFrame(chunks, CHUNK_SCHEMA),
+        libraries=_local_table(spark, libs, LIB_SCHEMA),
+        documents=_local_table(spark, docs, DOC_SCHEMA),
+        chunks=_local_table(spark, chunks, CHUNK_SCHEMA),
     )
+
+
+def _local_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Row tuples as an Arrow-built local relation: a row-list
+    ``createDataFrame`` gives a LogicalRDD whose pickled rows Python
+    workers deserialize again on every action (sources/tables.py)."""
+    import pandas as pd
+    from pyspark.sql.types import _parse_datatype_string
+
+    from ..sources.tables import arrow_local_df
+
+    names = [f.name for f in _parse_datatype_string(ddl).fields]
+    data = {n: pd.Series(col, dtype=object) for n, col in zip(names, zip(*rows))}
+    return arrow_local_df(spark, data, ddl)
 
 
 # --------------------------------------------------------------------------
@@ -813,9 +827,7 @@ def load_store(spark: SparkSession, path: str, fmt: str = "parquet") -> EntitySt
     )
 
 
-_DRIVER_STORE_MEMO: dict[tuple, EntityStore] = _memo.register({})
-
-
+@_memo.per_app
 def store_from_driver_tables(
     spark: SparkSession,
     sf_dir: str,
@@ -838,13 +850,6 @@ def store_from_driver_tables(
     go to the driver-side delta and tombstones and leave the cache as it
     is, so every store derived from this one shares it."""
     from ..sources.tables import load_table
-
-    memo_key = (
-        spark.sparkContext.applicationId, sf_dir, index_kind,
-        num_projections, random_state,
-    )
-    if memo_key in _DRIVER_STORE_MEMO:
-        return _DRIVER_STORE_MEMO[memo_key]
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
@@ -882,13 +887,11 @@ def store_from_driver_tables(
     # all three cached: the library catalog's one collect is a distinct
     # over the full docs scan, and search and the write guards touch
     # documents and chunks in separate jobs -- each was a fresh scan per call
-    store = EntityStore(
+    return EntityStore(
         libraries=libraries.cache(),
         documents=documents.cache(),
         chunks=chunks.cache(),
     )
-    _DRIVER_STORE_MEMO[memo_key] = store
-    return store
 
 
 # --------------------------------------------------------------------------
@@ -946,7 +949,17 @@ def bucketed_documents_table(
     return spark.table(table)
 
 
-_BUCKETED_TABLE_MEMO: dict[tuple[str, str], str] = _memo.register({})
+@_memo.per_app
+def _gate_bucketed_table(spark: SparkSession, sf_dir: str) -> str:
+    """Write the bucketed documents table once per (application, sf_dir);
+    returns its name. The sf_dir tag in the name matters: one application
+    may gate several sf_dirs, and a shared name would let the second build
+    overwrite the first sf_dir's table while its memo still points there
+    (stale-read hazard)."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    table = f"documents_bucketed_gate_{tag}"
+    bucketed_documents_table(spark, sf_dir, buckets=8, table=table)
+    return table
 
 
 def bucketed_point_lookup_query(
@@ -956,19 +969,8 @@ def bucketed_point_lookup_query(
     against the write-once bucketed+sorted layout (bucket pruning pinned
     by tests/test_bucketed_join.py). Table built once per (application,
     sf_dir); the registered query is the read path."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED_TABLE_MEMO:
-        # Fold an sf_dir tag into the table name: one application may gate
-        # several sf_dirs, and a shared name would let the second build
-        # overwrite the first sf_dir's table while its memo still points
-        # there (stale-read hazard).
-        tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        table = f"documents_bucketed_gate_{tag}"
-        bucketed_documents_table(spark, sf_dir, buckets=8, table=table)
-        _BUCKETED_TABLE_MEMO[key] = table
-    table = _BUCKETED_TABLE_MEMO[key]
     return (
-        spark.table(table)
+        spark.table(_gate_bucketed_table(spark, sf_dir))
         .filter(F.col("doc_id").isin(*doc_ids))
         .select("doc_id", "lang", "source", "n_chars")
         .orderBy("doc_id")
@@ -1177,14 +1179,24 @@ LIMIT {k}
 # tests/test_disk_persistence.py:240-271 ("search works after reload").
 # --------------------------------------------------------------------------
 
-_REF_LAYOUT_MEMO: dict[tuple, str] = _memo.register({})
-
-
 def _store_restricted(store: EntityStore, library_id: str) -> EntityStore:
     docs = store.documents.filter(F.col("library_id") == library_id)
     chunks = store.chunks.join(docs.select("document_id"), "document_id", "left_semi")
     libs = store.libraries.filter(F.col("library_id") == library_id)
     return EntityStore(libraries=libs, documents=docs, chunks=chunks)
+
+
+@_memo.per_app
+def _reference_layout_dir(spark: SparkSession, sf_dir: str, library_id: str) -> str:
+    """Write one library of the driver-table store in the reference layout,
+    once per (application, sf_dir, library_id); returns the directory."""
+    from ..sources.artifacts import scratch_dir
+    from ..sources.reference_layout import write_reference_layout
+
+    base = store_from_driver_tables(spark, sf_dir)
+    return write_reference_layout(
+        _store_restricted(base, library_id), scratch_dir("ref-layout-")
+    )
 
 
 def reference_layout_search_query(
@@ -1197,22 +1209,11 @@ def reference_layout_search_query(
     """Write (once per app) -> load -> search over the reference layout;
     gated by store_search_query's oracle since the round trip must be
     content-preserving."""
-    from ..sources.artifacts import scratch_dir
-    from ..sources.reference_layout import (
-        load_reference_layout,
-        write_reference_layout,
-    )
-    from ..sources.tables import load_table
-
-    key = (spark.sparkContext.applicationId, sf_dir, library_id)
-    if key not in _REF_LAYOUT_MEMO:
-        base = store_from_driver_tables(spark, sf_dir)
-        _REF_LAYOUT_MEMO[key] = write_reference_layout(
-            _store_restricted(base, library_id), scratch_dir("ref-layout-")
-        )
-    store = load_reference_layout(spark, _REF_LAYOUT_MEMO[key])
+    from ..sources.reference_layout import load_reference_layout
     from .knn import query_vector
 
+    path = _reference_layout_dir(spark, sf_dir, library_id)
+    store = load_reference_layout(spark, path)
     return store.search(
         library_id,
         query_vector(spark, sf_dir, query_vec_id),

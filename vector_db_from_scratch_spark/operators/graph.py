@@ -73,6 +73,7 @@ def _nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_memo.per_app
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst): each node's PR_K nearest neighbours, round-6dp cosine,
     (distance, dst) tie-break. Self-pairs excluded, so out-degree == PR_K
@@ -80,9 +81,6 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized + localCheckpointed per (application, sf_dir): every graph
     query consumes this table, and the window-ranked pair build is the
     expensive part of each of them."""
-    key = (spark.sparkContext.applicationId, sf_dir, "edges")
-    if key in _CHAIN_MEMO:
-        return _CHAIN_MEMO[key]
     nodes = _nodes(spark, sf_dir)
     a = nodes.select(F.col("vec_id").alias("src"), F.col("v").alias("va"))
     b = nodes.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb"))
@@ -94,24 +92,18 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = F.row_number().over(Window.partitionBy("src").orderBy("d", "dst"))
     # the window is partitioned by src (bounded PR_K survivors per node) --
     # never a global No-Partition-Defined sort
-    out = (
+    return (
         pairs.withColumn("rn", rn)
         .filter(F.col("rn") <= PR_K)
         .select("src", "dst")
         .localCheckpoint()
     )
-    _CHAIN_MEMO[key] = out
-    return out
 
-
-_CHAIN_MEMO: dict[tuple, list[DataFrame]] = _memo.register({})
-# monotone counter making each kcore override-path call's memo key unique
-# (the entry exists only so _memo.clear() releases its checkpointed RDDs)
-_KCORE_OVERRIDE_SEQ = [0]
 
 PPR_SEED_MOD = 50  # personalized teleport set: vec_id % PPR_SEED_MOD == 0
 
 
+@_memo.per_app
 def _rank_chain(
     spark: SparkSession, sf_dir: str, iters: int, seed_mod: int | None = None
 ) -> list[DataFrame]:
@@ -126,9 +118,6 @@ def _rank_chain(
     denominator becomes the SEED count and non-seeds receive only damped
     in-flow. The two cases share one arithmetic path: the None case is
     the all-seeds degeneracy."""
-    key = (spark.sparkContext.applicationId, sf_dir, iters, seed_mod)
-    if key in _CHAIN_MEMO:
-        return _CHAIN_MEMO[key]
     nodes = _nodes(spark, sf_dir).select("vec_id")
     if seed_mod is None:
         nodes = nodes.withColumn("seed", F.lit(True))
@@ -179,7 +168,6 @@ def _rank_chain(
             .localCheckpoint()
         )
         chain.append(r)
-    _CHAIN_MEMO[key] = chain
     return chain
 
 
@@ -342,12 +330,10 @@ def pagerank_trajectory_oracle(iters: int = PR_ITERS) -> str:
 HITS_ITERS = 2
 
 
+@_memo.per_app
 def _hits_chain(spark: SparkSession, sf_dir: str, iters: int) -> tuple[DataFrame, DataFrame]:
     """(authority, hub) tables (vec_id, score) after ``iters`` quantized
     HITS iterations; memoized like the rank chain."""
-    key = (spark.sparkContext.applicationId, sf_dir, "hits", iters)
-    if key in _CHAIN_MEMO:
-        return _CHAIN_MEMO[key]
     nodes = _nodes(spark, sf_dir).select("vec_id")
     n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
     edges = _edges(spark, sf_dir)
@@ -389,7 +375,6 @@ def _hits_chain(spark: SparkSession, sf_dir: str, iters: int) -> tuple[DataFrame
             "vec_id", F.coalesce("raw", F.lit(0)).alias("raw")
         )
         hub = _normalized(h_raw)
-    _CHAIN_MEMO[key] = (auth, hub)
     return auth, hub
 
 
@@ -617,11 +602,24 @@ def label_propagation(
     vote argmax instead of a sum, composed as one lazy plan over the
     same swappable edge builder.
     """
+    cur = _lp_chain(spark, sf_dir, iters)
+    return (
+        cur.filter(F.col("vec_id") % LP_HOLDOUT_MOD == 0)
+        .select(
+            "vec_id",
+            "true_label",
+            F.col("lab").alias("predicted_label"),
+            (F.col("lab") == F.col("true_label")).alias("correct"),
+        )
+        .orderBy("vec_id")
+    )
+
+
+@_memo.per_app
+def _lp_chain(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
+    """Final-round labels (vec_id, true_label, lab) after ``iters`` rounds."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir, "lp", iters)
-    if key in _CHAIN_MEMO:
-        return _lp_output(_CHAIN_MEMO[key])
     edges = _edges(spark, sf_dir)
     cur = _lp_labels(spark, sf_dir)
     for _ in range(iters):
@@ -655,21 +653,7 @@ def label_propagation(
             )
             .localCheckpoint()
         )
-    _CHAIN_MEMO[key] = cur
-    return _lp_output(cur)
-
-
-def _lp_output(cur: DataFrame) -> DataFrame:
-    return (
-        cur.filter(F.col("vec_id") % LP_HOLDOUT_MOD == 0)
-        .select(
-            "vec_id",
-            "true_label",
-            F.col("lab").alias("predicted_label"),
-            (F.col("lab") == F.col("true_label")).alias("correct"),
-        )
-        .orderBy("vec_id")
-    )
+    return cur
 
 
 def label_propagation_oracle(iters: int = LP_ITERS) -> str:
@@ -722,12 +706,10 @@ FROM lab{iters} WHERE vec_id % {LP_HOLDOUT_MOD} = 0 ORDER BY vec_id"""
 # --------------------------------------------------------------------------
 
 
+@_memo.per_app
 def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(src, dst, w, sumw): the PR_K-NN edges with micro-unit similarity
     weights and each source's total out-weight."""
-    key = (spark.sparkContext.applicationId, sf_dir, "wedges")
-    if key in _CHAIN_MEMO:
-        return _CHAIN_MEMO[key]
     nodes = _nodes(spark, sf_dir)
     a = nodes.select(F.col("vec_id").alias("src"), F.col("v").alias("va"))
     b = nodes.select(F.col("vec_id").alias("dst"), F.col("v").alias("vb"))
@@ -747,9 +729,7 @@ def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wedges = kept.select("src", "dst", w.alias("w"))
     sums = wedges.groupBy("src").agg(F.sum("w").alias("sumw"))
-    out = wedges.join(sums, "src").localCheckpoint()
-    _CHAIN_MEMO[key] = out
-    return out
+    return wedges.join(sums, "src").localCheckpoint()
 
 
 def pagerank_weighted_topn(
@@ -758,9 +738,17 @@ def pagerank_weighted_topn(
     """Top-PR_TOPN final ranks of the similarity-weighted chain --
     same teleport/damping arithmetic as the plain chain, contribution
     halfup(rank * w, sumw) instead of halfup(rank, K)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "wrank", iters)
-    if key in _CHAIN_MEMO:
-        return _wrank_output(_CHAIN_MEMO[key])
+    return (
+        _weighted_rank(spark, sf_dir, iters)
+        .select("vec_id", F.col("rank").alias("rank_micros"))
+        .orderBy(F.desc("rank_micros"), "vec_id")
+        .limit(PR_TOPN)
+    )
+
+
+@_memo.per_app
+def _weighted_rank(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
+    """Final (vec_id, rank, n) table of the similarity-weighted chain."""
     nodes = _nodes(spark, sf_dir).select("vec_id")
     n_df = nodes.agg(F.count(F.lit(1)).alias("n"))
     edges = _weighted_edges(spark, sf_dir)
@@ -794,16 +782,7 @@ def pagerank_weighted_topn(
             )
             .localCheckpoint()
         )
-    _CHAIN_MEMO[key] = r
-    return _wrank_output(r)
-
-
-def _wrank_output(r: DataFrame) -> DataFrame:
-    return (
-        r.select("vec_id", F.col("rank").alias("rank_micros"))
-        .orderBy(F.desc("rank_micros"), "vec_id")
-        .limit(PR_TOPN)
-    )
+    return r
 
 
 # --------------------------------------------------------------------------
@@ -825,25 +804,58 @@ KC_K = 5
 KC_ITERS = 3
 
 
+@_memo.per_app
 def _undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized edge set as (a < b) pairs -- one row per undirected
     edge of the k-NN graph. Memoized + localCheckpointed per
     (application, sf_dir): triangles, k-core, and link prediction all
     consume it, and the upstream window-ranked edge build would otherwise
     inline into every reference (the _oriented lesson)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "und")
-    if key in _CHAIN_MEMO:
-        return _CHAIN_MEMO[key]
     edges = _edges(spark, sf_dir)
-    und = (
+    return (
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
         .localCheckpoint()
     )
-    _CHAIN_MEMO[key] = und
-    return und
+
+
+def _peel(
+    nodes: DataFrame, edges: DataFrame, k: int, iters: int
+) -> list[tuple[DataFrame, DataFrame]]:
+    """[(nodes, edges)] for round 0..iters of the k-core peel."""
+    states = [(nodes, edges)]
+    for _ in range(iters):
+        keep = (
+            edges.select(F.col("a").alias("node"))
+            .unionAll(edges.select(F.col("b").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
+            .select("node")
+        )
+        nodes = (
+            nodes.join(keep, nodes["vec_id"] == keep["node"], "left_semi")
+            .localCheckpoint()
+        )
+        na = nodes.select(F.col("vec_id").alias("a"))
+        nb = nodes.select(F.col("vec_id").alias("b"))
+        edges = (
+            edges.join(na, "a", "left_semi")
+            .join(nb, "b", "left_semi")
+            .localCheckpoint()
+        )
+        states.append((nodes, edges))
+    return states
+
+
+@_memo.per_app
+def _kcore_states(
+    spark: SparkSession, sf_dir: str, k: int, iters: int
+) -> list[tuple[DataFrame, DataFrame]]:
+    nodes = _nodes(spark, sf_dir).select("vec_id").localCheckpoint()
+    return _peel(nodes, _undirected(spark, sf_dir), k, iters)
 
 
 def kcore_trajectory(
@@ -870,53 +882,17 @@ def kcore_trajectory(
             "-- a partial override would mix a caller graph with the "
             "corpus k-NN edges"
         )
-    override = nodes_df is not None
-    key = (spark.sparkContext.applicationId, sf_dir, "kcore", k, iters)
-    if not override and key in _CHAIN_MEMO:
-        states = _CHAIN_MEMO[key]
+    if nodes_df is None:
+        states = _kcore_states(spark, sf_dir, k, iters)
     else:
-        nodes = (
-            nodes_df if nodes_df is not None else _nodes(spark, sf_dir)
-        ).select("vec_id").localCheckpoint()
-        edges = und_df.localCheckpoint() if und_df is not None else _undirected(
-            spark, sf_dir
-        )
-        states = [(nodes, edges)]
-        for _ in range(iters):
-            keep = (
-                edges.select(F.col("a").alias("node"))
-                .unionAll(edges.select(F.col("b").alias("node")))
-                .groupBy("node")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .select("node")
-            )
-            nodes = (
-                nodes.join(keep, nodes["vec_id"] == keep["node"], "left_semi")
-                .localCheckpoint()
-            )
-            na = nodes.select(F.col("vec_id").alias("a"))
-            nb = nodes.select(F.col("vec_id").alias("b"))
-            edges = (
-                edges.join(na, "a", "left_semi")
-                .join(nb, "b", "left_semi")
-                .localCheckpoint()
-            )
-            states.append((nodes, edges))
-        if not override:
-            _CHAIN_MEMO[key] = states
-        else:
-            # register override-path states too, under a unique per-call
-            # key, so _memo.clear() can unpersist their localCheckpointed
-            # RDDs -- repeated override calls (hypothesis property-fuzz,
-            # long-lived hosts) otherwise accumulate checkpointed blocks
-            # until process exit (ADVICE r9). They cannot be unpersisted
-            # before returning: localCheckpoint truncates lineage, so the
-            # returned plan's blocks must outlive this call.
-            _KCORE_OVERRIDE_SEQ[0] += 1
-            _CHAIN_MEMO[
-                key + ("override", _KCORE_OVERRIDE_SEQ[0])
-            ] = states
+        # override-path states are held so _memo.clear() can unpersist
+        # their localCheckpointed RDDs -- repeated override calls
+        # (hypothesis property-fuzz, long-lived hosts) otherwise accumulate
+        # checkpointed blocks until process exit (ADVICE r9). They cannot
+        # be unpersisted before returning: localCheckpoint truncates
+        # lineage, so the returned plan's blocks must outlive this call.
+        nodes = nodes_df.select("vec_id").localCheckpoint()
+        states = _memo.hold(spark, _peel(nodes, und_df.localCheckpoint(), k, iters))
     stats = [
         n.agg(F.lit(i).alias("iter"), F.count(F.lit(1)).alias("core_nodes"))
         .crossJoin(F.broadcast(e.agg(F.count(F.lit(1)).alias("core_edges"))))

@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import arrow_local_df, load_table
-from ._memo import register as _register_memo
+from . import _memo
 from .zorder import (
     BOX_BX,
     BOX_BY,
@@ -108,9 +108,7 @@ def _lookup_sql() -> str:
     return f"lut(bx, by, hcell) AS (SELECT * FROM (VALUES {vals}) v(bx, by, hcell))"
 
 
-_HILBERT_LAYOUT_MEMO: dict[tuple[str, str], str] = _register_memo({})
-
-
+@_memo.per_app
 def orders_hilbert_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write orders partitioned by the Hilbert prefix, once per
     (application, sf_dir) -- the zorder writer with the curve swapped:
@@ -118,9 +116,6 @@ def orders_hilbert_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     lookup, directory = hcell's high bits."""
     from ..sources.artifacts import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _HILBERT_LAYOUT_MEMO:
-        return _HILBERT_LAYOUT_MEMO[key]
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -143,7 +138,6 @@ def orders_hilbert_layout_dir(spark: SparkSession, sf_dir: str) -> str:
         out,
         "hpart",
     )
-    _HILBERT_LAYOUT_MEMO[key] = out
     return out
 
 

@@ -51,49 +51,39 @@ from . import _memo
 
 EMB = "embeddings"
 
-# (applicationId, sf_dir, num_queries) -> (qids ndarray, qmat ndarray); the
+# (qids ndarray, qmat ndarray) of the first num_queries vectors; the
 # collect is bounded by construction (num_queries rows), memoized so a
 # long-lived session pays the lookup job once per query batch
-_QMAT_MEMO: dict[tuple[str, str, int], tuple] = _memo.register({})
-
-
+@_memo.per_app
 def _query_matrix(spark: SparkSession, sf_dir: str, num_queries: int):
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir, num_queries)
-    if key not in _QMAT_MEMO:
-        qrows = (
-            load_table(spark, sf_dir, EMB)
-            .filter(F.col("vec_id") < num_queries)
-            .select("vec_id", "embedding")
-            .collect()
-        )
-        qids = np.asarray([r["vec_id"] for r in qrows], dtype=np.int64)
-        qmat = np.asarray(
-            [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
-        )
-        _QMAT_MEMO[key] = (qids, qmat)
-    return _QMAT_MEMO[key]
+    qrows = (
+        load_table(spark, sf_dir, EMB)
+        .filter(F.col("vec_id") < num_queries)
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    qids = np.asarray([r["vec_id"] for r in qrows], dtype=np.int64)
+    qmat = np.asarray(
+        [[float(x) for x in r["embedding"]] for r in qrows], dtype=np.float64
+    )
+    return qids, qmat
 
 
-_QVEC_MEMO: dict[tuple[str, str, int], list] = _memo.register({})
-
-
+@_memo.per_app
 def query_vector(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
     """The query embedding as a driver-side float list (bounded request
     state: ONE row), memoized per (application, sf_dir, vec_id) -- the LSH
     probe needs it to compute the query bucket driver-side and was paying
     a collect job per invocation."""
-    key = (spark.sparkContext.applicationId, sf_dir, vec_id)
-    if key not in _QVEC_MEMO:
-        row = (
-            load_table(spark, sf_dir, EMB)
-            .filter(F.col("vec_id") == vec_id)
-            .select("embedding")
-            .collect()[0]
-        )
-        _QVEC_MEMO[key] = [float(x) for x in row["embedding"]]
-    return _QVEC_MEMO[key]
+    row = (
+        load_table(spark, sf_dir, EMB)
+        .filter(F.col("vec_id") == vec_id)
+        .select("embedding")
+        .collect()[0]
+    )
+    return [float(x) for x in row["embedding"]]
 
 
 def query_vector_df(spark: SparkSession, sf_dir: str, vec_id: int) -> DataFrame:
@@ -828,9 +818,7 @@ MRR_K = 10
 MRR_QMOD = 25  # queries: vec_id % MRR_QMOD == 0 (HN anchor discipline)
 
 
-_RET_MEMO: dict[tuple, DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _relevant_topk(
     spark: SparkSession, sf_dir: str, k: int, query_mod: int
 ) -> DataFrame:
@@ -842,9 +830,6 @@ def _relevant_topk(
     corpus-x-queries scored join per call (~5-6s warm each at sf0.1)."""
     from pyspark.sql import Window
 
-    key = (spark.sparkContext.applicationId, sf_dir, "rel_topk", k, query_mod)
-    if key in _RET_MEMO:
-        return _RET_MEMO[key]
     emb = load_table(spark, sf_dir, EMB).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"), "label"
     )
@@ -861,14 +846,12 @@ def _relevant_topk(
         "vec_id",
     )
     rn = F.row_number().over(Window.partitionBy("qid").orderBy("distance", "vec_id"))
-    out = (
+    return (
         scored.withColumn("rank", rn.cast("long"))
         .filter((F.col("rank") <= k) & (F.col("label") == F.col("qlabel")))
         .select("qid", "qlabel", "rank")
         .localCheckpoint()
     )
-    _RET_MEMO[key] = out
-    return out
 
 
 def retrieval_mrr(

@@ -148,20 +148,13 @@ def build_index(emb: DataFrame, fast: bool = True) -> DataFrame:
     return bucket_kernel(emb)
 
 
-_LSH_INDEX_MEMO: dict[tuple[str, str], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached bucket-indexed embeddings table for the driver testdata --
     built once per application (the in-session analog of the persisted
     ``partitionBy("bucket")`` artifact in :func:`save_index`) and shared by
     every LSH query and the LSH-blocked dedup."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LSH_INDEX_MEMO:
-        _LSH_INDEX_MEMO[key] = build_index(
-            load_table(spark, sf_dir, "embeddings")
-        ).cache()
-    return _LSH_INDEX_MEMO[key]
+    return build_index(load_table(spark, sf_dir, "embeddings")).cache()
 
 
 def save_index(emb: DataFrame, path: str) -> None:
@@ -510,9 +503,6 @@ ORDER BY bucket
 # Catalyst partition pruning playing the bucket-dict lookup.
 # --------------------------------------------------------------------------
 
-_PERSISTED_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
-
 def lsh_index_persisted_knn(
     spark: SparkSession,
     sf_dir: str,
@@ -528,6 +518,7 @@ def lsh_index_persisted_knn(
     return lsh_knn(spark, sf_dir, metric, k=k, query_vec_id=query_vec_id, index_df=idx)
 
 
+@_memo.per_app
 def _persisted_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build + write the full bucket-partitioned index artifact once per
     (application, sf_dir). The persisted probe, the tombstone probe, and
@@ -545,12 +536,9 @@ def _persisted_index_path(spark: SparkSession, sf_dir: str) -> str:
     artifact (copy-on-share), never rewrite this path in place."""
     from ..sources.artifacts import scratch_dir, write_partitioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PERSISTED_MEMO:
-        path = scratch_dir("lsh-index-")
-        write_partitioned(index_table(spark, sf_dir), path, "bucket")
-        _PERSISTED_MEMO[key] = path
-    return _PERSISTED_MEMO[key]
+    path = scratch_dir("lsh-index-")
+    write_partitioned(index_table(spark, sf_dir), path, "bucket")
+    return path
 
 
 # --------------------------------------------------------------------------
@@ -614,7 +602,26 @@ def lsh_index_tombstone_knn(
 # before, during, and after compaction.
 # --------------------------------------------------------------------------
 
-_SEGMENT_MEMO: dict[tuple[str, str], str] = _memo.register({})
+@_memo.per_app
+def _merged_segments_path(spark: SparkSession, sf_dir: str) -> str:
+    """Save two ingest segments and compact them into one merged index
+    artifact, once per (application, sf_dir); returns its path."""
+    from ..sources.artifacts import scratch_dir, write_partitioned
+
+    root = scratch_dir("lsh-segments-")
+    # segment rows come from the cached in-session index table (same
+    # build_index output) -- writing a parity slice needs neither a
+    # fresh embeddings scan nor a re-run of the bucket kernel
+    idx_full = index_table(spark, sf_dir)
+    for i in (0, 1):
+        write_partitioned(
+            idx_full.filter(F.col("vec_id") % 2 == i), f"{root}/seg{i}", "bucket"
+        )
+    merged = load_index(spark, f"{root}/seg0").unionByName(
+        load_index(spark, f"{root}/seg1")
+    )
+    write_partitioned(merged, f"{root}/merged", "bucket")
+    return f"{root}/merged"
 
 
 def lsh_index_merge_knn(
@@ -624,28 +631,10 @@ def lsh_index_merge_knn(
     k: int = 10,
     query_vec_id: int = 0,
 ) -> DataFrame:
-    """Save two ingest segments, compact them into one merged index
-    artifact (once per application), probe the merge. Same results as
-    :func:`lsh_knn` -- the gate runs both against the same oracle."""
-    from ..sources.artifacts import scratch_dir, write_partitioned
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SEGMENT_MEMO:
-        root = scratch_dir("lsh-segments-")
-        # segment rows come from the cached in-session index table (same
-        # build_index output) -- writing a parity slice needs neither a
-        # fresh embeddings scan nor a re-run of the bucket kernel
-        idx_full = index_table(spark, sf_dir)
-        for i in (0, 1):
-            write_partitioned(
-                idx_full.filter(F.col("vec_id") % 2 == i), f"{root}/seg{i}", "bucket"
-            )
-        merged = load_index(spark, f"{root}/seg0").unionByName(
-            load_index(spark, f"{root}/seg1")
-        )
-        write_partitioned(merged, f"{root}/merged", "bucket")
-        _SEGMENT_MEMO[key] = f"{root}/merged"
-    idx = load_index(spark, _SEGMENT_MEMO[key])
+    """Probe the compacted segment merge (:func:`_merged_segments_path`).
+    Same results as :func:`lsh_knn` -- the gate runs both against the same
+    oracle."""
+    idx = load_index(spark, _merged_segments_path(spark, sf_dir))
     return lsh_knn(spark, sf_dir, metric, k=k, query_vec_id=query_vec_id, index_df=idx)
 
 
@@ -661,7 +650,22 @@ def lsh_index_merge_knn(
 # artifacts are bucket-partitioned, so both probes stay partition-pruned.
 # --------------------------------------------------------------------------
 
-_VERSIONED_MEMO: dict[tuple[str, str], dict[int, str]] = _memo.register({})
+@_memo.per_app
+def _version_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(v1, v2) snapshot paths, written once per (application, sf_dir)."""
+    from ..sources.artifacts import scratch_dir, write_partitioned
+
+    root = scratch_dir("lsh-versions-")
+    # v1 IS the full one-shot index -- identical rows to the shared
+    # persisted artifact, so reuse it instead of writing a second copy
+    v1 = _persisted_index_path(spark, sf_dir)
+    live = load_index(spark, v1).filter(
+        F.col("vec_id") % TOMBSTONE_MOD != TOMBSTONE_RESIDUE
+    )
+    # compaction generation: tombstones applied as a parquet rewrite
+    # of the already-encoded rows (no re-hashing)
+    write_partitioned(live, f"{root}/v2", "bucket")
+    return v1, f"{root}/v2"
 
 
 def lsh_index_versioned_knn(
@@ -673,23 +677,8 @@ def lsh_index_versioned_knn(
 ) -> DataFrame:
     """(version, vec_id, distance): the same probe against snapshot v1
     (pre-delete) and v2 (post-delete compaction), unioned."""
-    from ..sources.artifacts import scratch_dir, write_partitioned
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _VERSIONED_MEMO:
-        root = scratch_dir("lsh-versions-")
-        # v1 IS the full one-shot index -- identical rows to the shared
-        # persisted artifact, so reuse it instead of writing a second copy
-        v1 = _persisted_index_path(spark, sf_dir)
-        live = load_index(spark, v1).filter(
-            F.col("vec_id") % TOMBSTONE_MOD != TOMBSTONE_RESIDUE
-        )
-        # compaction generation: tombstones applied as a parquet rewrite
-        # of the already-encoded rows (no re-hashing)
-        write_partitioned(live, f"{root}/v2", "bucket")
-        _VERSIONED_MEMO[key] = {1: v1, 2: f"{root}/v2"}
     out = None
-    for v, path in sorted(_VERSIONED_MEMO[key].items()):
+    for v, path in enumerate(_version_paths(spark, sf_dir), start=1):
         probe = lsh_knn(
             spark,
             sf_dir,

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import _memo
+
 
 def compact(
     df: DataFrame,
@@ -62,10 +64,27 @@ def parquet_file_count(path: str) -> int:
 
 RANGE_BUCKETS = 8
 
-# (applicationId, sf_dir) -> (persisted range-partitioned orders, pid counts)
-from ._memo import register as _register_memo
+@_memo.per_app
+def _ranged_orders(
+    spark: SparkSession, sf_dir: str, n_parts: int
+) -> tuple[DataFrame, dict[int, int]]:
+    """(persisted range-partitioned orders, per-partition row counts)."""
+    from pyspark.sql import functions as F
 
-_RANGED_ORDERS = _register_memo({})
+    from ..sources.tables import load_table
+
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    part = (
+        orders.repartitionByRange(n_parts, "o_totalprice", "o_orderkey")
+        .withColumn("pid", F.spark_partition_id())
+        .persist()
+    )
+    # Bounded driver-side state: one (pid, count) row per shuffle partition.
+    counts = {
+        r["pid"]: r["cnt"]
+        for r in part.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    }
+    return part, counts
 
 
 def range_partition_report(
@@ -83,24 +102,8 @@ def range_partition_report(
     """
     from pyspark.sql import Window, functions as F
 
-    from ..sources.tables import load_table
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _RANGED_ORDERS:
-        orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        n_parts = max(spark.sparkContext.defaultParallelism, n_ranges)
-        part = (
-            orders.repartitionByRange(n_parts, "o_totalprice", "o_orderkey")
-            .withColumn("pid", F.spark_partition_id())
-            .persist()
-        )
-        # Bounded driver-side state: one (pid, count) row per shuffle partition.
-        counts = {
-            r["pid"]: r["cnt"]
-            for r in part.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        }
-        _RANGED_ORDERS[memo_key] = (part, counts)
-    part, counts = _RANGED_ORDERS[memo_key]
+    n_parts = max(spark.sparkContext.defaultParallelism, n_ranges)
+    part, counts = _ranged_orders(spark, sf_dir, n_parts)
     total = sum(counts.values())
     offsets, acc = [], 0
     for pid in sorted(counts):

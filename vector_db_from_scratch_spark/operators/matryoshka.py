@@ -43,8 +43,6 @@ from ..sources.tables import load_table
 PREFIX_DIM = 16
 SWEEP_DIMS = (8, 16, 32, 64)
 
-_SWEEP_MEMO: dict[tuple, DataFrame] = _memo.register({})
-
 
 def matryoshka_knn(
     spark: SparkSession,
@@ -171,20 +169,23 @@ def matryoshka_dim_sweep(
     exactly 1.0 (pinned in tests). The exact side is one checkpointed
     k-row table shared by every curve point; the whole bounded curve is
     memoized per (application, params)."""
+    return _dim_sweep(
+        spark, sf_dir, metric, k, query_vec_id, dims, oversample
+    ).orderBy("prefix_dim")
+
+
+@_memo.per_app
+def _dim_sweep(
+    spark: SparkSession,
+    sf_dir: str,
+    metric: str,
+    k: int,
+    query_vec_id: int,
+    dims: tuple[int, ...],
+    oversample: int,
+) -> DataFrame:
     from .knn import flat_knn
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "matryoshka_sweep",
-        metric,
-        k,
-        query_vec_id,
-        dims,
-        oversample,
-    )
-    if key in _SWEEP_MEMO:
-        return _SWEEP_MEMO[key].orderBy("prefix_dim")
     exact = (
         flat_knn(spark, sf_dir, metric, k=k, query_vec_id=query_vec_id)
         .select("vec_id")
@@ -214,9 +215,7 @@ def matryoshka_dim_sweep(
             )
         )
         out = row if out is None else out.unionAll(row)
-    out = out.localCheckpoint()
-    _SWEEP_MEMO[key] = out
-    return out.orderBy("prefix_dim")
+    return out.localCheckpoint()
 
 
 def matryoshka_dim_sweep_oracle(

@@ -70,31 +70,22 @@ def _train_books_np(x: np.ndarray, m: int, ks: int, iters: int) -> np.ndarray:
     return books
 
 
-_SAMPLE_MEMO: dict[tuple[str, str], np.ndarray] = _memo.register({})
-
-
+@_memo.per_app
 def _sample_matrix(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Bounded, deterministic training sample: ``vec_id < TRAIN_SAMPLE``
     keeps the collect fixed-size regardless of table size (the 100 TB story
     trains on a sample, never the table). Memoized per application -- one
     collect, every PQ/IVFPQ build shares it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SAMPLE_MEMO:
-        return _SAMPLE_MEMO[key]
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < TRAIN_SAMPLE)
         .orderBy("vec_id")
         .select("embedding")
     )
-    out = np.array([r["embedding"] for r in emb.collect()], dtype=np.float32)
-    _SAMPLE_MEMO[key] = out
-    return out
+    return np.array([r["embedding"] for r in emb.collect()], dtype=np.float32)
 
 
-_BOOKS_MEMO: dict[tuple[str, str, int, int, int], np.ndarray] = _memo.register({})
-
-
+@_memo.per_app
 def train_codebooks(
     spark: SparkSession,
     sf_dir: str,
@@ -106,15 +97,11 @@ def train_codebooks(
     in-process AND persisted as a content-keyed parquet artifact (same
     lifecycle as the trained IVF centroids): a fresh process loads the
     m*ks-row table instead of re-training."""
-    key = (spark.sparkContext.applicationId, sf_dir, m, ks, iters)
-    if key not in _BOOKS_MEMO:
-        persisted = _load_persisted_codebooks(spark, sf_dir, m, ks, iters)
-        if persisted is not None:
-            _BOOKS_MEMO[key] = persisted
-        else:
-            _BOOKS_MEMO[key] = _train_books_np(_sample_matrix(spark, sf_dir), m, ks, iters)
-            _save_persisted_codebooks(spark, sf_dir, m, ks, iters, _BOOKS_MEMO[key])
-    return _BOOKS_MEMO[key]
+    books = _load_persisted_codebooks(spark, sf_dir, m, ks, iters)
+    if books is None:
+        books = _train_books_np(_sample_matrix(spark, sf_dir), m, ks, iters)
+        _save_persisted_codebooks(spark, sf_dir, m, ks, iters, books)
+    return books
 
 
 def pq_artifact_path(sf_dir: str, m: int, ks: int, iters: int) -> str:
@@ -261,22 +248,17 @@ def encode(df: DataFrame, books: np.ndarray, col: str = "embedding") -> DataFram
     return df.withColumn("codes", _codes(F.col(col)))
 
 
-_CODED_MEMO: dict[tuple[str, str], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _coded_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached (vec_id, codes) PQ index table -- encode once per
     application (one Arrow pass), persisted at scale."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CODED_MEMO:
-        books = train_codebooks(spark, sf_dir)
-        emb = load_table(spark, sf_dir, "embeddings")
-        _CODED_MEMO[key] = (
-            encode(emb.select("vec_id", "embedding"), books)
-            .select("vec_id", "codes")
-            .cache()
-        )
-    return _CODED_MEMO[key]
+    books = train_codebooks(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    return (
+        encode(emb.select("vec_id", "embedding"), books)
+        .select("vec_id", "codes")
+        .cache()
+    )
 
 
 def _adc_lut(books: np.ndarray, qv: np.ndarray) -> list[list[float]]:
@@ -345,9 +327,7 @@ def _adc_rerank(
     )
 
 
-_IVFPQ_MEMO: dict[tuple[str, str, int], tuple[np.ndarray, np.ndarray, DataFrame]] = _memo.register({})
-
-
+@_memo.per_app
 def _ivfpq_index(
     spark: SparkSession, sf_dir: str, n_cells: int
 ) -> tuple[np.ndarray, np.ndarray, DataFrame]:
@@ -355,10 +335,6 @@ def _ivfpq_index(
     -- the IVFADC build phase, memoized per application: at 100 TB all
     three are persisted artifacts (tiny numpy + a cell-partitioned table)
     built once and shared by every query."""
-    key = (spark.sparkContext.applicationId, sf_dir, n_cells)
-    if key in _IVFPQ_MEMO:
-        return _IVFPQ_MEMO[key]
-
     from .ivf import train_centroids
 
     cents_list = train_centroids(spark, sf_dir, n_cells, iterations=2)
@@ -398,8 +374,7 @@ def _ivfpq_index(
         ).alias("resid"),
     )
     index = encode(assigned, books, col="resid").select("vec_id", "cell", "codes").cache()
-    _IVFPQ_MEMO[key] = (cents, books, index)
-    return _IVFPQ_MEMO[key]
+    return cents, books, index
 
 
 def ivfpq_knn(
@@ -694,35 +669,25 @@ def _sample_src(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQCHAIN_MEMO: dict[
-    tuple[str, str, str, int, int, int], tuple[list[DataFrame], DataFrame]
-] = _memo.register({})
-
-
-def _pq_quantized_chain_cached(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str,
-    src: DataFrame,
-    m: int,
-    ks: int,
-    iterations: int,
+def _checkpointed_chain(
+    src: DataFrame, m: int, ks: int, iterations: int
 ) -> tuple[list[DataFrame], DataFrame]:
-    """Shared-prefix cache for the per-subspace chains (VERDICT r8 item
-    7): the trainer gate, the trained probe, and the IVFPQ composition
+    assigns, cents = _pq_quantized_chain(src, m, ks, iterations)
+    # eager localCheckpoint truncates the iteration lineage so probes
+    # stop re-optimizing the whole training plan (see ivf._quantized_chain)
+    return [a.localCheckpoint() for a in assigns], cents.localCheckpoint()
+
+
+@_memo.per_app
+def _pq_sample_chain(
+    spark: SparkSession, sf_dir: str, m: int, ks: int, iterations: int
+) -> tuple[list[DataFrame], DataFrame]:
+    """Shared-prefix cache for the per-subspace chain over the training
+    sample (VERDICT r8 item 7): the trainer gate and the trained probe
     rebuild the same iteration chain -- pin it per (application, sf_dir,
-    source tag, params). Bounded: sample-sized assignment tables + m*ks
-    codebook rows."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag, m, ks, iterations)
-    if key not in _PQCHAIN_MEMO:
-        assigns, cents = _pq_quantized_chain(src, m, ks, iterations)
-        # eager localCheckpoint truncates the iteration lineage so probes
-        # stop re-optimizing the whole training plan (see ivf._quantized_chain)
-        _PQCHAIN_MEMO[key] = (
-            [a.localCheckpoint() for a in assigns],
-            cents.localCheckpoint(),
-        )
-    return _PQCHAIN_MEMO[key]
+    params). Bounded: sample-sized assignment tables + m*ks codebook
+    rows."""
+    return _checkpointed_chain(_sample_src(spark, sf_dir), m, ks, iterations)
 
 
 def pq_train_quantized(
@@ -738,9 +703,7 @@ def pq_train_quantized(
     for every iteration of every subspace -- the complete PQ training
     trajectory hash-checked against the loop unrolled as a DuckDB CTE
     chain (kmeans_train_quantized's discipline per subspace)."""
-    assigns, _ = _pq_quantized_chain_cached(
-        spark, sf_dir, "sample", _sample_src(spark, sf_dir), m, ks, iterations
-    )
+    assigns, _ = _pq_sample_chain(spark, sf_dir, m, ks, iterations)
     outs = [
         a.groupBy("mi", "code")
         .agg(F.count(F.lit(1)).alias("n_assigned"))
@@ -824,16 +787,9 @@ def pq_train_quantized_oracle(
     return "WITH " + ",\n".join(ctes) + "\n" + selects + "\nORDER BY iter, mi, code"
 
 
-_QCODES_MEMO: dict[tuple[str, str, int, int, int], DataFrame] = _memo.register({})
-
-
+@_memo.per_app
 def _pq_quantized_codes(
-    spark: SparkSession,
-    sf_dir: str,
-    cents: DataFrame,
-    m: int,
-    ks: int,
-    iterations: int,
+    spark: SparkSession, sf_dir: str, m: int, ks: int, iterations: int
 ) -> DataFrame:
     """Corpus-wide (vec_id, mi, code) table against the quantized-trained
     codebooks, built once per application (encode is query-independent --
@@ -841,27 +797,25 @@ def _pq_quantized_codes(
     the chains so probes stay small plans."""
     from .ivf import _d2_expr
 
-    key = (spark.sparkContext.applicationId, sf_dir, m, ks, iterations)
-    if key not in _QCODES_MEMO:
-        dsub = DIM // m
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        mi_df = spark.range(m).select(F.col("id").cast("int").alias("mi"))
-        sub_all = emb.crossJoin(F.broadcast(mi_df)).select(
-            "vec_id",
-            "mi",
-            F.slice(F.col("v"), F.col("mi") * dsub + F.lit(1), dsub).alias("sv"),
-        )
-        _QCODES_MEMO[key] = (
-            sub_all.join(F.broadcast(cents), "mi")
-            .withColumn("cd", _d2_expr(F.col("sv"), F.col("cv")))
-            .groupBy("vec_id", "mi")
-            .agg(F.min(F.struct("cd", "code")).alias("_m"))
-            .select("vec_id", "mi", F.col("_m.code").alias("code"))
-            .localCheckpoint()
-        )
-    return _QCODES_MEMO[key]
+    _, cents = _pq_sample_chain(spark, sf_dir, m, ks, iterations)
+    dsub = DIM // m
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    mi_df = spark.range(m).select(F.col("id").cast("int").alias("mi"))
+    sub_all = emb.crossJoin(F.broadcast(mi_df)).select(
+        "vec_id",
+        "mi",
+        F.slice(F.col("v"), F.col("mi") * dsub + F.lit(1), dsub).alias("sv"),
+    )
+    return (
+        sub_all.join(F.broadcast(cents), "mi")
+        .withColumn("cd", _d2_expr(F.col("sv"), F.col("cv")))
+        .groupBy("vec_id", "mi")
+        .agg(F.min(F.struct("cd", "code")).alias("_m"))
+        .select("vec_id", "mi", F.col("_m.code").alias("code"))
+        .localCheckpoint()
+    )
 
 
 def pq_knn_rerank_quantized(
@@ -889,11 +843,9 @@ def pq_knn_rerank_quantized(
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    _, cents = _pq_quantized_chain_cached(
-        spark, sf_dir, "sample", _sample_src(spark, sf_dir), m, ks, iterations
-    )
+    _, cents = _pq_sample_chain(spark, sf_dir, m, ks, iterations)
     mi_df = spark.range(m).select(F.col("id").cast("int").alias("mi"))
-    codes = _pq_quantized_codes(spark, sf_dir, cents, m, ks, iterations)
+    codes = _pq_quantized_codes(spark, sf_dir, m, ks, iterations)
     q = emb.filter(F.col("vec_id") == query_vec_id).select(F.col("v").alias("qv"))
     qsub = mi_df.crossJoin(F.broadcast(q)).select(
         "mi",
@@ -979,9 +931,7 @@ LIMIT {k}"""
     )
 
 
-_IVFPQ_Q_MEMO: dict[tuple[str, str, int, int, int], tuple] = _memo.register({})
-
-
+@_memo.per_app
 def _ivfpq_quantized_index(
     spark: SparkSession, sf_dir: str, m: int, ks: int, iterations: int
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -994,9 +944,6 @@ def _ivfpq_quantized_index(
     the tiny LUT and re-rank joins."""
     from .ivf import KMEANS_GATED_ITERS, NUM_CELLS, _d2_expr, _quantized_chain
 
-    key = (spark.sparkContext.applicationId, sf_dir, m, ks, iterations)
-    if key in _IVFPQ_Q_MEMO:
-        return _IVFPQ_Q_MEMO[key]
     dsub = DIM // m
     assigns, cents = _quantized_chain(spark, sf_dir, NUM_CELLS, KMEANS_GATED_ITERS)
     resid = (
@@ -1013,15 +960,13 @@ def _ivfpq_quantized_index(
         )
         .localCheckpoint()
     )
-    _, pcents = _pq_quantized_chain_cached(
-        spark,
-        sf_dir,
-        "ivfpq-resid",
+    assigns_r, pcents = _checkpointed_chain(
         resid.filter(F.col("vec_id") < TRAIN_SAMPLE).select("vec_id", "v"),
         m,
         ks,
         iterations,
     )
+    _memo.hold(spark, assigns_r)  # released by clear() with the index
     mi_df = spark.range(m).select(F.col("id").cast("int").alias("mi"))
     sub = resid.crossJoin(F.broadcast(mi_df)).select(
         "vec_id",
@@ -1037,8 +982,7 @@ def _ivfpq_quantized_index(
         .select("vec_id", "cell", "mi", F.col("_m.code").alias("code"))
         .localCheckpoint()
     )
-    _IVFPQ_Q_MEMO[key] = (cents, pcents, resid, codes_all)
-    return _IVFPQ_Q_MEMO[key]
+    return cents, pcents, resid, codes_all
 
 
 def ivfpq_knn_quantized(

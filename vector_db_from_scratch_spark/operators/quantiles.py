@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from . import _memo
 
 N_BINS = 128
 N_SHARDS = 4
@@ -262,26 +263,17 @@ ORDER BY 1
 N_RANGES = 8
 
 
-from ._memo import register as _quant_register_memo
-
 # the (params, cumulative histogram) pair IS the quantile-sketch artifact
 # (1 + <=B rows): memoized per (application, sf_dir) behind eager
 # localCheckpoints so the balance report, the layout writer, and the
 # quantile probes share one corpus pass instead of re-aggregating the
 # grid per subtree. First call builds it; the gate always runs cold.
-_ORDERS_GRID_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = (
-    _quant_register_memo({})
-)
-
-
+@_memo.per_app
 def _orders_grid(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORDERS_GRID_MEMO:
-        o = _orders_x(spark, sf_dir)
-        params = _grid_params(o).localCheckpoint()
-        cum = _hist_cum(o, params).localCheckpoint()
-        _ORDERS_GRID_MEMO[key] = (params, cum)
-    return _ORDERS_GRID_MEMO[key]
+    o = _orders_x(spark, sf_dir)
+    params = _grid_params(o).localCheckpoint()
+    cum = _hist_cum(o, params).localCheckpoint()
+    return params, cum
 
 
 def _hist_cum(o: DataFrame, params: DataFrame) -> DataFrame:
@@ -476,13 +468,10 @@ ORDER BY s.range_id
 """.strip()
 
 
-from ._memo import register as _register_memo
-
-_RANGE_LAYOUT_MEMO: dict[tuple[str, str], str] = _register_memo({})
-
 RANGE_PRUNE_IDS = (2, 5)
 
 
+@_memo.per_app
 def orders_range_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write orders partitioned by the sketch-assigned range_id, once per
     (application, sf_dir) -- the layout `sketch_range_bounds` plans,
@@ -494,9 +483,6 @@ def orders_range_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     nondeterministic sampling."""
     from ..sources.artifacts import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _RANGE_LAYOUT_MEMO:
-        return _RANGE_LAYOUT_MEMO[key]
     params, cum = _orders_grid(spark, sf_dir)
     bounds = sorted(
         r["bound"] for r in _boundary_sel(spark, params, cum).collect()
@@ -516,7 +502,6 @@ def orders_range_layout_dir(spark: SparkSession, sf_dir: str) -> str:
         out,
         "range_id",
     )
-    _RANGE_LAYOUT_MEMO[key] = out
     return out
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import normalize_float
 from ..sources.tables import load_table
-from ._memo import register as _register_memo
+from . import _memo
 
 DEC = "decimal(25,6)"
 
@@ -1846,39 +1846,35 @@ ORDER BY o_custkey, o_orderkey
 # the dim side would otherwise auto-broadcast.
 # --------------------------------------------------------------------------
 
-_BUCKETED_PAIR_MEMO: dict[tuple[str, str], tuple[str, str]] = _register_memo({})
-
 BUCKETED_JOIN_BUCKETS = 8
 
 
+@_memo.per_app
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Write orders + lineitem bucketed/sorted on the join key once per
     (application, sf_dir); table names are sf-tagged so concurrent gates
     over different scales never collide."""
     import re
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED_PAIR_MEMO:
-        tag = re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/").split("/")[-1])
-        on, ln = f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
-        (
-            load_table(spark, sf_dir, "orders")
-            .write.mode("overwrite")
-            .bucketBy(BUCKETED_JOIN_BUCKETS, "o_orderkey")
-            .sortBy("o_orderkey")
-            .format("parquet")
-            .saveAsTable(on)
-        )
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .write.mode("overwrite")
-            .bucketBy(BUCKETED_JOIN_BUCKETS, "l_orderkey")
-            .sortBy("l_orderkey")
-            .format("parquet")
-            .saveAsTable(ln)
-        )
-        _BUCKETED_PAIR_MEMO[key] = (on, ln)
-    return _BUCKETED_PAIR_MEMO[key]
+    tag = re.sub(r"[^A-Za-z0-9]", "_", sf_dir.strip("/").split("/")[-1])
+    on, ln = f"orders_bkt_{tag}", f"lineitem_bkt_{tag}"
+    (
+        load_table(spark, sf_dir, "orders")
+        .write.mode("overwrite")
+        .bucketBy(BUCKETED_JOIN_BUCKETS, "o_orderkey")
+        .sortBy("o_orderkey")
+        .format("parquet")
+        .saveAsTable(on)
+    )
+    (
+        load_table(spark, sf_dir, "lineitem")
+        .write.mode("overwrite")
+        .bucketBy(BUCKETED_JOIN_BUCKETS, "l_orderkey")
+        .sortBy("l_orderkey")
+        .format("parquet")
+        .saveAsTable(ln)
+    )
+    return on, ln
 
 
 def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1914,7 +1910,32 @@ ORDER BY o_orderstatus
 """.strip()
 
 
-_PARETO_MEMO: dict[tuple[str, str], tuple[DataFrame, list]] = _register_memo({})
+@_memo.per_app
+def _pareto_parts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list]:
+    """(per-customer revenue range-partitioned by rank and persisted,
+    per-partition (pid, cnt, s) rows)."""
+    orders = load_table(spark, sf_dir, "orders")
+    per_cust = orders.groupBy("o_custkey").agg(
+        _micros(F.col("o_totalprice")).alias("rev_micro")
+    )
+    n_parts = max(spark.sparkContext.defaultParallelism, 8)
+    part = (
+        per_cust.repartitionByRange(
+            n_parts, F.col("rev_micro").desc(), F.col("o_custkey")
+        )
+        .withColumn("pid", F.spark_partition_id())
+        .persist()
+    )
+    # bounded driver-side state: one (count, sum) row per partition
+    stats = (
+        part.groupBy("pid")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum("rev_micro").cast("long").alias("s"),
+        )
+        .collect()
+    )
+    return part, stats
 
 
 def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1922,31 +1943,7 @@ def revenue_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.tables import arrow_local_df
 
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _PARETO_MEMO:
-        orders = load_table(spark, sf_dir, "orders")
-        per_cust = orders.groupBy("o_custkey").agg(
-            _micros(F.col("o_totalprice")).alias("rev_micro")
-        )
-        n_parts = max(spark.sparkContext.defaultParallelism, 8)
-        part = (
-            per_cust.repartitionByRange(
-                n_parts, F.col("rev_micro").desc(), F.col("o_custkey")
-            )
-            .withColumn("pid", F.spark_partition_id())
-            .persist()
-        )
-        # bounded driver-side state: one (count, sum) row per partition
-        stats = (
-            part.groupBy("pid")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("rev_micro").cast("long").alias("s"),
-            )
-            .collect()
-        )
-        _PARETO_MEMO[memo_key] = (part, stats)
-    part, stats = _PARETO_MEMO[memo_key]
+    part, stats = _pareto_parts(spark, sf_dir)
     by_pid = {r["pid"]: (r["cnt"], r["s"]) for r in stats}
     total_micro = sum(s for _, s in by_pid.values())
     roff, soff, racc, sacc = [], [], 0, 0

@@ -44,11 +44,6 @@ from ..sources.tables import load_table
 from . import _memo
 from .knn import flat_knn
 
-# driver-side memo of resolved sparse query vectors (bounded request
-# state: one doc's -- or Q docs' -- distinct terms); the resolving scan
-# ran once per sparse query invocation before round 10
-_SPARSE_Q_MEMO: dict[tuple, list] = _memo.register({})
-
 # Fixed in-vocabulary query for the registry entries (deterministic; the
 # synthetic corpus draws from a small wordlist, so these hit real postings).
 DEFAULT_QUERY_TERMS = ["table", "scan", "hash", "join"]
@@ -376,6 +371,38 @@ ORDER BY doc_id
 SPARSE_QUERY_DOC = 0
 
 
+# driver-side memo of resolved sparse query vectors (bounded request
+# state: one doc's -- or Q docs' -- distinct terms); the resolving scan
+# ran once per sparse query invocation before round 10
+@_memo.per_app
+def _sparse_query_rows(spark: SparkSession, sf_dir: str, query_doc_id: int) -> list:
+    """(term, tf_q) rows of one query document."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") == query_doc_id)
+        .select(F.explode(F.split(F.col("text"), " ")).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf_q"))
+        .collect()
+    )
+
+
+@_memo.per_app
+def _sparse_batch_rows(spark: SparkSession, sf_dir: str, num_queries: int) -> list:
+    """(qdoc, term, tf_q) rows of query documents 0..num_queries-1."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < num_queries)
+        .select(
+            F.col("doc_id").alias("qdoc"),
+            F.explode(F.split(F.col("text"), " ")).alias("term"),
+        )
+        .groupBy("qdoc", "term")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf_q"))
+        .collect()
+    )
+
+
 def sparse_dot_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -413,16 +440,7 @@ def sparse_dot_topk(
     # filter cannot be pushed below the aggregate, and without the literal
     # pushdown the full vocabulary shuffles (measured 6.4x at 10x docs vs
     # the BM25 shape's ~2x)
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "sparse_q", query_doc_id)
-    if memo_key not in _SPARSE_Q_MEMO:
-        _SPARSE_Q_MEMO[memo_key] = (
-            docs.filter(F.col("doc_id") == query_doc_id)
-            .select(F.explode(F.split(F.col("text"), " ")).alias("term"))
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf_q"))
-            .collect()
-        )
-    qrows = _SPARSE_Q_MEMO[memo_key]
+    qrows = _sparse_query_rows(spark, sf_dir, query_doc_id)
     if not qrows:
         raise ValueError(f"query doc {query_doc_id} not found or empty")
     terms = [r["term"] for r in qrows]
@@ -622,19 +640,7 @@ def sparse_dot_batch(
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
-    memo_key = (spark.sparkContext.applicationId, sf_dir, "sparse_qb", num_queries)
-    if memo_key not in _SPARSE_Q_MEMO:
-        _SPARSE_Q_MEMO[memo_key] = (
-            docs.filter(F.col("doc_id") < num_queries)
-            .select(
-                F.col("doc_id").alias("qdoc"),
-                F.explode(F.split(F.col("text"), " ")).alias("term"),
-            )
-            .groupBy("qdoc", "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf_q"))
-            .collect()
-        )
-    qrows = _SPARSE_Q_MEMO[memo_key]
+    qrows = _sparse_batch_rows(spark, sf_dir, num_queries)
     if not qrows:
         raise ValueError("no query docs found")
     terms = sorted({r["term"] for r in qrows})

@@ -43,27 +43,26 @@ from ..sources.tables import arrow_local_df, load_table
 DIM = 64
 LEVELS = 256
 
-_RANGES_MEMO: dict[tuple[str, str, int], tuple[list, list]] = _memo.register({})
+@_memo.per_app
+def _minmax(spark: SparkSession, sf_dir: str, dim: int) -> tuple[list, list]:
+    """Per-dimension (mins, maxs) -- the trained quantizer. Elementwise
+    min/max as 2*dim scalar aggregates in one pass (partial aggregation;
+    nothing but the 2*dim result moves). Memoized per (application,
+    sf_dir): the ranges are the train-once artifact all four sq8 queries
+    share, so only the first query pays the training scan (mirrors the
+    centroid/codebook memos)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    e = F.col("embedding")
+    row = emb.agg(
+        F.array(*[F.min(e[i].cast("double")) for i in range(dim)]).alias("mins"),
+        F.array(*[F.max(e[i].cast("double")) for i in range(dim)]).alias("maxs"),
+    ).collect()[0]
+    return list(row["mins"]), list(row["maxs"])
 
 
 def sq8_ranges(spark: SparkSession, sf_dir: str, dim: int = DIM) -> DataFrame:
-    """One-row DataFrame of per-dimension (mins, maxs) double arrays --
-    the trained quantizer. Elementwise min/max as 2*dim scalar aggregates
-    in one pass (partial aggregation; nothing but the 2*dim result moves).
-    Memoized per (application, sf_dir): the ranges are the train-once
-    artifact all four sq8 queries share, so only the first query pays the
-    training scan (mirrors the centroid/codebook memos).
-    """
-    key = (spark.sparkContext.applicationId, sf_dir, dim)
-    if key not in _RANGES_MEMO:
-        emb = load_table(spark, sf_dir, "embeddings")
-        e = F.col("embedding")
-        row = emb.agg(
-            F.array(*[F.min(e[i].cast("double")) for i in range(dim)]).alias("mins"),
-            F.array(*[F.max(e[i].cast("double")) for i in range(dim)]).alias("maxs"),
-        ).collect()[0]
-        _RANGES_MEMO[key] = (list(row["mins"]), list(row["maxs"]))
-    mins, maxs = _RANGES_MEMO[key]
+    """One-row DataFrame of per-dimension (mins, maxs) double arrays."""
+    mins, maxs = _minmax(spark, sf_dir, dim)
     return arrow_local_df(
         spark, {"mins": [mins], "maxs": [maxs]},
         "mins array<double>, maxs array<double>",

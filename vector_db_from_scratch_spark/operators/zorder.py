@@ -38,7 +38,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from ._memo import register as _register_memo
+from . import _memo
 
 ZBITS = 3  # bits per dimension -> 8x8 = 64 Morton cells
 ZSIDE = 1 << ZBITS
@@ -110,9 +110,7 @@ zparams AS (SELECT min(o_totalprice) AS xlo,
 _BX_SQL = f"least(floor((o_totalprice - xlo) / xw), {ZSIDE - 1})::INT"
 _BY_SQL = f"least(floor((o_custkey - ylo) / yw), {ZSIDE - 1})::INT"
 
-_ZORDER_LAYOUT_MEMO: dict[tuple[str, str], str] = _register_memo({})
-
-
+@_memo.per_app
 def orders_zorder_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write orders partitioned by the Morton prefix, once per
     (application, sf_dir). Like the range writer, the 4 grid parameters
@@ -122,9 +120,6 @@ def orders_zorder_layout_dir(spark: SparkSession, sf_dir: str) -> str:
     beyond the partitioned write itself."""
     from ..sources.artifacts import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ZORDER_LAYOUT_MEMO:
-        return _ZORDER_LAYOUT_MEMO[key]
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -148,7 +143,6 @@ def orders_zorder_layout_dir(spark: SparkSession, sf_dir: str) -> str:
         out,
         "zpart",
     )
-    _ZORDER_LAYOUT_MEMO[key] = out
     return out
 
 

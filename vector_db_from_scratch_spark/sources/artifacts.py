@@ -5,8 +5,8 @@ tables, ORC/CSV/JSONL layout twins, reference-layout migration fixtures).
 ``tempfile.mkdtemp`` alone leaks one directory per process on shared
 machines; every scratch dir allocated here is registered for a single
 ``atexit`` ``shutil.rmtree`` sweep, so artifact lifetime == process
-lifetime -- exactly the lifecycle the memo dicts that point at these
-paths already have (operators/_memo.py).
+lifetime -- exactly the lifecycle the memoized builders that return
+these paths already have (operators/_memo.py).
 """
 
 from __future__ import annotations

@@ -25,16 +25,12 @@ from ..operators import _memo
 from .jsonl import DOC_SCHEMA
 from .tables import load_table
 
-_CSV_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
 _OPTS = {"header": "true", "quote": '"', "escape": '"', "nullValue": "\\N"}
 
 
+@_memo.per_app
 def documents_csv_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write documents as CSV shards once per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CSV_MEMO:
-        return _CSV_MEMO[key]
     out = scratch_dir("docs-csv-")
     (
         load_table(spark, sf_dir, "documents")
@@ -43,7 +39,6 @@ def documents_csv_dir(spark: SparkSession, sf_dir: str) -> str:
         .options(**_OPTS)
         .csv(out)
     )
-    _CSV_MEMO[key] = out
     return out
 
 
@@ -87,21 +82,16 @@ ORDER BY source
 # table uses for bucket probes.
 # --------------------------------------------------------------------------
 
-_PART_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
 PRUNE_LANGS = ("en", "de")
 
 
+@_memo.per_app
 def documents_partitioned_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write documents partitioned by lang once per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PART_MEMO:
-        return _PART_MEMO[key]
     out = scratch_dir("docs-bylang-")
     from .artifacts import write_partitioned
 
     write_partitioned(load_table(spark, sf_dir, "documents"), out, "lang")
-    _PART_MEMO[key] = out
     return out
 
 

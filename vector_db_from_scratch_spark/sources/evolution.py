@@ -30,14 +30,9 @@ from ..operators import _memo
 from .artifacts import scratch_dir
 from .tables import load_table
 
-_EVO_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
-
+@_memo.per_app
 def evolved_documents_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the two schema generations once per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _EVO_MEMO:
-        return _EVO_MEMO[key]
     out = scratch_dir("docs-evo-")
     docs = load_table(spark, sf_dir, "documents")
     v1 = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang", "text")
@@ -46,7 +41,6 @@ def evolved_documents_dir(spark: SparkSession, sf_dir: str) -> str:
     )
     v1.write.mode("overwrite").parquet(os.path.join(out, "gen=v1"))
     v2.write.mode("overwrite").parquet(os.path.join(out, "gen=v2"))
-    _EVO_MEMO[key] = out
     return out
 
 

@@ -43,21 +43,15 @@ DOC_SCHEMA = T.StructType(
     ]
 )
 
-_JSONL_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
-
+@_memo.per_app
 def documents_jsonl_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write documents as JSONL shards once per (application, sf_dir);
     returns the directory (the corpus-export step, memoized like the
     trained-index artifacts)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _JSONL_MEMO:
-        return _JSONL_MEMO[key]
     out = scratch_dir("docs-jsonl-")
     load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     ).write.mode("overwrite").json(out)
-    _JSONL_MEMO[key] = out
     return out
 
 

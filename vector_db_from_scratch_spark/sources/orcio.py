@@ -24,14 +24,9 @@ from pyspark.sql import functions as F
 from ..operators import _memo
 from .tables import load_table
 
-_ORC_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
-
+@_memo.per_app
 def documents_orc_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write documents as ORC shards once per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _ORC_MEMO:
-        return _ORC_MEMO[key]
     out = scratch_dir("docs-orc-")
     (
         load_table(spark, sf_dir, "documents")
@@ -39,7 +34,6 @@ def documents_orc_dir(spark: SparkSession, sf_dir: str) -> str:
         .write.mode("overwrite")
         .orc(out)
     )
-    _ORC_MEMO[key] = out
     return out
 
 

@@ -129,8 +129,6 @@ ORDER BY user_id, purchase_id, click_id
 # LEFT JOIN -- which is exactly the oracle.
 # --------------------------------------------------------------------------
 
-_LEFT_REPLAY_MEMO: dict[tuple[str, str], str] = _memo.register({})
-
 # 2 real slices exercise mid-stream watermark advancement (some closed
 # windows emit their null rows between real batches); each extra
 # micro-batch costs fixed state-store/commit overhead, so the tail is the
@@ -143,6 +141,7 @@ N_REPLAY_SLICES = 2
 N_SENTINEL_BATCHES = 2
 
 
+@_memo.per_app
 def _left_join_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Replay dir: the events table in N_REPLAY_SLICES time-ordered files,
     followed by N_SENTINEL_BATCHES sentinel files (one click + one
@@ -153,30 +152,27 @@ def _left_join_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.artifacts import scratch_dir
     from .windows import replay_events_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LEFT_REPLAY_MEMO:
-        out = scratch_dir("ssjoin-left-replay-")
-        replay_events_dir(spark, sf_dir, out, n_files=N_REPLAY_SLICES)
-        ev = load_table(spark, sf_dir, "events")
-        mx = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
-        for i in range(N_SENTINEL_BATCHES):
-            if isinstance(mx, int):  # ns->long shim layout
-                ts = mx + (30 * 24 * 3600 + 60 * i) * 1_000_000_000
-            else:
-                ts = mx + dt.timedelta(days=30, minutes=i)
-            rows = [
-                (-(2 * i + 1), ts, -1, "click", 0.0, None),
-                (-(2 * i + 2), ts, -1, "purchase", 0.0, None),
-            ]
-            (
-                spark.createDataFrame(rows, ev.schema)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(out)
-            )
-            _time.sleep(0.1)  # distinct mtimes -> deterministic arrival order
-        _LEFT_REPLAY_MEMO[key] = out
-    return _LEFT_REPLAY_MEMO[key]
+    out = scratch_dir("ssjoin-left-replay-")
+    replay_events_dir(spark, sf_dir, out, n_files=N_REPLAY_SLICES)
+    ev = load_table(spark, sf_dir, "events")
+    mx = ev.agg(F.max("ts").alias("m")).collect()[0]["m"]
+    for i in range(N_SENTINEL_BATCHES):
+        if isinstance(mx, int):  # ns->long shim layout
+            ts = mx + (30 * 24 * 3600 + 60 * i) * 1_000_000_000
+        else:
+            ts = mx + dt.timedelta(days=30, minutes=i)
+        rows = [
+            (-(2 * i + 1), ts, -1, "click", 0.0, None),
+            (-(2 * i + 2), ts, -1, "purchase", 0.0, None),
+        ]
+        (
+            spark.createDataFrame(rows, ev.schema)
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(out)
+        )
+        _time.sleep(0.1)  # distinct mtimes -> deterministic arrival order
+    return out
 
 
 @memoize_drain

@@ -45,11 +45,8 @@ GAP = "5 minutes"
 DRAIN_SHUFFLE_PARTITIONS = 4
 
 
-_DRAIN_MEMO: dict[tuple[str, str, str], DataFrame] = _memo.register({})
-
-
 def memoize_drain(fn):
-    """Memoize a gated drain per (applicationId, sf_dir).
+    """Memoize a gated drain per (application, sf_dir).
 
     A drained stream is a derived artifact: in production the streaming
     query runs CONTINUOUSLY and writes a sink; batch consumers read the
@@ -60,25 +57,21 @@ def memoize_drain(fn):
     drain here is hash-gated against a batch oracle). First call per key
     performs the real drain (watermarks, state store, sink) and pins the
     result with .cache(); repeat calls read the pinned sink output --
-    the same discipline as assign_cells / the shingle artifacts. Calls
-    with non-default parameters bypass the memo; the undecorated drain
-    stays reachable as ``fn.__wrapped__`` for tests that must re-execute
-    the engine.
+    the same discipline as assign_cells / the shingle artifacts. The
+    undecorated drain stays reachable as ``fn.__wrapped__`` for tests that
+    must re-execute the engine.
     """
     import functools
 
+    @_memo.per_app
     @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str, *args, **kwargs) -> DataFrame:
-        if args or kwargs:
-            return fn(spark, sf_dir, *args, **kwargs)
-        key = (spark.sparkContext.applicationId, sf_dir, fn.__name__)
-        if key not in _DRAIN_MEMO:
-            out = fn(spark, sf_dir).cache()
-            out.count()  # materialize now: the memory-sink table is transient
-            _DRAIN_MEMO[key] = out
-        return _DRAIN_MEMO[key]
+    def drained(spark: SparkSession, sf_dir: str) -> DataFrame:
+        out = fn(spark, sf_dir).cache()
+        out.count()  # materialize now: the memory-sink table is transient
+        return out
 
-    return wrapped
+    drained.__wrapped__ = fn
+    return drained
 
 
 @contextmanager
@@ -349,9 +342,7 @@ def replay_events_dir(
         _time.sleep(0.1)  # distinct mtimes -> deterministic arrival order
 
 
-_RESTART_REPLAY_MEMO: dict[tuple[str, str, int], list[str]] = _memo.register({})
-
-
+@_memo.per_app
 def restart_replay_files(
     spark: SparkSession, sf_dir: str, n_files: int = 2
 ) -> list[str]:
@@ -368,15 +359,11 @@ def restart_replay_files(
 
     from ..sources.artifacts import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    if key not in _RESTART_REPLAY_MEMO:
-        out = scratch_dir("restart-replay-")
-        replay_events_dir(spark, sf_dir, out, n_files=n_files)
-        files = sorted(
-            _glob.glob(os.path.join(out, "part-*.parquet")), key=os.path.getmtime
-        )  # mtime IS the arrival order (sequential writes, 0.1s apart)
-        _RESTART_REPLAY_MEMO[key] = files
-    return _RESTART_REPLAY_MEMO[key]
+    out = scratch_dir("restart-replay-")
+    replay_events_dir(spark, sf_dir, out, n_files=n_files)
+    return sorted(
+        _glob.glob(os.path.join(out, "part-*.parquet")), key=os.path.getmtime
+    )  # mtime IS the arrival order (sequential writes, 0.1s apart)
 
 
 def events_stream_from(spark: SparkSession, path: str, files_per_trigger: int = 1) -> DataFrame:
@@ -689,10 +676,7 @@ def bq_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     by DIM rows at any corpus size."""
     from ..operators import bq as bq_mod
 
-    bq_mod.bq_thresholds(spark, sf_dir)  # train once (memoized, batch table)
-    thr = bq_mod._THR_MEMO[
-        (spark.sparkContext.applicationId, sf_dir, bq_mod.DIM)
-    ]
+    thr = bq_mod.threshold_list(spark, sf_dir)  # train once (memoized)
     vec = embeddings_stream(spark, sf_dir)
     ed = F.col("embedding").cast("array<double>")
     pairs = vec.select(
@@ -931,23 +915,18 @@ def ams_ingest_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reunited data, which is the oracle.
 # --------------------------------------------------------------------------
 
-_MULTIPLEX_MEMO: dict[tuple[str, str], tuple[str, str]] = _memo.register({})
-
-
+@_memo.per_app
 def _multiplex_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Two topic landing dirs: events split by user_id parity (a stand-in
     for per-topic partitioning), built once per (application, sf_dir)."""
     from ..sources.artifacts import scratch_dir
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MULTIPLEX_MEMO:
-        ev = load_table(spark, sf_dir, "events")
-        da = scratch_dir("topic-a-")
-        db = scratch_dir("topic-b-")
-        ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(da)
-        ev.filter(F.col("user_id") % 2 != 0).coalesce(1).write.mode("overwrite").parquet(db)
-        _MULTIPLEX_MEMO[key] = (da, db)
-    return _MULTIPLEX_MEMO[key]
+    ev = load_table(spark, sf_dir, "events")
+    da = scratch_dir("topic-a-")
+    db = scratch_dir("topic-b-")
+    ev.filter(F.col("user_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(da)
+    ev.filter(F.col("user_id") % 2 != 0).coalesce(1).write.mode("overwrite").parquet(db)
+    return da, db
 
 
 def multiplex_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
